@@ -37,4 +37,20 @@ object GraftSession {
       // canonicalizes both encodings to Long nanos at the scan boundary.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+
+  /** Size of Spark's generated-class cache (static; Spark's default
+    * is 100). One steady incremental-dedup maintenance batch (40 adds,
+    * 20 deletes and a compaction: perfbench's dedup_maintain, seed 12,
+    * 2 cores) uses more distinct generated classes than 100, so the LRU
+    * missed on nearly every lookup and each batch recompiled its code.
+    * Compiles per steady batch by cache size: 100 → ~160, 150 → ~105,
+    * 175 → ~72, 200 → 0–10, 250 → 0–10 (the same residue: classes new
+    * to that batch's data, not evictions). The working set is thus
+    * between 175 and 200 classes; 256 leaves a quarter of headroom for
+    * batches that plan more (a component computed past the driver
+    * union-find ceiling). A cached class holds ~30 KB of heap, so the
+    * cache costs ~7.5 MB at this size against ~3 MB at the default.
+    */
+  val CodegenCacheEntries = 256
 }

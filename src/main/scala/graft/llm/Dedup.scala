@@ -1,6 +1,7 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import TextFunctions._
@@ -467,10 +468,84 @@ object Dedup {
     */
   private lazy val ccLog = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  /** Requires `p`'s two columns already cast to non-null longs —
-    * [[connectedComponents]] canonicalizes before dispatching here.
+  /** Row ceiling of a broadcast join side: 2M (node, label) long pairs
+    * ~= 64 MB, far under any broadcast limit and far over any
+    * takedown's or add batch's touched set. Every batch-path broadcast
+    * here is gated on it, so a mass batch degrades to shuffle joins
+    * instead of force-broadcasting into a driver OOM.
     */
-  private def driverUnionFind(p: DataFrame): DataFrame = {
+  private[graft] val BroadcastMaxRows = 2000000L
+
+  /** A frame after [[measure]]: its row count, its rows when they fit
+    * the ceiling, and a materialized equivalent to join against — a
+    * driver-local relation of those rows, or the checkpointed frame
+    * past the ceiling.
+    */
+  private[graft] final case class Measured(count: Long, rows: Option[Array[Row]],
+                                           frame: DataFrame) {
+    /** `frame` as a join side: broadcast when its rows fit the ceiling. */
+    def side: DataFrame = if (rows.isDefined) broadcast(frame) else frame
+  }
+
+  private def isLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  /** Count AND materialize `df` in ONE job, collecting its rows when
+    * there are at most `maxRows` of them (none when `maxRows` < 0).
+    * This replaces the checkpoint-then-count gate, which paid a
+    * separate count query (two AQE jobs: partial and final aggregate)
+    * before the consumer read the checkpoint. A frame that is already
+    * a local relation (a driver union-find result, a `toDF` of a
+    * local Seq) costs no job at all.
+    *
+    * The driver holds at most `maxRows` rows whatever the frame's
+    * size: each task ships its partition's rows only if the partition
+    * holds at most maxRows / partitions of them, else just its count.
+    * A skewed frame under the ceiling therefore takes the
+    * past-the-ceiling branch — the shuffle join, correct at any size.
+    * The job reads a lazy checkpoint of `df` at `level`, so that branch
+    * reuses the materialized blocks instead of recomputing `df`.
+    */
+  private def measure(df: DataFrame, maxRows: Long,
+                      level: org.apache.spark.storage.StorageLevel): Measured =
+    if (isLocal(df)) {
+      val rows = df.collect()
+      Measured(rows.length, Some(rows).filter(_.length <= maxRows), df)
+    } else {
+      val cp = df.localCheckpoint(false, level)
+      val rdd = cp.rdd
+      val perPart = if (maxRows < 0) -1L
+                    else maxRows / math.max(1, rdd.getNumPartitions)
+      val parts = df.sparkSession.sparkContext.runJob(rdd, (it: Iterator[Row]) => {
+        val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
+        var n = 0L
+        it.foreach { r => n += 1; if (n <= perPart) buf += r }
+        (n, if (n <= perPart) buf.toArray else null)
+      })
+      val count = parts.map(_._1).sum
+      if (parts.exists(_._2 == null)) Measured(count, None, cp)
+      else {
+        val rows = parts.flatMap(_._2)
+        Measured(count, Some(rows), df.sparkSession.createDataFrame(
+          java.util.Arrays.asList(rows: _*), df.schema))
+      }
+    }
+
+  /** [[measure]] for a batch-sized broadcast-candidate side, at the
+    * default checkpoint level (sides are bounded by the batch).
+    */
+  private def gate(side: DataFrame, maxRows: Long): Measured =
+    measure(side, maxRows, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+
+  /** `df` materialized: as is when it is already a driver-local
+    * relation, else by an eager checkpoint (one job).
+    */
+  private[graft] def materialized(df: DataFrame): DataFrame =
+    if (isLocal(df)) df else df.localCheckpoint(true)
+
+  /** Union-find over (src, dst) long pairs already on the driver. */
+  private def driverUnionFind(rows: Array[Row],
+                              spark: org.apache.spark.sql.SparkSession): DataFrame = {
     val parent = new java.util.HashMap[Long, Long]()
     def find(x: Long): Long = {
       var r = x
@@ -479,15 +554,14 @@ object Dedup {
       while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
       r
     }
-    p.collect().foreach { row =>
+    rows.foreach { row =>
       val a = row.getLong(0); val b = row.getLong(1)
       if (!parent.containsKey(a)) parent.put(a, a)
       if (!parent.containsKey(b)) parent.put(b, b)
       val ra = find(a); val rb = find(b)
       if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
     }
-    val s = p.sparkSession
-    import s.implicits._
+    import spark.implicits._
     parent.keySet.toArray(Array.empty[java.lang.Long])
       .map(n => (n.toLong, find(n.toLong))).toSeq.toDF("node", "label")
   }
@@ -509,26 +583,25 @@ object Dedup {
     // 8 GB heap that starves every downstream aggregate into
     // AGGREGATE_OUT_OF_MEMORY (SCALE_r12; the "only checkpoint
     // provably small frames" rule this repo already documents).
-    // localCheckpoint(eager, DISK_ONLY) keeps the leak-freedom the
+    // A DISK_ONLY localCheckpoint keeps the leak-freedom the
     // checkpoint form exists for (blocks owned by the RDD, freed by
     // the ContextCleaner — CacheHygieneSpec) with ZERO heap
     // residency; node-sized frames below keep the default level.
-    val p = pairs.select(col(aCol).cast("long").as("src"),
-        col(bCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      // LAZY checkpoint + count: the count is the action that
-      // materializes it — one pass, not two (the round loop's own
-      // documented fusion, applied to every checkpoint-then-count
-      // site this round)
-      .localCheckpoint(false, DataSized)
-    val nPairs = p.count()
-    if (nPairs <= driverMaxPairs) {
+    val m = measure(
+      pairs.select(col(aCol).cast("long").as("src"),
+          col(bCol).cast("long").as("dst"))
+        .filter(col("src").isNotNull && col("dst").isNotNull),
+      driverMaxPairs, DataSized)
+    // ONE job counts the pairs and, under the ceiling, brings them to
+    // the driver — the count-then-collect form paid three
+    if (m.rows.isDefined) {
       ccLog.info(s"connectedComponents: driver union-find path " +
-        s"($nPairs pairs <= $driverMaxPairs)")
-      return driverUnionFind(p)
+        s"(${m.count} pairs <= $driverMaxPairs)")
+      return driverUnionFind(m.rows.get, pairs.sparkSession)
     }
     ccLog.info(s"connectedComponents: distributed label-propagation path " +
-      s"($nPairs pairs > $driverMaxPairs)")
+      s"(${m.count} pairs > $driverMaxPairs)")
+    val p = m.frame
     val edges0 = p
       .union(p.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
@@ -774,13 +847,14 @@ object Dedup {
     */
   def incrementalComponents(labels: DataFrame, newEdges: DataFrame,
                             aCol: String, bCol: String,
-                            materialize: Boolean = true): DataFrame = {
-    val p = incCcParts(labels, newEdges, aCol, bCol, materialize)
+                            materialize: Boolean = true,
+                            broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
+    val p = incCcParts(labels, newEdges, aCol, bCol, materialize, broadcastMaxRows)
     // second streamed scan: relabel ONLY rows whose label is remapped
     // (broadcast hash join, no exchange of the label table); rows of
     // untouched components coalesce through unchanged
     val updatedOld = p.lab
-      .join(p.remapSide, col("label") === col("old_label"), "left")
+      .join(p.remap.side, col("label") === col("old_label"), "left")
       .select(col("node"),
         coalesce(col("new_label"), col("label")).as("label"))
     updatedOld.unionByName(p.newNodes)
@@ -791,14 +865,13 @@ object Dedup {
     * once, consumed by both the full-table form and the merge-on-read
     * [[incrementalComponentsDelta]] form.
     */
-  private final case class IncCcParts(lab: DataFrame, ends: DataFrame,
-                                      touched: DataFrame, remap: DataFrame,
-                                      remapSide: DataFrame,
+  private final case class IncCcParts(lab: DataFrame, remap: Measured,
                                       newNodes: DataFrame)
 
   private def incCcParts(labels: DataFrame, newEdges: DataFrame,
                          aCol: String, bCol: String,
-                         materialize: Boolean): IncCcParts = {
+                         materialize: Boolean,
+                         broadcastMaxRows: Long): IncCcParts = {
     // canonicalize both inputs once (the long cast + null drop rule
     // connectedComponents documents); labels feed two streamed scans,
     // edges feed the resolve join + the new-node set — data-sized
@@ -810,7 +883,7 @@ object Dedup {
     val e = newEdges.select(col(aCol).cast("long").as("a"),
         col(bCol).cast("long").as("b"))
       .filter(col("a").isNotNull && col("b").isNotNull)
-      // lazy: ends.count() below materializes e's cache on the way —
+      // lazy: the ends gate below materializes e's cache on the way —
       // one pass over the candidate producer instead of two
       .localCheckpoint(false)
     // the touched endpoints' current labels: ONE streamed scan of the
@@ -821,11 +894,9 @@ object Dedup {
     // endpoint or remap set past ~64 MB of long pairs must degrade to
     // a graceful shuffle join, not force-broadcast into a driver OOM —
     // the same 2M-row gate the CC label table uses.
-    val ends = e.select(col("a").as("node"))
-      .union(e.select(col("b").as("node"))).distinct()
-      .localCheckpoint(false) // lazy: the gate count materializes it
-    val endsSide = if (ends.count() <= 2000000L) broadcast(ends) else ends
-    val touched = lab.join(endsSide, Seq("node"), "left_semi")
+    val ends = gate(e.select(col("a").as("node"))
+      .union(e.select(col("b").as("node"))).distinct(), broadcastMaxRows)
+    val touched = lab.join(ends.side, Seq("node"), "left_semi")
       .localCheckpoint(true)
     // endpoints resolve to their current label; an unlabeled endpoint
     // (new node, or an old singleton CC never listed) stands for itself
@@ -846,13 +917,12 @@ object Dedup {
     // so this takes the driver union-find path at typical batches and
     // degrades to the distributed rounds for a mega-batch
     val merged = connectedComponents(labelEdges, "la", "lb")
-    val remap = merged.select(col("node").as("old_label"),
-      col("label").as("new_label"))
-      .localCheckpoint(false) // lazy: the gate count materializes it
-    // same measured gate as endsSide: remap is label-graph-sized
-    // (bounded by the batch's touched labels + new ids), so the
-    // broadcast is the common case and the shuffle the mega-batch one
-    val remapSide = if (remap.count() <= 2000000L) broadcast(remap) else remap
+    // same measured gate as ends: remap is label-graph-sized (bounded
+    // by the batch's touched labels + new ids), so the broadcast is the
+    // common case and the shuffle the mega-batch one. On the driver
+    // union-find path it is a local relation already: no job.
+    val remap = gate(merged.select(col("node").as("old_label"),
+      col("label").as("new_label")), broadcastMaxRows)
     // endpoints not in the label table enter the output with their
     // merged label (they were their own label-graph nodes, so remap
     // always covers them). The anti-join runs against `touched` —
@@ -860,10 +930,10 @@ object Dedup {
     // ∩ lab ≡ ends ∩ touched by touched's construction, and an
     // anti-join with a corpus-sized right side would have to shuffle
     // or broadcast the corpus.
-    val newNodes = ends.join(touched.select("node"), Seq("node"), "left_anti")
-      .join(remapSide, col("node") === col("old_label"), "left")
+    val newNodes = ends.frame.join(touched.select("node"), Seq("node"), "left_anti")
+      .join(remap.side, col("node") === col("old_label"), "left")
       .select(col("node"), coalesce(col("new_label"), col("node")).as("label"))
-    IncCcParts(lab, ends, touched, remap, remapSide, newNodes)
+    IncCcParts(lab, remap, newNodes)
   }
 
   /** [[incrementalComponents]]' MERGE-ON-READ form (the additions-side
@@ -884,18 +954,17 @@ object Dedup {
     */
   def incrementalComponentsDelta(labels: DataFrame, newEdges: DataFrame,
                                  aCol: String, bCol: String,
-                                 materialize: Boolean = true)
+                                 materialize: Boolean = true,
+                                 broadcastMaxRows: Long = BroadcastMaxRows)
       : (DataFrame, DataFrame) = {
-    val p = incCcParts(labels, newEdges, aCol, bCol, materialize)
-    val changed = p.remap.filter(col("old_label") =!= col("new_label"))
-      .localCheckpoint(false) // lazy: the gate count materializes it
-    val chSide = if (changed.count() <= 2000000L) broadcast(changed)
-                 else changed
+    val p = incCcParts(labels, newEdges, aCol, bCol, materialize, broadcastMaxRows)
+    val changed = gate(
+      p.remap.frame.filter(col("old_label") =!= col("new_label")), broadcastMaxRows)
     val changedRows = p.lab
-      .join(chSide, col("label") === col("old_label"))
+      .join(changed.side, col("label") === col("old_label"))
       .select(col("node"), col("new_label").as("label"))
     (changedRows.unionByName(p.newNodes),
-      changed.select(col("old_label").as("label")))
+      changed.frame.select(col("old_label").as("label")))
   }
 
   /** The DELETION-side complement of [[incrementalComponents]], SCOPED
@@ -946,11 +1015,11 @@ object Dedup {
   def relabelScopedFromSigs(sigs: DataFrame, tombstones: DataFrame,
                             priorLabels: DataFrame, idCol: String,
                             minEstE6: Long = 250000L,
-                            materialize: Boolean = true): DataFrame = {
-    val (slice, untouched) =
-      scopedDeleteParts(sigs, tombstones, priorLabels, idCol, materialize)
-    untouched.unionByName(
-      scopedDeltaOf(slice, idCol, minEstE6))
+                            materialize: Boolean = true,
+                            broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
+    val p = scopedParts(sigs, tombstones, priorLabels, idCol, materialize,
+      broadcastMaxRows)
+    p.untouched.unionByName(scopedDeltaOf(p.slice, idCol, minEstE6))
   }
 
   /** The CHANGED label rows ALONE — [[relabelScopedFromSigs]]'
@@ -987,47 +1056,44 @@ object Dedup {
     * quantities the COST DISPATCH reads ([[relabelScopedAutoFromSigs]],
     * VERDICT r15 ask #4): the touched slice, the untouched labels, the
     * (normalized, possibly-checkpointed) prior label frame, the gated
-    * tombstone side, and the touched-member count the broadcast gate
-    * already paid for.
+    * tombstones (distinct long node ids), the touched-member count the
+    * broadcast gate already paid for, and the touched labels.
     */
   private[graft] final case class ScopedParts(
       slice: DataFrame, untouched: DataFrame, lab: DataFrame,
-      deadSide: DataFrame, touchedDocs: Long, touchedLabels: DataFrame)
+      dead: Measured, touchedDocs: Long, touchedLabels: DataFrame)
 
   private[graft] def scopedParts(sigs: DataFrame, tombstones: DataFrame,
                                  priorLabels: DataFrame, idCol: String,
-                                 materialize: Boolean = true): ScopedParts = {
+                                 materialize: Boolean = true,
+                                 broadcastMaxRows: Long = BroadcastMaxRows): ScopedParts = {
     val lab0 = priorLabels.select(col("node").cast("long").as("node"),
         col("label").cast("long").as("label"))
       .filter(col("node").isNotNull && col("label").isNotNull)
     val lab = if (materialize) lab0.localCheckpoint(true, DataSized) else lab0
     // tombstones: two consumers (label lookup + slice anti-join),
-    // batch-sized — default storage level
-    val dead = tombstones.select(col(idCol).cast("long").as("node"))
-      .distinct().localCheckpoint(false) // lazy: the gate count materializes it
-    val deadSide = if (dead.count() <= 2000000L) broadcast(dead) else dead
+    // batch-sized
+    val dead = gate(tombstones.select(col(idCol).cast("long").as("node"))
+      .distinct(), broadcastMaxRows)
     // labels of components containing a tombstone: one streamed label
     // scan; a tombstoned doc absent from the labels was a CC singleton
-    // — no pairs, nothing to recompute for it
-    val touchedLabels = lab.join(deadSide, Seq("node"), "left_semi")
-      .select("label").distinct()
-      .localCheckpoint(false) // lazy: the gate count materializes it
-    val tlSide = if (touchedLabels.count() <= 2000000L) broadcast(touchedLabels)
-                 else touchedLabels
-    val untouched = lab.join(tlSide, Seq("label"), "left_anti")
+    // — no pairs, nothing to recompute for it. Both touched sides are
+    // joined back against `lab`, so they re-alias its columns: past
+    // the gate a side is a checkpoint of lab's own projection, and with
+    // AQE off the analyzer fails on the shared attribute ("Failure when
+    // resolving conflicting references in Join").
+    val touchedLabels = gate(lab.join(dead.side, Seq("node"), "left_semi")
+      .select(col("label").as("label")).distinct(), broadcastMaxRows)
+    val untouched = lab.join(touchedLabels.side, Seq("label"), "left_anti")
     // every member of a touched component, tombstoned or not — the
     // recompute must see all retained members to re-derive splits
-    val touchedDocs = lab.join(tlSide, Seq("label"), "left_semi")
-      .select("node")
-      .localCheckpoint(false) // lazy: the gate count materializes it
-    val touchedCount = touchedDocs.count()
-    val tdSide = if (touchedCount <= 2000000L) broadcast(touchedDocs)
-                 else touchedDocs
+    val touchedDocs = gate(lab.join(touchedLabels.side, Seq("label"), "left_semi")
+      .select(col("node").as("node")), broadcastMaxRows)
     val slice = sigs.select(col(idCol), col("sig"))
-      .join(tdSide.withColumnRenamed("node", idCol), Seq(idCol), "left_semi")
-      .join(deadSide.withColumnRenamed("node", idCol), Seq(idCol), "left_anti")
-    ScopedParts(slice, untouched.select("node", "label"), lab, deadSide,
-      touchedCount, touchedLabels)
+      .join(touchedDocs.side.withColumnRenamed("node", idCol), Seq(idCol), "left_semi")
+      .join(dead.side.withColumnRenamed("node", idCol), Seq(idCol), "left_anti")
+    ScopedParts(slice, untouched.select("node", "label"), lab, dead,
+      touchedDocs.count, touchedLabels.frame)
   }
 
   /** [[relabelScopedFromSigs]]' two halves, exposed as a seam so the
@@ -1096,7 +1162,7 @@ object Dedup {
       connectedComponents(
         candidatesFromSigs(
           sigs.select(col(idCol), col("sig"))
-            .join(p.deadSide.withColumnRenamed("node", idCol),
+            .join(p.dead.side.withColumnRenamed("node", idCol),
               Seq(idCol), "left_anti"),
           idCol, minEstE6, assumeUnique = true),
         "doc_a", "doc_b")
@@ -1125,19 +1191,17 @@ object Dedup {
     *   rows may still be present (they are anti-joined out here).
     */
   def deleteFromIndexDistinct(index: DataFrame, retainedSigs: DataFrame,
-                              tombstones: DataFrame, idCol: String): DataFrame = {
+                              tombstones: DataFrame, idCol: String,
+                              broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
     // measured broadcast gate (the incrementalComponents 2M rule): a
     // mass takedown must degrade to shuffle joins, not driver-OOM.
-    // The deduped/checkpointed dead frame and its gated side are built
-    // ONCE and passed into the re-election (ADVICE r15: the public
-    // overload rebuilt, re-counted, and re-checkpointed the identical
-    // frame — two extra eager jobs per delete batch on the hot
-    // maintenance path).
-    val dead = tombstones.select(col(idCol)).distinct()
-      .localCheckpoint(false) // lazy: the gate count materializes it
-    val deadSide = if (dead.count() <= 2000000L) broadcast(dead) else dead
+    // The deduped dead frame and its gated side are built ONCE and
+    // passed into the re-election (ADVICE r15: the public overload
+    // rebuilt and re-measured the identical frame — extra eager jobs
+    // per delete batch on the hot maintenance path).
+    val deadSide = gate(tombstones.select(col(idCol)).distinct(), broadcastMaxRows).side
     index.join(deadSide, Seq(idCol), "left_anti")
-      .unionByName(reElectRows(index, retainedSigs, deadSide, idCol))
+      .unionByName(reElectRows(index, retainedSigs, deadSide, idCol, broadcastMaxRows))
   }
 
   /** Just the rows [[deleteFromIndexDistinct]] would ADD — the
@@ -1150,27 +1214,23 @@ object Dedup {
     * (ScaleSmoke's interleave stage runs exactly this posture).
     */
   def reElectIndexRows(index: DataFrame, retainedSigs: DataFrame,
-                       tombstones: DataFrame, idCol: String): DataFrame = {
-    val dead = tombstones.select(col(idCol)).distinct()
-      .localCheckpoint(false) // lazy: the gate count materializes it
-    val deadSide = if (dead.count() <= 2000000L) broadcast(dead) else dead
-    reElectRows(index, retainedSigs, deadSide, idCol)
-  }
+                       tombstones: DataFrame, idCol: String): DataFrame =
+    reElectRows(index, retainedSigs,
+      gate(tombstones.select(col(idCol)).distinct(), BroadcastMaxRows).side,
+      idCol, BroadcastMaxRows)
 
-  /** [[reElectIndexRows]] over an already-deduped/checkpointed/gated
+  /** [[reElectIndexRows]] over an already-deduped/materialized/gated
     * tombstone side — so [[deleteFromIndexDistinct]] shares one dead
-    * frame between its anti-join and the re-election instead of paying
-    * the distinct+count+checkpoint twice per delete batch (ADVICE r15).
+    * side between its anti-join and the re-election instead of
+    * measuring it twice per delete batch (ADVICE r15).
     */
   private def reElectRows(index: DataFrame, retainedSigs: DataFrame,
-                          deadSide: DataFrame, idCol: String): DataFrame = {
-    val deadRepSigs = index
+                          deadSide: DataFrame, idCol: String,
+                          broadcastMaxRows: Long): DataFrame = {
+    val drsSide = gate(index
       .filter(col("band") === 0 && col("sig").getItem(0).isNotNull)
       .join(deadSide, Seq(idCol), "left_semi")
-      .select("sig").distinct()
-      .localCheckpoint(false) // lazy: the gate count materializes it
-    val drsSide = if (deadRepSigs.count() <= 2000000L) broadcast(deadRepSigs)
-                  else deadRepSigs
+      .select("sig").distinct(), broadcastMaxRows).side
     bandIndexDistinctFromSigs(
       retainedSigs.select(col(idCol), col("sig"))
         .filter(col("sig").getItem(0).isNotNull)

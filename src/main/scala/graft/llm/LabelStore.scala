@@ -41,9 +41,14 @@ import org.apache.spark.sql.functions._
   */
 object LabelStore {
 
-  private val DataSized = org.apache.spark.storage.StorageLevel.DISK_ONLY
-
   private def basePath(dir: String) = s"$dir/base"
+
+  /** The schemas the writers below produce. Reads name them instead of
+    * inferring them: Parquet schema inference is a Spark job per path,
+    * and [[read]] opens the base plus two paths per outstanding batch.
+    */
+  private val LabelSchema = "node BIGINT, label BIGINT"
+  private val DropSchema = "label BIGINT"
 
   private def fs(spark: SparkSession, p: String) =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -75,12 +80,18 @@ object LabelStore {
     * "describe only the new truth" rule every index here follows.
     */
   def create(spark: SparkSession, dir: String, labels: DataFrame): Unit = {
-    // eager checkpoint: `labels` may read the very files the overwrite
-    // replaces (a re-create from read()) — the compact rule
-    norm(labels).localCheckpoint(true, DataSized)
-      .write.mode("overwrite").parquet(basePath(dir))
+    // `labels` may read the very files the new base replaces (a
+    // re-create from read()), so it is written beside the base and
+    // swapped in after the write: one job, where an eager checkpoint
+    // before an in-place overwrite took two
+    val next = new Path(s"$dir/base.next")
+    norm(labels).write.mode("overwrite").parquet(next.toString)
+    val f = fs(spark, dir)
+    f.delete(new Path(basePath(dir)), true)
+    if (!f.rename(next, new Path(basePath(dir))))
+      throw new java.io.IOException(s"could not move $next to ${basePath(dir)}")
     Seq("delta", "drop", "tombs").foreach { d =>
-      fs(spark, dir).delete(new Path(s"$dir/$d"), true)
+      f.delete(new Path(s"$dir/$d"), true)
     }
   }
 
@@ -89,7 +100,7 @@ object LabelStore {
     * batch; [[compact]] bounds the chain length.
     */
   def read(spark: SparkSession, dir: String): DataFrame = {
-    val base = spark.read.parquet(basePath(dir))
+    val base = spark.read.schema(LabelSchema).parquet(basePath(dir))
     val ss = seqs(spark, dir)
     if (ss.isEmpty) base
     else {
@@ -104,11 +115,11 @@ object LabelStore {
       val dropBytes = ss.map(n =>
         f.getContentSummary(new Path(s"$dir/drop/seq=$n")).getLength).sum
       ss.foldLeft(base) { (acc, n) =>
-        val drop0 = spark.read.parquet(s"$dir/drop/seq=$n")
+        val drop0 = spark.read.schema(DropSchema).parquet(s"$dir/drop/seq=$n")
         val drop = if (dropBytes <= 64L * 1024 * 1024) broadcast(drop0)
                    else drop0
         acc.join(drop, Seq("label"), "left_anti")
-          .unionByName(spark.read.parquet(s"$dir/delta/seq=$n"))
+          .unionByName(spark.read.schema(LabelSchema).parquet(s"$dir/delta/seq=$n"))
       }.select("node", "label") // the label-join key moved to the front
     }
   }
@@ -155,15 +166,15 @@ object LabelStore {
     val parts = Dedup.scopedParts(sigs, tombstones, current, idCol,
       materialize = false)
     // the delta reads the label state the writes below extend — land
-    // it before anything else moves (the compact rule, O(touched))
-    val delta = Dedup.connectedComponents(
+    // it before anything else moves (the compact rule, O(touched)); a
+    // driver union-find result is landed already
+    val delta = Dedup.materialized(Dedup.connectedComponents(
         Dedup.candidatesFromSigs(parts.slice, idCol, minEstE6,
-          assumeUnique = true), "doc_a", "doc_b")
-      .localCheckpoint(true)
+          assumeUnique = true), "doc_a", "doc_b"))
     delta.write.parquet(s"$dir/delta/seq=$n")
     parts.touchedLabels.write.parquet(s"$dir/drop/seq=$n")
-    tombstones.select(col(idCol).cast("long").as("node")).distinct()
-      .write.parquet(s"$dir/tombs/seq=$n")
+    // the scoping's distinct long node ids, measured and materialized
+    parts.dead.frame.write.parquet(s"$dir/tombs/seq=$n")
   }
 
   /** Append a PRECOMPUTED (delta, dropLabels) batch — the zero-diff

@@ -682,6 +682,57 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
+  test("past the broadcast gates (broadcastMaxRows = -1) every gated verb " +
+    "returns what its broadcast branch returns") {
+    val s = spark; import s.implicits._
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val halves = Vector.tabulate(5)(h => ((h * 100 + 1).toLong to (h * 100 + 12).toLong).toSeq)
+    val rnd = new scala.util.Random(23L)
+    val sigs = sigDocs((1L to 18L).map(id =>
+      id -> (halves(rnd.nextInt(5)) ++ halves(rnd.nextInt(5)))): _*)
+      .localCheckpoint(true)
+    val prior = Dedup.connectedComponents(
+      Dedup.candidatesFromSigs(sigs, "doc_id", assumeUnique = true),
+      "doc_a", "doc_b").localCheckpoint(true)
+    val index = Dedup.bandIndexDistinctFromSigs(sigs, "doc_id").localCheckpoint(true)
+    val tomb = Seq(2L, 5L, 11L).toDF("doc_id")
+    // additions: a bridge between old components, a new pair, a repeat
+    val edges = Seq((30L, 1L), (30L, 7L), (40L, 41L), (2L, 3L)).toDF("a", "b")
+    val autoKey = "spark.sql.autoBroadcastJoinThreshold"
+    val autoPrev = s.conf.get(autoKey)
+    def both[T](f: Long => T): (T, T) = {
+      val wide = f(Dedup.BroadcastMaxRows)
+      // and no size-based broadcast either: the shuffle joins run
+      s.conf.set(autoKey, "-1")
+      try (wide, f(-1L)) finally s.conf.set(autoKey, autoPrev)
+    }
+    // ends, remap (incrementalComponents, incrementalComponentsDelta)
+    // and changed (incrementalComponentsDelta)
+    val (incB, incS) = both(m => rowsOf(
+      Dedup.incrementalComponents(prior, edges, "a", "b", broadcastMaxRows = m)))
+    assert(incS === incB)
+    val (dltB, dltS) = both { m =>
+      val (chg, dropped) = Dedup.incrementalComponentsDelta(prior, edges, "a", "b",
+        broadcastMaxRows = m)
+      (rowsOf(chg), dropped.collect().map(_.getLong(0)).toSet)
+    }
+    assert(dltB._1.nonEmpty && dltS === dltB)
+    // dead, touched labels, touched docs (the scoped delete relabel)
+    val (relB, relS) = both(m => rowsOf(Dedup.relabelScopedFromSigs(sigs, tomb,
+      prior, "doc_id", broadcastMaxRows = m)))
+    assert(relS === relB)
+    assert(relB === rowsOf(Dedup.connectedComponents(
+      Dedup.candidatesFromSigs(sigs.join(tomb, Seq("doc_id"), "left_anti"),
+        "doc_id", assumeUnique = true), "doc_a", "doc_b")))
+    // dead and dead-rep signatures (the index delete)
+    val (idxB, idxS) = both(m => Dedup.deleteFromIndexDistinct(index, sigs, tomb,
+        "doc_id", broadcastMaxRows = m)
+      .select(col("doc_id"), col("band").cast("long")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet)
+    assert(idxS === idxB)
+  }
+
   test("winnowing theorem: a shared >=k+w-1 substring yields a shared fingerprint") {
     // k=8, w=4 -> guarantee threshold k+w-1 = 11; the copied segment
     // is longer, the surroundings are disjoint, and the pair must

@@ -149,4 +149,69 @@ class LabelStoreSpec extends AnyFunSuite with SparkTestSession {
     assert(s.read.parquet(s"$dir/drop/seq=0")
       .collect().map(_.getLong(0)).toSet === Set(10L, 50L))
   }
+
+  test("appendDelete with AQE off: both branches of the scoped gates " +
+    "resolve (a side checkpointed from the label table's own projection " +
+    "is joined back against it)") {
+    val s = spark; import s.implicits._
+    val key = "spark.sql.adaptive.enabled"
+    val prev = s.conf.get(key)
+    s.conf.set(key, "false")
+    try {
+      val dir = graft.core.Scratch.dir("labelstore-noaqe")
+      val sigs = fixture
+      val prior = Dedup.connectedComponents(
+        Dedup.candidatesFromSigs(sigs, "doc_id", assumeUnique = true),
+        "doc_a", "doc_b").localCheckpoint(true)
+      LabelStore.create(s, dir, prior)
+      val tomb = Seq(3L).toDF("doc_id")
+      LabelStore.appendDelete(s, dir, sigs, tomb, "doc_id")
+      val want = labelsOf(Dedup.relabelScopedFromSigs(sigs, tomb, prior, "doc_id"))
+      assert(labelsOf(LabelStore.read(s, dir)) === want)
+      assert(labelsOf(Dedup.relabelScopedFromSigs(sigs, tomb, prior, "doc_id",
+        broadcastMaxRows = -1L)) === want)
+    } finally s.conf.set(key, prev)
+  }
+
+  test("a steady maintenance batch reuses its generated code: the second " +
+    "of two same-shape batches (add, delete, compact) compiles ~nothing") {
+    val s = spark; import s.implicits._
+    import org.apache.spark.metrics.source.CodegenMetrics
+    assert(s.conf.get("spark.sql.codegen.cache.maxEntries") ===
+      graft.core.GraftSession.CodegenCacheEntries.toString)
+    val dir = graft.core.Scratch.dir("labelstore-codegen")
+    // four exact pairs; batch i adds a copy of one pair's first doc and
+    // deletes a member of another pair, so both batches have one shape
+    def sig(k: Long) = ((k * 100 + 1) to (k * 100 + 24)).toSeq
+    var sigs = sigDocs((1L to 8L).map(id => id -> sig((id + 1) / 2)): _*)
+      .localCheckpoint(true)
+    LabelStore.create(s, dir, Dedup.connectedComponents(
+      Dedup.candidatesFromSigs(sigs, "doc_id", assumeUnique = true),
+      "doc_a", "doc_b"))
+    def batch(add: Long, copyOf: Long, del: Long): Long = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val addSigs = sigDocs(add -> sig((copyOf + 1) / 2)).localCheckpoint(true)
+      // ids reach the plans as data, never as literals: a literal is
+      // inlined into the generated code, so each batch would compile anew
+      // (the added doc's id exceeds every old one: it is always doc_b)
+      val edges = Dedup.candidatesFromSigs(sigs.unionByName(addSigs), "doc_id",
+          assumeUnique = true)
+        .join(addSigs.select(col("doc_id").as("doc_b")), Seq("doc_b"), "left_semi")
+      val (chg, dropped) = Dedup.incrementalComponentsDelta(
+        LabelStore.read(s, dir), edges, "doc_a", "doc_b", materialize = false)
+      LabelStore.appendDelta(s, dir, chg, dropped)
+      sigs = sigs.unionByName(addSigs).localCheckpoint(true)
+      val dels = Seq(del).toDF("doc_id")
+      LabelStore.appendDelete(s, dir, sigs, dels, "doc_id")
+      sigs = sigs.join(dels, Seq("doc_id"), "left_anti").localCheckpoint(true)
+      LabelStore.compact(s, dir)
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+    }
+    batch(add = 20L, copyOf = 1L, del = 3L)
+    val second = batch(add = 21L, copyOf = 5L, del = 7L)
+    assert(labelsOf(LabelStore.read(s, dir)) === Map(1L -> 1L, 2L -> 1L,
+      20L -> 1L, 5L -> 5L, 6L -> 5L, 21L -> 5L),
+      "the batches must have folded: two copies added, two pairs broken")
+    assert(second <= 10L, s"the second batch compiled $second classes")
+  }
 }

@@ -1,7 +1,8 @@
 #!/bin/bash
 # tools/gate.sh — the full verification gate in one command:
 #   compile → scalatest → Verify dump → DuckDB oracle diff → bench JSON
-#   → plan-shape regression check.
+#   → plan-shape regression check → one untraced perfbench run per
+#   workload (its output checks must pass).
 # Exit nonzero on ANY failure. Usage: tools/gate.sh [sfDir]
 set -euo pipefail
 cd "$(dirname "$0")/.."
@@ -27,5 +28,13 @@ tools/run.sh graft.PlanAudit --check 2>/dev/null | tail -1
 
 echo "== streaming plan-shape regression =="
 tools/run.sh graft.StreamPlanAudit --check 2>/dev/null | tail -1
+
+echo "== perfbench (one untraced run per workload, output checked) =="
+for w in $(python3 -c 'import json; print(" ".join(json.load(open("perfbench/workloads.json"))))'); do
+  res="$(python3 perfbench/run.py --workload "$w" --seed 1 --seconds 30 --trace 0 | tail -1)"
+  echo "$w: $res"
+  python3 -c 'import json, sys; r = json.loads(sys.argv[1])
+sys.exit(0 if r.get("correct") is True and r.get("failed") == 0 else 1)' "$res"
+done
 
 echo "GATE GREEN"
