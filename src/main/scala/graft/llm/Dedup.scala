@@ -442,10 +442,7 @@ object Dedup {
     * corpus: 35 s of diameter-many rounds without jumping) collapse in
     * a handful of rounds. The driver loop is over ROUNDS, not rows
     * (the same shape Pregel-style systems use); every per-round frame
-    * is localCheckpoint'ed so lineage stays flat. The heavy-duty
-    * variant for adversarial degree/diameter is implemented as
-    * [[connectedComponentsStar]] (same output contract, asserted
-    * equivalent).
+    * is localCheckpoint'ed so lineage stays flat.
     */
   /** Pair-count ceiling for the driver-local union-find fast path: 1M
     * (src, dst) Long pairs ≈ 16 MB — the same order as the broadcast
@@ -704,67 +701,6 @@ object Dedup {
       sess.conf.set(aqeKey, aqePrev)
       sess.conf.set(shufKey, shufPrev)
     }
-  }
-
-  /** Connected components by ALTERNATING LARGE-STAR / SMALL-STAR
-    * contraction — the extreme-scale variant of
-    * [[connectedComponents]]: per round, every node links its
-    * neighbors to its neighborhood minimum (large-star links the
-    * strictly-larger neighbors, small-star the rest), which contracts
-    * hubs immediately and keeps per-round state bounded by the
-    * CURRENT degree. Same O(log) round bound; same output contract
-    * ((node, label=component min) for every node in any pair —
-    * equivalence with the pointer-jumping variant is asserted over
-    * randomized graphs in DedupSpec).
-    *
-    * Spark shape per round: the per-node neighborhood minimum is a
-    * window min over the symmetric edge list (never a collect_list —
-    * a hub's neighborhood stays distributed), then a projection emits
-    * the re-linked edges; symmetrize + distinct and compare edge sets
-    * (two anti-joins) for convergence. Prefer [[connectedComponents]]
-    * when components are shallow (near-dup clusters usually are);
-    * prefer this when degree/diameter are adversarial.
-    */
-  def connectedComponentsStar(pairs: DataFrame, aCol: String, bCol: String,
-                              maxIter: Int = 50): DataFrame = {
-    def sym(e: DataFrame): DataFrame =
-      e.union(e.select(col("v").as("u"), col("u").as("v")))
-        .filter(col("u") =!= col("v")).distinct()
-    val w = Window.partitionBy("u")
-    def withMin(e: DataFrame): DataFrame =
-      e.withColumn("m", least(min("v").over(w), col("u")))
-
-    // edge frames are DATA-SIZED — DISK_ONLY checkpoints throughout,
-    // same rationale as [[connectedComponents]] (SCALE_r12)
-    var edges = sym(pairs.select(col(aCol).as("u"), col(bCol).as("v"))
-        .localCheckpoint(true, DataSized)) // materialize once: sym()'s union has two branches
-      .localCheckpoint(true, DataSized)
-    var converged = edges.isEmpty
-    var round = 0
-    while (!converged && round < maxIter) {
-      // large-star: strictly larger neighbors re-link to the min
-      val ls = withMin(edges).filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-      val afterLs = sym(ls).localCheckpoint(true, DataSized)
-      // small-star: the remaining (smaller) neighbors and u itself
-      val ssSrc = withMin(afterLs)
-      val ss = ssSrc.filter(col("v") < col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(ssSrc.select(col("u"), col("m").as("v")))
-      // lazy checkpoint + ONE convergence job that materializes it:
-      // edge sets are distinct, so they're equal iff the +1/-1 tagged
-      // union nets to zero everywhere — replaces the two exceptAll
-      // jobs (and the separate eager-checkpoint pass) per round
-      val next = sym(ss).localCheckpoint(false, DataSized)
-      converged = next.withColumn("t", lit(1))
-        .union(edges.withColumn("t", lit(-1)))
-        .groupBy("u", "v").agg(sum("t").as("d"))
-        .filter(col("d") =!= 0).isEmpty
-      edges = next
-      round += 1
-    }
-    edges.groupBy("u").agg(min("v").as("mn"))
-      .select(col("u").as("node"), least(col("mn"), col("u")).as("label"))
   }
 
   /** End-to-end near-dup removal: keep every document that is either

@@ -366,7 +366,7 @@ object ScaleSmoke {
     val idxDir = s"$tmp/il_index"
     // the LABEL side now lives in a LabelStore (VERDICT r15 ask #5 —
     // round 15 re-derived this stage's stitch discipline inline; the
-    // store owns it: base + delta/drop appends + tombstone sidecar)
+    // store owns it: base + a log of per-batch delta/drop/tomb rows)
     val store = s"$tmp/il_store"
     timed("interleave state build (one-time: sigs + distinct index + labels)") {
       val sigd = Dedup.docSigs(corpus, "text", "doc_id")
@@ -433,7 +433,7 @@ object ScaleSmoke {
       // DELETE: ~25 copy-0 docs from the TAGGED pool (%200 residues 53
       // and 103 are ≡ 3 mod 50), fixed across mult — touched
       // components, never corpus scans; writes = the re-elected reps
-      // plus the store's delta/drop/tombstone batch (O(touched))
+      // plus the store's one-directory log batch (O(touched))
       val tombs = sigsView.filter(col("doc_id") < stride &&
           col("doc_id") % 200 === (50 * k + 3).toLong)
         .select("doc_id").localCheckpoint(true)

@@ -522,7 +522,7 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     assert(kept2.toSeq === Seq(1L, 7L))
   }
 
-  test("star-contraction components == pointer-jumping components on " +
+  test("union-find components == pointer-jumping components on " +
     "adversarial and random graphs") {
     val s = spark; import s.implicits._
     def labelsOf(df: org.apache.spark.sql.DataFrame) =
@@ -542,13 +542,10 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
       val df = pairs.toDF("doc_a", "doc_b")
       // driverMaxPairs = -1 forces the DISTRIBUTED rounds (every spec
       // graph is under the driver-union-find threshold); the default
-      // call exercises the union-find fast path — all three
-      // implementations must agree
+      // call exercises the union-find fast path — both must agree
       val jump = labelsOf(Dedup.connectedComponents(df, "doc_a", "doc_b",
         driverMaxPairs = -1L))
       val uf = labelsOf(Dedup.connectedComponents(df, "doc_a", "doc_b"))
-      val star = labelsOf(Dedup.connectedComponentsStar(df, "doc_a", "doc_b"))
-      assert(star === jump, s"star/jump disagreement on $pairs")
       assert(uf === jump, s"union-find/jump disagreement on $pairs")
     }
   }

@@ -36,6 +36,14 @@ class LabelStoreSpec extends AnyFunSuite with SparkTestSession {
   private def labelsOf(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
 
+  /** Batch `seq`'s rows of one kind in the store's log, as (node, label). */
+  private def logRows(dir: String, seq: Int, kind: String) =
+    spark.read.parquet(s"$dir/delta")
+      .filter(col("seq") === seq && col("kind") === kind)
+      .select("node", "label").collect()
+      .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]),
+        Option(r.get(1)).map(_.asInstanceOf[Long]))).toSet
+
   test("appendDelete: read equals the scoped relabel's stitched output, " +
     "batches stack in sequence, compact preserves the answer") {
     val s = spark; import s.implicits._
@@ -82,8 +90,7 @@ class LabelStoreSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("singleton splits vanish (the label-based drop a node stitch " +
-    "cannot express), and appendChanged folds an additions batch at " +
-    "O(changed) writes") {
+    "cannot express), and an additions batch writes only the changed rows") {
     val s = spark; import s.implicits._
     val dir = graft.core.Scratch.dir("labelstore2")
     // chain {1,2,3} through bridge 2; pair {10,11}
@@ -105,18 +112,20 @@ class LabelStoreSpec extends AnyFunSuite with SparkTestSession {
     val got = labelsOf(LabelStore.read(s, dir))
     assert(got === Map(10L -> 10L, 11L -> 10L),
       s"singleton-split members must leave the label table, got $got")
-    assert(s.read.parquet(s"$dir/delta/seq=0").isEmpty,
+    assert(logRows(dir, 0, "delta").isEmpty,
       "a split-to-singletons delete writes an EMPTY delta")
+    assert(logRows(dir, 0, "drop") === Set((None, Some(1L))))
+    assert(logRows(dir, 0, "tomb") === Set((Some(2L), None)))
 
-    // additions fold: a new fixpoint merging {10,11} under label 1
-    // (an arriving doc connected both) — appendChanged writes ONLY the
-    // changed rows and drops only their old label
-    val newFix = Seq((1L, 1L), (10L, 1L), (11L, 1L)).toDF("node", "label")
-    LabelStore.appendChanged(s, dir, newFix)
-    assert(labelsOf(LabelStore.read(s, dir)) === labelsOf(newFix))
-    val delta1 = s.read.parquet(s"$dir/delta/seq=1")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(delta1 === Set((1L, 1L), (10L, 1L), (11L, 1L)),
+    // additions fold: an arriving doc 1 links to 10, merging {10,11}
+    // under label 1 — the batch writes ONLY the changed rows and drops
+    // only their old label
+    val (chg, dropped) = Dedup.incrementalComponentsDelta(
+      LabelStore.read(s, dir), Seq((1L, 10L)).toDF("a", "b"), "a", "b")
+    LabelStore.appendDelta(s, dir, chg, dropped)
+    assert(labelsOf(LabelStore.read(s, dir)) === Map(1L -> 1L, 10L -> 1L, 11L -> 1L))
+    assert(logRows(dir, 1, "delta") ===
+      Set((Some(1L), Some(1L)), (Some(10L), Some(1L)), (Some(11L), Some(1L))),
       "the additions delta must carry exactly the changed/new rows")
   }
 
@@ -138,16 +147,14 @@ class LabelStoreSpec extends AnyFunSuite with SparkTestSession {
     assert(labelsOf(LabelStore.read(s, dir)) === want)
     // the delta carried only the merged components' rows + the new
     // node — never the untouched component or the unchanged-label rows
-    val deltaRows = s.read.parquet(s"$dir/delta/seq=0")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val deltaRows = logRows(dir, 0, "delta").map { case (n, l) => (n.get, l.get) }
     assert(deltaRows === Set((10L, 1L), (11L, 1L), (50L, 1L)),
       s"delta must be the remapped rows + the new node, got $deltaRows")
     // the drop set: the losing component's label, plus the new node's
     // label-graph self-label (50) — vacuously safe: a base row with
     // label 50 would mean node 50 was already clustered, contradicting
     // it being new, so dropping it is a no-op by construction
-    assert(s.read.parquet(s"$dir/drop/seq=0")
-      .collect().map(_.getLong(0)).toSet === Set(10L, 50L))
+    assert(logRows(dir, 0, "drop").map(_._2.get) === Set(10L, 50L))
   }
 
   test("appendDelete with AQE off: both branches of the scoped gates " +
@@ -213,5 +220,107 @@ class LabelStoreSpec extends AnyFunSuite with SparkTestSession {
       20L -> 1L, 5L -> 5L, 6L -> 5L, 21L -> 5L),
       "the batches must have folded: two copies added, two pairs broken")
     assert(second <= 10L, s"the second batch compiled $second classes")
+  }
+
+  /** Jobs the body runs, counted by job group. Listener delivery is
+    * asynchronous but in order, so a marker job run afterwards bounds
+    * the wait for the body's events.
+    */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup("labelstore-body", "body"); body
+      sc.setJobGroup("labelstore-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!groups.contains("labelstore-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("labelstore-marker"), "listener never saw the marker")
+      groups.toArray.count(_ == "labelstore-body")
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+  }
+
+  test("after k batches the store holds base and delta/seq=0..k-1 only, " +
+    "each batch written by one job") {
+    val s = spark; import s.implicits._
+    val dir = graft.core.Scratch.dir("labelstore-layout")
+    val sigs = fixture
+    LabelStore.create(s, dir, Dedup.connectedComponents(
+      Dedup.candidatesFromSigs(sigs, "doc_id", assumeUnique = true),
+      "doc_a", "doc_b"))
+    LabelStore.appendDelete(s, dir, sigs, Seq(3L).toDF("doc_id"), "doc_id")
+    val chg = Seq((20L, 10L)).toDF("node", "label")
+    val dropped = Seq(10L, 20L).toDF("label")
+    assert(jobsOf(LabelStore.appendDelta(s, dir, chg, dropped)) === 1)
+    def names(p: String) = new java.io.File(p).listFiles()
+      .map(_.getName).filterNot(n => n.startsWith(".") || n.startsWith("_")).toSet
+    assert(names(dir) === Set("base", "delta"))
+    assert(names(s"$dir/delta") === Set("seq=0", "seq=1"))
+    assert(logRows(dir, 1, "delta") === Set((Some(20L), Some(10L))))
+    assert(LabelStore.tombstones(s, dir).collect().map(_.getLong(0)).toSet === Set(3L))
+  }
+
+  test("a store-reading query has one broadcast exchange for the drop " +
+    "side, for 1, 2 and 3 outstanding batches") {
+    val s = spark; import s.implicits._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val helper = new AdaptiveSparkPlanHelper {}
+    val dir = graft.core.Scratch.dir("labelstore-plan")
+    LabelStore.create(s, dir, (1L to 40L).map(n => (n, (n + 1) / 2 * 2 - 1)).toDF("node", "label"))
+    for (k <- 1 to 3) {
+      // batch k merges label 2k+1 into label 1: it drops both labels and
+      // re-adds label 1, which the earlier batches dropped and re-added
+      LabelStore.appendDelta(s, dir,
+        (1L to 2L * k + 2).map(n => (n, 1L)).toDF("node", "label"),
+        Seq(1L, 2L * k + 1).toDF("label"))
+      val df = LabelStore.read(s, dir)
+      val rows = df.collect().map(r => (r.getLong(0), r.getLong(1)))
+      assert(rows.length === 40)
+      assert(rows.toMap === (1L to 40L).map(n =>
+        n -> (if (n <= 2L * k + 2) 1L else (n + 1) / 2 * 2 - 1)).toMap)
+      val broadcasts = helper.collectWithSubqueries(df.queryExecution.executedPlan) {
+        case b: BroadcastExchangeExec => b
+      }
+      assert(broadcasts.size === 1, s"$k outstanding batches:\n${df.queryExecution.executedPlan}")
+    }
+  }
+
+  test("a store in the old three-directory layout: refused with outstanding " +
+    "batches, read unchanged without them") {
+    val s = spark; import s.implicits._
+    val old = graft.core.Scratch.dir("labelstore-old")
+    val base = Seq((1L, 1L), (2L, 1L), (5L, 5L), (6L, 5L)).toDF("node", "label")
+    base.write.parquet(s"$old/base")
+    Seq((2L, 2L)).toDF("node", "label").write.parquet(s"$old/delta/seq=0")
+    Seq(1L).toDF("label").write.parquet(s"$old/drop/seq=0")
+    Seq(1L).toDF("node").write.parquet(s"$old/tombs/seq=0")
+    val err = intercept[IllegalStateException](LabelStore.read(s, old))
+    assert(err.getMessage.contains("three-directory layout"))
+    intercept[IllegalStateException](LabelStore.appendDelta(s, old,
+      Seq((7L, 5L)).toDF("node", "label"), Seq(5L).toDF("label")))
+    intercept[IllegalStateException](LabelStore.appendDelete(s, old, fixture,
+      Seq(5L).toDF("doc_id"), "doc_id"))
+    // re-creating it describes only the new truth
+    LabelStore.create(s, old, base)
+    assert(labelsOf(LabelStore.read(s, old)) === labelsOf(base))
+
+    // created or compacted, the old layout held only `base`
+    val quiet = graft.core.Scratch.dir("labelstore-old-compacted")
+    base.write.parquet(s"$quiet/base")
+    assert(labelsOf(LabelStore.read(s, quiet)) === labelsOf(base))
+    LabelStore.appendDelta(s, quiet, Seq((7L, 5L)).toDF("node", "label"),
+      Seq(5L).toDF("label"))
+    assert(labelsOf(LabelStore.read(s, quiet)) ===
+      Map(1L -> 1L, 2L -> 1L, 7L -> 5L))
   }
 }

@@ -37,4 +37,5 @@ for w in $(python3 -c 'import json; print(" ".join(json.load(open("perfbench/wor
 sys.exit(0 if r.get("correct") is True and r.get("failed") == 0 else 1)' "$res"
 done
 
-echo "GATE GREEN"
+# ROADMAP aim 2's success measure: the src/main Scala line count
+echo "GATE GREEN (src/main: $(find src/main -name '*.scala' -print0 | xargs -0 cat | wc -l) Scala lines)"
