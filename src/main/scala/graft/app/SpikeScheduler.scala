@@ -1,7 +1,9 @@
 package graft.app
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
-import graft.reference.{Alert, AlertDedup, SpikeDetector}
+import org.apache.spark.sql.graft.GraftSqlShims.boundLong
+import graft.reference.{Alert, AlertDedup, SpikeDetector, SpikeParams}
 import graft.sources.HourlyParquetSource
 
 /** Batch scheduler loop — the reference's `main` (hha.py:315–327)
@@ -10,6 +12,10 @@ import graft.sources.HourlyParquetSource
   * (current: ts > now−90; previous: ts < now−300 — the `endTime`s
   * are dead in the reference and stay dead here), collects the alert
   * frame, and pushes it through TTL dedup → watch-list → rule sink.
+  *
+  * A steady pass is plan-invariant: bound window parameters
+  * ([[SpikeScheduler.detect]]) and a named read schema mean it compiles
+  * no class and runs no schema-inference job.
   *
   * Clock and iteration count are injectable (the reference's
   * `while True` + `time.time()` is untestable as written).
@@ -32,19 +38,8 @@ final class SpikeScheduler(
     source.read(numberFiles = 2) match {
       case None => Seq.empty // unreadable hour — skip (hha.py:138–139)
       case Some(hist) =>
-        // the fused single-scan plan (detectFused) is the production
-        // path; detect() remains the reference-shaped plan for parity
-        val out = SpikeDetector.detectFused(
-          hist,
-          currentPredicate = col("timestamp") > now - 90L,
-          previousPredicate = col("timestamp") < now - 300L,
-          params = config.spikeParams)
-        // alert sets are post-aggregation small; collect is the
-        // reference's sink shape (hha.py:231) and stays cheap
-        val alerts = out.collect().toSeq.map { r =>
-          Alert(r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3))
-        }
-        dedup.process(alerts, watchlist.contains, now)
+        dedup.process(SpikeScheduler.detect(hist, now, config.spikeParams),
+          watchlist.contains, now)
           .map { a => sink.emit(a); a }
     }
   }
@@ -58,4 +53,25 @@ final class SpikeScheduler(
       if (i < iterations) sleeper(config.sleepInterval * 1000L)
     }
   }
+}
+
+object SpikeScheduler {
+
+  /** The pass body shared by the scheduler and the streaming mode: the
+    * fused single-scan plan (detectFused; detect() remains the
+    * reference-shaped plan for parity) over `hist` at clock `now`,
+    * collected as alerts. The bounds now−90 and now−300 are bound
+    * parameters, not literals, so the generated code is the same on
+    * every pass. Alert sets are post-aggregation small; collect is the
+    * reference's sink shape (hha.py:231) and stays cheap.
+    */
+  def detect(hist: DataFrame, now: Long, params: SpikeParams): Seq[Alert] =
+    SpikeDetector.detectFused(
+      hist,
+      currentPredicate = col("timestamp") > boundLong(now - 90L),
+      previousPredicate = col("timestamp") < boundLong(now - 300L),
+      params = params)
+      .collect().toSeq.map { r =>
+        Alert(r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3))
+      }
 }

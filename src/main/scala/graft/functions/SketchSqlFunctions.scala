@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, Encoders, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.graftshim.GraftSqlShims
+import org.apache.spark.sql.graft.GraftSqlShims
 import org.apache.spark.sql.functions.{concat, lit, pmod}
 import org.apache.spark.sql.types.{Decimal, DecimalType}
 

@@ -284,7 +284,7 @@ object AsOfJoin {
           lTime.dataType.simpleString),
         s"asof: tolerance/nearest need integral times, got ${lTime.dataType}")
 
-    org.apache.spark.sql.graft.GraftSqlBridge.ofRows(
+    org.apache.spark.sql.graft.GraftSqlShims.ofRows(
       left.sparkSession,
       AsOfJoinPlan(lp, rp, lKeys, rKeys, lTime, rTime, direction, tolerance))
   }

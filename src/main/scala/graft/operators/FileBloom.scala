@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.GraftSqlShims
+import org.apache.spark.sql.graft.GraftSqlShims
 
 /** File-level BLOOM FILTER index for point probes on UNCLUSTERED
   * high-cardinality columns — the fourth member of the file-skipping

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Cast, EqualTo, Expression, In, InSet, Literal}
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, InMemoryFileIndex, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.graftshim.GraftSqlShims
+import org.apache.spark.sql.graft.GraftSqlShims
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StructType}
 
 /** Planning-time BLOOM file skipping — [[graft.operators.FileBloom]]'s

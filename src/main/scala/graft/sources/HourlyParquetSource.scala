@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** The reference's hourly-file discovery (`ReadData`, hha.py:278–313):
   * file `<dir>/<prefix><floor(now/3600)*3600 - i*3600>` for
@@ -38,12 +39,28 @@ final class HourlyParquetSource(
   def existingPaths(numberFiles: Int): Seq[String] =
     candidatePaths(numberFiles).filter(p => fs.exists(new HPath(p)))
 
-  /** Read the last `numberFiles` hourly files as one frame. */
+  /** Read the last `numberFiles` hourly files as one frame in the
+    * reference schema, with no inference job. Columns match by name: a
+    * file may order them differently or carry more, and a reference
+    * column a file lacks reads as null (as inference did for every file
+    * but the one it read). `None` when no hour path holds a data file.
+    */
   def read(numberFiles: Int): Option[DataFrame] = {
     val paths = existingPaths(numberFiles)
     if (paths.isEmpty) None
     else
-      try Some(spark.read.parquet(paths: _*))
+      try Some(spark.read.schema(HourlyParquetSource.ReferenceSchema).parquet(paths: _*))
+        .filter(_.inputFiles.nonEmpty)
       catch { case _: org.apache.spark.sql.AnalysisException => None }
   }
+}
+
+object HourlyParquetSource {
+
+  /** The reference's histogram record (SURVEY.md §1.1), in the types
+    * the spike pass reads.
+    */
+  val ReferenceSchema: StructType = StructType.fromDDL(
+    "timestamp BIGINT, subagent_id BIGINT, num_protocol INT, " +
+      "CountPkt BIGINT, type_proto INT, dst_ip BIGINT")
 }

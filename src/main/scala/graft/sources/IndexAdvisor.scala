@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.graftshim.GraftSqlShims
+import org.apache.spark.sql.graft.GraftSqlShims
 import org.apache.spark.sql.types.StructType
 
 /** Mount a table with EVERY persisted skipping index it has — the

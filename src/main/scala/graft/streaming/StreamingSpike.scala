@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
-import graft.app.{HhaConfig, RuleSink, WatchlistProvider}
-import graft.reference.{Alert, AlertDedup, SpikeDetector}
+import graft.app.{HhaConfig, RuleSink, SpikeScheduler, WatchlistProvider}
+import graft.reference.AlertDedup
 
 /** The histogram record as a typed streaming row (column names match
   * the batch pipeline's expectations).
@@ -24,11 +24,11 @@ final case class HistRow(
   *     `SpikeDetector.aggregateWindow` — tumbling windows + watermark,
   *     so late data is bounded state, not a re-read (the reference's
   *     2-hour re-read slack becomes the watermark delay);
-  *   - [[start]]: a `foreachBatch` sink running the UNCHANGED batch
-  *     pipeline + TTL-dedup/watch-list/rule layer per micro-batch
-  *     snapshot. Suited to sources that deliver analysis-complete
-  *     snapshots (e.g. the hourly files). Streaming-native per-key
-  *     TTL state lives in [[StreamingAlertDedup]].
+  *   - [[start]]: a `foreachBatch` sink running the scheduler's pass
+  *     body (`SpikeScheduler.detect`) + TTL-dedup/watch-list/rule
+  *     layer per micro-batch snapshot. Suited to sources that deliver
+  *     analysis-complete snapshots (e.g. the hourly files).
+  *     Streaming-native per-key TTL state lives in [[StreamingAlertDedup]].
   */
 object StreamingSpike {
 
@@ -66,15 +66,8 @@ object StreamingSpike {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
           val now = clock()
-          val out = SpikeDetector.detectFused(
-            batch,
-            currentPredicate = col("timestamp") > now - 90L,
-            previousPredicate = col("timestamp") < now - 300L,
-            params = config.spikeParams)
-          val alerts = out.collect().toSeq.map { r =>
-            Alert(r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3))
-          }
-          dedup.process(alerts, watchlist.contains, now).foreach(sink.emit)
+          dedup.process(SpikeScheduler.detect(batch, now, config.spikeParams),
+            watchlist.contains, now).foreach(sink.emit)
         }
         ()
       }

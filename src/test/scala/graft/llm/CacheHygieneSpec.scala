@@ -2,7 +2,7 @@ package graft.llm
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.GraftSqlBridge
+import org.apache.spark.sql.graft.GraftSqlShims
 import graft.SparkTestSession
 
 /** Operators that materialize intermediate frames must not leak
@@ -28,10 +28,10 @@ class CacheHygieneSpec extends AnyFunSuite with SparkTestSession {
 
   test("repeated minhashCandidates calls leave the CacheManager empty") {
     spark.catalog.clearCache() // isolate from other suites
-    assert(GraftSqlBridge.cacheManagerIsEmpty(spark))
+    assert(GraftSqlShims.cacheManagerIsEmpty(spark))
     (1 to 3).foreach { _ =>
       Dedup.minhashCandidates(docs, "text", "doc_id").count()
-      assert(GraftSqlBridge.cacheManagerIsEmpty(spark),
+      assert(GraftSqlShims.cacheManagerIsEmpty(spark),
         "minhashCandidates must not pin CacheManager entries")
     }
   }
@@ -41,7 +41,7 @@ class CacheHygieneSpec extends AnyFunSuite with SparkTestSession {
     (1 to 3).foreach { _ =>
       Dedup.tokenJaccardPairs(docs, "text", "doc_id",
         probeFilter = col("doc_id") === 1L, minJaccardE6 = 100000L).count()
-      assert(GraftSqlBridge.cacheManagerIsEmpty(spark),
+      assert(GraftSqlShims.cacheManagerIsEmpty(spark),
         "tokenJaccardPairs must not pin CacheManager entries")
     }
   }
@@ -50,7 +50,7 @@ class CacheHygieneSpec extends AnyFunSuite with SparkTestSession {
     spark.catalog.clearCache()
     val kept = Dedup.dropNearDuplicates(docs, "text", "doc_id")
     assert(kept.count() >= 2) // 1 and 4 are near-identical; one survives
-    assert(GraftSqlBridge.cacheManagerIsEmpty(spark))
+    assert(GraftSqlShims.cacheManagerIsEmpty(spark))
   }
 
   test("the winnowing family (pairs + containment) stays cache-clean") {
@@ -58,7 +58,7 @@ class CacheHygieneSpec extends AnyFunSuite with SparkTestSession {
     (1 to 3).foreach { _ =>
       Dedup.winnowingPairs(docs, "text", "doc_id", minShared = 1L).count()
       Dedup.winnowingContainment(docs, "text", "doc_id", minContE6 = 0L).count()
-      assert(GraftSqlBridge.cacheManagerIsEmpty(spark),
+      assert(GraftSqlShims.cacheManagerIsEmpty(spark),
         "winnowing operators must not pin CacheManager entries")
     }
   }
