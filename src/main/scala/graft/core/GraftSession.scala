@@ -53,4 +53,26 @@ object GraftSession {
     * cache costs ~7.5 MB at this size against ~3 MB at the default.
     */
   val CodegenCacheEntries = 256
+
+  /** Run `body` with the session confs `kvs` set, then restore each
+    * key to its value before the scope, also when `body` (or setting a
+    * rejected value) throws. A key that had no value (`getOption` is
+    * None, e.g. the null-default
+    * `spark.sql.adaptive.autoBroadcastJoinThreshold`) is unset again.
+    * The body must execute inside the scope (`localCheckpoint`,
+    * `collect`, a write): a lazily returned plan would be planned
+    * after the restore. Scopes nest; the inner one restores the outer
+    * one's values. The one conf scope of `src/main` (`tools/gate.sh`
+    * fails on `conf.unset(` anywhere else).
+    */
+  def withConf[A](spark: SparkSession, kvs: (String, String)*)(body: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.reverse.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

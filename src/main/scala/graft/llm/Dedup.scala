@@ -631,7 +631,7 @@ object Dedup {
     // 30–40× more edges than nodes, so a 100k-node graph was paying
     // per-round O(|E|) shuffle joins its label table never required.
     val nNodes = labels.count()
-    // AQE OFF for the round loop alone (restored in the finally): the
+    // AQE OFF for the round loop alone (restored when the scope exits): the
     // loop already makes every call AQE exists to make — iteration
     // width right-sized from the MEASURED edge count above, the label
     // side broadcast on a MEASURED row count below, and the groupBy
@@ -648,14 +648,9 @@ object Dedup {
     // `parts` instead of the session's core-count default — the exact
     // number AQE's coalescing produced, now set statically (scale-
     // adaptive: a 100 TB edge list computes parts = |E|/500k).
-    val sess = pairs.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val shufKey = "spark.sql.shuffle.partitions"
-    val aqePrev = sess.conf.get(aqeKey)
-    val shufPrev = sess.conf.get(shufKey)
-    sess.conf.set(aqeKey, "false")
-    sess.conf.set(shufKey, parts.toString)
-    try {
+    graft.core.GraftSession.withConf(pairs.sparkSession,
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> parts.toString) {
     var converged = false
     var round = 0
     var lastSum = labels.agg(labelSum).head().get(0)
@@ -697,9 +692,6 @@ object Dedup {
     ccLog.info(s"connectedComponents: fixpoint after $round rounds " +
       s"($nNodes nodes, $nEdges directed edges)")
     labels
-    } finally {
-      sess.conf.set(aqeKey, aqePrev)
-      sess.conf.set(shufKey, shufPrev)
     }
   }
 

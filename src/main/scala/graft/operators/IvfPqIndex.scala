@@ -323,19 +323,11 @@ final case class IvfPqIndex(tablePath: String, dir: String,
       val snap = spark.read.option("basePath", codesPath).parquet(dirty: _*)
         .localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
         .dropDuplicates("neighbor_id", "subspace")
-      val conf = spark.conf
-      val prev = conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try
-        // eager (write IS the action), so the conf scope is safe; the
-        // hash repartition on cluster lands each dirty list in one
-        // task → exactly one file per rewritten directory
-        snap.repartition(col("cluster")).sortWithinPartitions("cluster")
-          .write.partitionBy("cluster").mode("overwrite").parquet(codesPath)
-      finally prev match {
-        case Some(v) => conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None => conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      // the hash repartition on cluster lands each dirty list in one
+      // task → exactly one file per rewritten directory
+      snap.repartition(col("cluster")).sortWithinPartitions("cluster")
+        .write.partitionBy("cluster").mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic").parquet(codesPath)
     }
     // fold the per-append drift rows into the pooled per-phase view
     // (same bounded-sidecar hygiene as the provenance fold)
@@ -410,16 +402,9 @@ final case class IvfPqIndex(tablePath: String, dir: String,
     // canon to long like content() does before comparing
     val survivors = retained.select(col("cluster").cast("long")).distinct()
       .collect().map(_.getLong(0)).toSet
-    val conf = spark.conf
-    val prev = conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try
-      retained.repartition(col("cluster")).sortWithinPartitions("cluster")
-        .write.partitionBy("cluster").mode("overwrite").parquet(codesPath)
-    finally prev match {
-      case Some(v) => conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    retained.repartition(col("cluster")).sortWithinPartitions("cluster")
+      .write.partitionBy("cluster").mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").parquet(codesPath)
     // emptied lists: no partition in `retained` → dynamic overwrite
     // left the old directory — remove it
     dirty.filterNot(survivors).foreach { c =>

@@ -19,14 +19,12 @@ import org.apache.spark.sql.SparkSession
   */
 object RuntimeFilters {
 
-  private val Keys = Seq(
-    "spark.sql.optimizer.runtime.bloomFilter.enabled",
-    "spark.sql.autoBroadcastJoinThreshold",
-    "spark.sql.adaptive.autoBroadcastJoinThreshold",
-    "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-
   /** Run `body` with bloom-filter pruning forced into the shuffle-join
-    * regime; every touched conf is restored on exit (also on throw).
+    * regime (static and AQE auto-broadcast off) through
+    * [[graft.core.GraftSession.withConf]], which restores every
+    * touched conf on exit (also on throw). The body must execute
+    * inside the scope (`localCheckpoint`/`collect`): a lazily-run
+    * plan would compile after the confs were restored.
     *
     * `applicationSideScanSizeThreshold` gates injection by fact-scan
     * size (default 10GB — right for clusters); pass "0" to force the
@@ -34,22 +32,11 @@ object RuntimeFilters {
     * tiny scans don't pay the bloom build.
     */
   def withBloomPruning[A](spark: SparkSession,
-                          applicationSideScanSizeThreshold: String = "10GB",
-                          disableBroadcast: Boolean = true)(body: => A): A = {
-    val prev = Keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      spark.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      if (disableBroadcast) {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-      }
-      spark.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        applicationSideScanSizeThreshold)
-      body
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+                          applicationSideScanSizeThreshold: String = "10GB")(body: => A): A =
+    graft.core.GraftSession.withConf(spark,
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" ->
+        applicationSideScanSizeThreshold)(body)
 }

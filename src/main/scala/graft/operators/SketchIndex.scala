@@ -135,15 +135,8 @@ object SketchIndex {
     val folded = read(spark, dir, monthCol)
       .groupBy(monthCol).agg(kmvMerge(col("sk")).as("sk"))
       .localCheckpoint(true)
-    val conf = spark.conf
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = conf.getOption(key)
-    conf.set(key, "dynamic")
-    try folded.write.partitionBy(monthCol).mode("overwrite").parquet(dir)
-    finally prev match {
-      case Some(v) => conf.set(key, v)
-      case None => conf.unset(key)
-    }
+    folded.write.partitionBy(monthCol).mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").parquet(dir)
     stagedFiles.foreach(fs.delete(_, false))
     folded
   }
@@ -182,15 +175,8 @@ object SketchIndex {
       .select(col(monthCol), KmvSketch.hash63(col(keyCol)).as("h"))
       .groupBy(monthCol).agg(kmv(col("h")).as("sk"))
       .localCheckpoint(true) // KBs; breaks lineage to the dirs rewritten below
-    val conf = spark.conf
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = conf.getOption(key)
-    conf.set(key, "dynamic")
-    try rebuilt.write.partitionBy(monthCol).mode("overwrite").parquet(dir)
-    finally prev match {
-      case Some(v) => conf.set(key, v)
-      case None => conf.unset(key)
-    }
+    rebuilt.write.partitionBy(monthCol).mode("overwrite")
+      .option("partitionOverwriteMode", "dynamic").parquet(dir)
     val survivors = rebuilt.select(col(monthCol).cast("long")).distinct()
       .collect().map(_.getLong(0)).toSet
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -124,22 +124,15 @@ object SketchStats {
   }
 
   /** Scoped disabling of static auto-broadcast (both planner and AQE
-    * thresholds), restoring session confs on exit — the harness for
+    * thresholds) through [[graft.core.GraftSession.withConf]], which
+    * restores the session confs on exit — the harness for
     * demonstrating that a broadcast in the plan is the RULE's doing,
-    * not file-size stats. Execute eagerly inside the scope (q57's
-    * localCheckpoint pattern): a lazily-run plan would compile after
-    * the confs were restored.
+    * not file-size stats. The body must execute inside the scope
+    * (q57's `localCheckpoint` pattern, or a `collect`): a lazily-run
+    * plan would compile after the confs were restored.
     */
-  def withStaticBroadcastOff[A](spark: SparkSession)(body: => A): A = {
-    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    val prev = keys.map(k => k -> spark.conf.getOption(k)).toMap
-    try {
-      keys.foreach(spark.conf.set(_, "-1"))
-      body
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
+  def withStaticBroadcastOff[A](spark: SparkSession)(body: => A): A =
+    graft.core.GraftSession.withConf(spark,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1")(body)
 }

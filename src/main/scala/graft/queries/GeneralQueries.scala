@@ -1828,10 +1828,8 @@ object GeneralQueries {
           .select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority")),
           s"g74_ord_$tag")
       }
-      val key = "spark.sql.legacy.bucketedTableScan.outputOrdering"
-      val old = s.conf.getOption(key)
-      s.conf.set(key, "true")
-      try {
+      graft.core.GraftSession.withConf(s,
+          "spark.sql.legacy.bucketedTableScan.outputOrdering" -> "true") {
         s.table(s"g74_li_$tag").hint("merge")
           .join(s.table(s"g74_ord_$tag"), Seq("l_orderkey"))
           .groupBy("l_returnflag", "o_orderpriority")
@@ -1839,9 +1837,6 @@ object GeneralQueries {
             sum(asInt(col("l_quantity"), 0)).as("sum_qty"))
           .localCheckpoint(true) // plan must compile inside the conf scope
           .orderBy("l_returnflag", "o_orderpriority")
-      } finally old match {
-        case Some(v) => s.conf.set(key, v)
-        case None => s.conf.unset(key)
       }
     }),
 

@@ -1,7 +1,9 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import graft.reference.SpikeParams
 import graft.streaming.{HistRow, StreamingDetect, StreamingSpike}
 
@@ -29,55 +31,124 @@ object StreamingQueries {
 
   private val P = SpikeParams()
 
-  /** Run `f` with `spark.sql.shuffle.partitions` = n, restoring the
-    * session value after. Stateful streaming operators create one
-    * state-store instance PER shuffle partition PER micro-batch — at
-    * the oracle queries' state sizes (hundreds/thousands of keys),
-    * 32 partitions × 3 batches is pure per-instance overhead (store
-    * load/commit/snapshot), not parallelism. 8 partitions cut st01
-    * 22 s → single digits with byte-identical results (the partition
-    * count never affects WHAT a stateful operator emits, only where
-    * each key's state lives). A production deployment sizes this to
-    * keys/partition, exactly like batch shuffle sizing.
+  /** `spark.sql.shuffle.partitions` inside every st* query. Stateful
+    * streaming operators create one state-store instance PER shuffle
+    * partition PER micro-batch — at the oracle queries' state sizes
+    * (hundreds/thousands of keys), 32 partitions × 3 batches is pure
+    * per-instance overhead (store load/commit/snapshot), not
+    * parallelism. 8 partitions cut st01 22 s → single digits with
+    * byte-identical results (the partition count never affects WHAT a
+    * stateful operator emits, only where each key's state lives). A
+    * production deployment sizes this to keys/partition, exactly like
+    * batch shuffle sizing.
     */
-  /** @param noDataBatches keep Spark's no-data micro-batches ON for
-    *   entries whose protocol depends on watermark-driven state action
-    *   BETWEEN data batches: st05's TTL dedup re-sends old keys in the
-    *   very next data batch and needs the eviction to have happened
-    *   before it (dropDuplicatesWithinWatermark evicts at batch start
-    *   from the PREVIOUS batch's watermark — without the no-data batch
-    *   the re-sent generation would still see live state and drop).
-    *   Every other protocol closes windows through data batches.
+  private val StreamPartitions = 8
+
+  /** The st* feed harness: inside one [[graft.core.GraftSession.withConf]]
+    * scope, start `writer`, run each step followed by
+    * `processAllAvailable`, and stop the query in `finally`. The scope
+    * sets the shuffle width to [[StreamPartitions]] and turns no-data
+    * micro-batches off; `conf` pairs are applied after those two, so
+    * they win (st05 turns no-data batches back on, st10 picks the
+    * RocksDB state-store provider).
+    *
+    * No-data micro-batches are off for the bounded oracle feeds
+    * (round-16 optimization): each processAllAvailable otherwise
+    * appends one extra NO-DATA batch per data batch — a full execution
+    * of the stateful plan (state load/commit across every partition ×
+    * every stateful operator) whose only purpose is low-latency
+    * emission on an IDLE stream. Every st* protocol but st05's already
+    * closes windows through DATA batches (the two-sentinel discipline:
+    * "event-time timeouts fire batch N+1 after the batch-N watermark
+    * passes them"), so the emitted rows are identical — the DuckDB
+    * oracles pin that — and the per-entry wall drops by the cost of
+    * one stateful-plan execution per trigger (measured: st06 5.3→3.1
+    * s, st15 5.5→3.7, st27 7.3→5.2, st16 5.0→3.5, row counts equal).
+    * A throughput-oriented deployment sets exactly this knob; the
+    * latency-sensitive default stays untouched outside the scope.
     */
-  private def withShufflePartitions[T](s: SparkSession, n: Int,
-                                       noDataBatches: Boolean = false)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    // no-data micro-batches OFF for the bounded oracle feeds (round-16
-    // optimization): each processAllAvailable otherwise appends one
-    // extra NO-DATA batch per data batch — a full execution of the
-    // stateful plan (state load/commit across every partition × every
-    // stateful operator) whose only purpose is low-latency emission on
-    // an IDLE stream. Every st* protocol here already closes windows
-    // through DATA batches (the two-sentinel discipline: "event-time
-    // timeouts fire batch N+1 after the batch-N watermark passes
-    // them"), so the emitted rows are identical — the DuckDB oracles
-    // pin that — and the per-entry wall drops by the cost of one
-    // stateful-plan execution per trigger (measured: st06 5.3→3.1 s,
-    // st15 5.5→3.7, st27 7.3→5.2, st16 5.0→3.5, row counts equal).
-    // A throughput-oriented deployment sets exactly this knob; the
-    // latency-sensitive default stays untouched outside the scope.
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prev = s.conf.get(key)
-    val ndPrev = s.conf.get(ndKey)
-    s.conf.set(key, n.toString)
-    s.conf.set(ndKey, noDataBatches.toString)
-    try f finally {
-      s.conf.set(key, prev)
-      s.conf.set(ndKey, ndPrev)
+  private def feed(s: SparkSession, writer: => DataStreamWriter[_],
+                   conf: (String, String)*)(steps: (() => Any)*): Unit =
+    graft.core.GraftSession.withConf(s, Seq(
+        "spark.sql.shuffle.partitions" -> StreamPartitions.toString,
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") ++ conf: _*) {
+      val q = writer.start()
+      try steps.foreach { step => step(); q.processAllAvailable() }
+      finally q.stop()
+    }
+
+  /** `df` into the memory sink `name`, read back as `s.table(name)`. */
+  private def toMemory(df: Dataset[_], name: String, mode: String): DataStreamWriter[_] =
+    df.writeStream.format("memory").queryName(name).outputMode(mode)
+
+  /** One feed step per batch, each adding its batch to `in`. */
+  private def addEach[A](in: MemoryStream[A], batches: Seq[Seq[A]]): Seq[() => Any] =
+    batches.map(b => () => in.addData(b))
+
+  /** Three uneven batches (a third, then half of the rest, then the
+    * rest): totals and sketch state must accumulate across them.
+    */
+  private def thirds[A](rows: Seq[A]): Seq[Seq[A]] = {
+    val (a, rest) = rows.splitAt(rows.length / 3)
+    val (b, c) = rest.splitAt(rest.length / 2)
+    Seq(a, b, c)
+  }
+
+  // Fixtures shared by several entries, memoized per (shape, sf):
+  // deterministic batch derivation, so bench iterations 2..n feed
+  // identical data without re-paying the derivation job (VERDICT r11
+  // ask #8).
+
+  /** st01/st02: tmax and the derived histogram rows. */
+  private def histFixture(s: SparkSession, d: String): (Long, Seq[HistRow]) = {
+    import s.implicits._
+    graft.core.Scratch.cachedValue(s"st_hist_$d") {
+      val t0 = RefHistogram.tmax(s, d)
+      (t0, RefHistogram.derive(Tables.events(s, d), t0)
+        .as[HistRow].collect().toSeq)
     }
   }
 
-  private val StreamPartitions = 8
+  /** st08/st10/st20: (event_type, value in cents). */
+  private def typeValcFixture(s: SparkSession, d: String): Seq[(String, Long)] = {
+    import s.implicits._
+    graft.core.Scratch.cachedValue(s"st_type_valc_fixture_$d") {
+      Tables.events(s, d)
+        .select(col("event_type"),
+          round(col("value") * 100).cast("long").as("value_c"))
+        .as[(String, Long)].collect().toSeq
+    }
+  }
+
+  /** st06/st15/st26/st27: (event_id, user_id, sec). */
+  private def evUidFixture(s: SparkSession, d: String): Seq[(Long, Long, Long)] = {
+    import s.implicits._
+    graft.core.Scratch.cachedValue(s"st_ev_uid_fixture_$d") {
+      Tables.events(s, d)
+        .select(col("event_id"), col("user_id"), Tables.tsSec.as("sec"))
+        .as[(Long, Long, Long)].collect().toSeq
+    }
+  }
+
+  /** st14/st16: (user_id, sec, event_type). */
+  private def uidSecTypeFixture(s: SparkSession, d: String): Seq[(Long, Long, String)] = {
+    import s.implicits._
+    graft.core.Scratch.cachedValue(s"st_uid_sec_type_fixture_$d") {
+      Tables.events(s, d)
+        .select(col("user_id"), Tables.tsSec.as("sec"), col("event_type"))
+        .as[(Long, Long, String)].collect().toSeq
+    }
+  }
+
+  /** st04/st12/st29: the new documents (doc_id % 10 = 0). */
+  private def newDocsFixture(s: SparkSession, d: String): Seq[(Long, String)] = {
+    import s.implicits._
+    graft.core.Scratch.cachedValue(s"st_newdocs_fixture_$d") {
+      Tables.documents(s, d).select("doc_id", "text")
+        .filter(col("doc_id") % 10 === 0)
+        .as[(Long, String)].collect().toSeq
+    }
+  }
 
   /** Tumbling window width for st01 (1 day — the events table spans
     * weeks, so every key sees a sequence of windows).
@@ -89,33 +160,17 @@ object StreamingQueries {
       import s.implicits._
       implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
 
-      // fixture rows memoized per (shape, sf): deterministic batch
-      // derivation, so bench iterations 2..n feed identical data
-      // without re-paying the derivation job (VERDICT r11 ask #8)
-      val (t, rows) = graft.core.Scratch.cachedValue(s"st_hist_$d") {
-        val t0 = RefHistogram.tmax(s, d)
-        (t0, RefHistogram.derive(Tables.events(s, d), t0)
-          .as[HistRow].collect().toSeq)
-      }
+      val (t, rows) = histFixture(s, d)
       // far-future sentinel: advances the watermark past every real
       // window; its own window never closes → never emitted
       val sentinel = HistRow(t + 10 * WindowSec, 0L, -1, 0L, -1, -1L)
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[HistRow]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = StreamingDetect.detect(in.toDF(), WindowSec, watermarkDelaySec = 0L,
-            params = P)
-          .writeStream.format("memory").queryName("st01_alerts")
-          .outputMode("append").start()
-        try {
-          in.addData(rows) // batch 1: ingest everything, watermark 0
-          q.processAllAvailable()
-          in.addData(sentinel) // batch 2: watermark=tmax, closes all but last windows
-          q.processAllAvailable()
-          in.addData(sentinel) // batch 3: watermark=tmax+10W, closes the last windows
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      val in = MemoryStream[HistRow]
+      feed(s, toMemory(StreamingDetect.detect(in.toDF(), WindowSec,
+          watermarkDelaySec = 0L, params = P), "st01_alerts", "append"))(
+        () => in.addData(rows), // batch 1: ingest everything, watermark 0
+        () => in.addData(sentinel), // batch 2: watermark=tmax, closes all but last windows
+        () => in.addData(sentinel)) // batch 3: watermark=tmax+10W, closes the last windows
 
       s.table("st01_alerts")
         .orderBy("num_protocol", "type_proto", "dst_ip", "window_start")
@@ -132,28 +187,15 @@ object StreamingQueries {
       import s.implicits._
       implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
 
-      val (t, rows) = graft.core.Scratch.cachedValue(s"st_hist_$d") {
-        val t0 = RefHistogram.tmax(s, d)
-        (t0, RefHistogram.derive(Tables.events(s, d), t0)
-          .as[HistRow].collect().toSeq)
-      }
+      val (t, rows) = histFixture(s, d)
       val sentinel = HistRow(t + 10 * WindowSec, 0L, -1, 0L, -1, -1L)
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[HistRow]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = StreamingSpike.windowedAggregate(in.toDF(), WindowSec,
-            watermarkDelaySec = 0L)
-          .writeStream.format("memory").queryName("st02_windows")
-          .outputMode("append").start()
-        try {
-          in.addData(rows)
-          q.processAllAvailable()
-          in.addData(sentinel)
-          q.processAllAvailable()
-          in.addData(sentinel)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      val in = MemoryStream[HistRow]
+      feed(s, toMemory(StreamingSpike.windowedAggregate(in.toDF(), WindowSec,
+          watermarkDelaySec = 0L), "st02_windows", "append"))(
+        () => in.addData(rows),
+        () => in.addData(sentinel),
+        () => in.addData(sentinel))
 
       s.table("st02_windows")
         .orderBy("num_protocol", "type_proto", "dst_ip", "window_start")
@@ -177,22 +219,13 @@ object StreamingQueries {
           .as[Long].collect().toSeq
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().select(col("value").as("content_h"))
-          .dropDuplicates("content_h")
-          .writeStream.format("memory").queryName("st03_kept")
-          .outputMode("append").start()
-        try {
-          // two batches with an overlapping split: cross-batch dups must
-          // be suppressed by state, not just within-batch aggregation
-          val (a, b) = hashes.splitAt(hashes.length / 2)
-          in.addData(a)
-          q.processAllAvailable()
-          in.addData(b ++ a.take(10))
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      val in = MemoryStream[Long]
+      // two batches with an overlapping split: cross-batch dups must
+      // be suppressed by state, not just within-batch aggregation
+      val (a, b) = hashes.splitAt(hashes.length / 2)
+      feed(s, toMemory(in.toDF().select(col("value").as("content_h"))
+          .dropDuplicates("content_h"), "st03_kept", "append"))(
+        addEach(in, Seq(a, b ++ a.take(10))): _*)
 
       s.table("st03_kept").orderBy("content_h")
     }),
@@ -221,18 +254,14 @@ object StreamingQueries {
           .write.parquet(s"$r/index")
       }
       val index = s.read.parquet(s"$idxRoot/index").cache()
-      val newDocs = graft.core.Scratch.cachedValue(s"st_newdocs_fixture_$d") {
-        docs.filter(col("doc_id") % 10 === 0)
-          .as[(Long, String)].collect().toSeq
-      }
+      val (a, b) = newDocsFixture(s, d).partition(_._1 % 20 == 0)
 
       val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
+      val in = MemoryStream[(Long, String)]
       // stateless stream (foreachBatch), but the batch joins INSIDE the
       // sink run with the session's shuffle partitions — size them to
       // the micro-batch, not the 32-way batch default
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("doc_id", "text")
+      try feed(s, in.toDF().toDF("doc_id", "text")
           .writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             buf.synchronized {
@@ -241,19 +270,8 @@ object StreamingQueries {
                 .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
             }
             ()
-          }
-          .start()
-        try {
-          val (a, b) = newDocs.partition(_._1 % 20 == 0)
-          in.addData(a)
-          q.processAllAvailable()
-          in.addData(b)
-          q.processAllAvailable()
-        } finally {
-          q.stop()
-          index.unpersist()
-        }
-      }
+          })(addEach(in, Seq(a, b)): _*)
+      finally index.unpersist()
 
       buf.toSeq.toDF("new_id", "old_id", "n_match", "est_jaccard_e6")
         .orderBy("new_id", "old_id")
@@ -272,6 +290,13 @@ object StreamingQueries {
     // (expired state), plus in-batch duplicates of key 0 — dropped.
     // Output = both generations; deterministic because each (key,
     // generation) carries exactly one distinct timestamp.
+    // No-data micro-batches stay ON here, the one protocol that needs
+    // watermark-driven state action BETWEEN data batches: the re-sent
+    // generation arrives in the very next data batch and needs the
+    // eviction to have happened before it (dropDuplicatesWithinWatermark
+    // evicts at batch start from the PREVIOUS batch's watermark —
+    // without the no-data batch the re-sent generation would still see
+    // live state and drop).
     "st05_streaming_dedup_ttl" -> ((s, d) => {
       import s.implicits._
       implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
@@ -286,24 +311,16 @@ object StreamingQueries {
         keys.map(k => (k, t0 + k + offsetSec))
       val sentinel = (-1L, t0 + 5L * 86400L)
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-      withShufflePartitions(s, StreamPartitions, noDataBatches = true) {
-        val q = in.toDF().toDF("k", "sec")
+      val in = MemoryStream[(Long, Long)]
+      feed(s, toMemory(in.toDF().toDF("k", "sec")
           .select(col("k"), timestamp_seconds(col("sec")).as("ts"))
           .withWatermark("ts", "2 days")
           .dropDuplicatesWithinWatermark("k")
-          .select(col("k"), unix_timestamp(col("ts")).as("sec"))
-          .writeStream.format("memory").queryName("st05_kept")
-          .outputMode("append").start()
-        try {
-          in.addData(gen(0L) ++ gen(0L).take(10)) // batch 1 + in-batch dups (dropped)
-          q.processAllAvailable()
-          in.addData(sentinel) // watermark -> t0+5d: every entry expires (ttl 2d)
-          q.processAllAvailable()
-          in.addData(gen(10L * 86400L)) // same keys, next generation: kept
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+          .select(col("k"), unix_timestamp(col("ts")).as("sec")), "st05_kept", "append"),
+          "spark.sql.streaming.noDataMicroBatches.enabled" -> "true")(
+        () => in.addData(gen(0L) ++ gen(0L).take(10)), // batch 1 + in-batch dups (dropped)
+        () => in.addData(sentinel), // watermark -> t0+5d: every entry expires (ttl 2d)
+        () => in.addData(gen(10L * 86400L))) // same keys, next generation: kept
 
       s.table("st05_kept").filter(col("k") >= 0).orderBy("k", "sec")
     }),
@@ -321,45 +338,35 @@ object StreamingQueries {
       import s.implicits._
       implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
 
-      val ev = graft.core.Scratch.cachedValue(s"st_ev_uid_fixture_$d") {
-        Tables.events(s, d)
-          .select(col("event_id"), col("user_id"), Tables.tsSec.as("sec"))
-          .as[(Long, Long, Long)].collect().toSeq
-      }
-      val (evens, odds) = ev.partition(_._1 % 2 == 0)
+      val (evens, odds) = evUidFixture(s, d).partition(_._1 % 2 == 0)
 
-      val inL = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-      val inR = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-      withShufflePartitions(s, StreamPartitions) {
-        // the delay exceeds the feed's event-time span so no batch-2
-        // row is ever "late" (the engine drops late stream-stream
-        // inputs): state holds the full horizon here, which IS the
-        // knob — production sizes the delay to its real out-of-order
-        // bound and the state store holds only that window
+      val inL = MemoryStream[(Long, Long, Long)]
+      val inR = MemoryStream[(Long, Long, Long)]
+      // the delay exceeds the feed's event-time span so no batch-2
+      // row is ever "late" (the engine drops late stream-stream
+      // inputs): state holds the full horizon here, which IS the
+      // knob — production sizes the delay to its real out-of-order
+      // bound and the state store holds only that window
+      def matches = {
         val l = inL.toDF().toDF("l_event", "user_id", "l_sec")
           .withColumn("l_ts", timestamp_seconds(col("l_sec")))
           .withWatermark("l_ts", "400 days")
         val r = inR.toDF().toDF("r_event", "r_user", "r_sec")
           .withColumn("r_ts", timestamp_seconds(col("r_sec")))
           .withWatermark("r_ts", "400 days")
-        val q = l.join(r,
+        l.join(r,
             col("user_id") === col("r_user") &&
               col("r_ts") > col("l_ts") &&
               col("r_ts") <= col("l_ts") + expr("INTERVAL 1 HOUR"))
           .select("l_event", "r_event", "user_id", "l_sec", "r_sec")
-          .writeStream.format("memory").queryName("st06_matches")
-          .outputMode("append").start()
-        try {
-          // two batches per side with a cross-batch split: matches
-          // whose halves arrive in different batches must still pair
-          val (l1, l2) = evens.partition(_._1 % 4 == 0)
-          val (r1, r2) = odds.partition(_._1 % 4 == 1)
-          inL.addData(l1); inR.addData(r1)
-          q.processAllAvailable()
-          inL.addData(l2); inR.addData(r2)
-          q.processAllAvailable()
-        } finally q.stop()
       }
+      // two batches per side with a cross-batch split: matches
+      // whose halves arrive in different batches must still pair
+      val (l1, l2) = evens.partition(_._1 % 4 == 0)
+      val (r1, r2) = odds.partition(_._1 % 4 == 1)
+      feed(s, toMemory(matches, "st06_matches", "append"))(
+        () => { inL.addData(l1); inR.addData(r1) },
+        () => { inL.addData(l2); inR.addData(r2) })
 
       s.table("st06_matches").orderBy("l_event", "r_event")
     }),
@@ -387,9 +394,8 @@ object StreamingQueries {
       val tmax = rows.map(_._2).max
       val sentinel = (-1L, tmax + 100L * SessionGapSec)
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("user_id", "sec")
+      val in = MemoryStream[(Long, Long)]
+      feed(s, toMemory(in.toDF().toDF("user_id", "sec")
           .select(col("user_id"), timestamp_seconds(col("sec")).as("ts"))
           .withWatermark("ts", "0 seconds")
           .groupBy(session_window(col("ts"), s"$SessionGapSec seconds"), col("user_id"))
@@ -397,18 +403,10 @@ object StreamingQueries {
           .select(col("user_id"),
             unix_timestamp(col("session_window.start")).as("start_sec"),
             unix_timestamp(col("session_window.end")).as("end_sec"),
-            col("n_events"))
-          .writeStream.format("memory").queryName("st07_sessions")
-          .outputMode("append").start()
-        try {
-          in.addData(rows) // batch 1: everything, watermark 0
-          q.processAllAvailable()
-          in.addData(sentinel) // advance watermark past every session end
-          q.processAllAvailable()
-          in.addData(sentinel)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+            col("n_events")), "st07_sessions", "append"))(
+        () => in.addData(rows), // batch 1: everything, watermark 0
+        () => in.addData(sentinel), // advance watermark past every session end
+        () => in.addData(sentinel))
 
       s.table("st07_sessions").filter(col("user_id") >= 0)
         .orderBy("user_id", "start_sec")
@@ -427,29 +425,12 @@ object StreamingQueries {
       import s.implicits._
       implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
 
-      val rows = graft.core.Scratch.cachedValue(s"st_type_valc_fixture_$d") {
-        Tables.events(s, d)
-          .select(col("event_type"),
-            round(col("value") * 100).cast("long").as("value_c"))
-          .as[(String, Long)].collect().toSeq
-      }
-
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("event_type", "value_c")
+      val in = MemoryStream[(String, Long)]
+      feed(s, toMemory(in.toDF().toDF("event_type", "value_c")
           .groupBy("event_type")
-          .agg(count(lit(1)).as("n"), sum("value_c").as("sum_value_c"))
-          .writeStream.format("memory").queryName("st08_totals")
-          .outputMode("complete").start()
-        try {
-          // three uneven batches: totals must accumulate across them
-          val (a, rest) = rows.splitAt(rows.length / 3)
-          val (b, c) = rest.splitAt(rest.length / 2)
-          in.addData(a); q.processAllAvailable()
-          in.addData(b); q.processAllAvailable()
-          in.addData(c); q.processAllAvailable()
-        } finally q.stop()
-      }
+          .agg(count(lit(1)).as("n"), sum("value_c").as("sum_value_c")),
+          "st08_totals", "complete"))(
+        addEach(in, thirds(typeValcFixture(s, d))): _*)
 
       s.table("st08_totals").orderBy("event_type")
     }),
@@ -474,18 +455,11 @@ object StreamingQueries {
           .as[(Long, Long)].collect().toSeq
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("event_id", "user_id")
-          .join(broadcast(dim), "user_id")
-          .writeStream.format("memory").queryName("st09_enriched")
-          .outputMode("append").start()
-        try {
-          val (a, b) = rows.partition(_._1 % 2 == 0)
-          in.addData(a); q.processAllAvailable()
-          in.addData(b); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val in = MemoryStream[(Long, Long)]
+      val (a, b) = rows.partition(_._1 % 2 == 0)
+      feed(s, toMemory(in.toDF().toDF("event_id", "user_id")
+          .join(broadcast(dim), "user_id"), "st09_enriched", "append"))(
+        addEach(in, Seq(a, b)): _*)
 
       s.table("st09_enriched")
         .select(col("event_id"), col("user_id"), col("n_orders"))
@@ -505,36 +479,19 @@ object StreamingQueries {
       implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
-      val rows = graft.core.Scratch.cachedValue(s"st_type_valc_fixture_$d") {
-        Tables.events(s, d)
-          .select(col("event_type"),
-            round(col("value") * 100).cast("long").as("value_c"))
-          .as[(String, Long)].collect().toSeq
-      }
+      val rows = typeValcFixture(s, d)
       val keys = rows.map(_._1).distinct.sorted
 
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProvider = s.conf.getOption(providerKey)
-      s.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long, Boolean)]
-      try withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDS()
+      val in = MemoryStream[(String, Long, Boolean)]
+      feed(s, toMemory(in.toDS()
           .groupByKey(_._1)
           .transformWithState(new graft.streaming.RunningTotalsProcessor,
             TimeMode.None(), OutputMode.Append())
-          .toDF("event_type", "n", "sum_value_c")
-          .writeStream.format("memory").queryName("st10_totals")
-          .outputMode("append").start()
-        try {
-          in.addData(rows.map { case (k, v) => (k, v, false) })
-          q.processAllAvailable()
-          in.addData(keys.map(k => (k, 0L, true)))
-          q.processAllAvailable()
-        } finally q.stop()
-      } finally {
-        prevProvider.fold(s.conf.unset(providerKey))(v => s.conf.set(providerKey, v))
-      }
+          .toDF("event_type", "n", "sum_value_c"), "st10_totals", "append"),
+          "spark.sql.streaming.stateStore.providerClass" ->
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(
+        addEach(in, Seq(rows.map { case (k, v) => (k, v, false) },
+          keys.map(k => (k, 0L, true)))): _*)
 
       s.table("st10_totals").orderBy("event_type")
     }),
@@ -551,38 +508,37 @@ object StreamingQueries {
       implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       import org.apache.spark.sql.streaming.Trigger
 
-      withShufflePartitions(s, StreamPartitions) {
-        // A file stream needs a pinned schema, but ts's physical
-        // encoding has drifted across testdata generations (Long nanos
-        // vs TIMESTAMP(µs) — VERDICT r06). Probe the landing files'
-        // schema with a one-footer batch read (schema-on-read, like
-        // the reference) instead of hardcoding, then canonicalize ts
-        // with the same Tables.normalizeTs every batch path uses. The
-        // file source's base path must be a DIRECTORY — the landing
-        // dir is the sf dir with a glob pinning this stream to its
-        // table.
-        // If nothing has landed yet the probe read can't infer a schema
-        // (ADVICE r7) — fall back to the canonical BIGINT-nanos layout
-        // so the stream starts empty and picks up files as they arrive,
-        // the production file-stream posture this query documents.
+      // A file stream needs a pinned schema, but ts's physical
+      // encoding has drifted across testdata generations (Long nanos
+      // vs TIMESTAMP(µs) — VERDICT r06). Probe the landing files'
+      // schema with a one-footer batch read (schema-on-read, like
+      // the reference) instead of hardcoding, then canonicalize ts
+      // with the same Tables.normalizeTs every batch path uses. The
+      // file source's base path must be a DIRECTORY — the landing
+      // dir is the sf dir with a glob pinning this stream to its
+      // table.
+      // If nothing has landed yet the probe read can't infer a schema
+      // (ADVICE r7) — fall back to the canonical BIGINT-nanos layout
+      // so the stream starts empty and picks up files as they arrive,
+      // the production file-stream posture this query documents.
+      def totals = {
         val landedSchema = scala.util.Try(s.read
             .option("pathGlobFilter", "events.parquet").parquet(d).schema)
           .getOrElse(org.apache.spark.sql.types.StructType.fromDDL(
             "event_id BIGINT, ts BIGINT, user_id BIGINT, " +
               "event_type STRING, value DOUBLE, props STRING"))
-        val q = Tables.normalizeTs(s.readStream
+        Tables.normalizeTs(s.readStream
             .schema(landedSchema)
             .option("pathGlobFilter", "events.parquet")
             .parquet(d))
           .groupBy("event_type")
           .agg(count(lit(1)).as("n"),
             sum(round(col("value") * 100).cast("long")).as("sum_value_c"))
-          .writeStream.format("memory").queryName("st11_totals")
-          .outputMode("complete")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination(120000L) finally q.stop()
       }
+      // nothing to add: the files have landed, and feed's wait after
+      // the one empty step returns once AvailableNow has drained them
+      feed(s, toMemory(totals, "st11_totals", "complete")
+          .trigger(Trigger.AvailableNow()))(() => ())
 
       s.table("st11_totals").orderBy("event_type")
     }),
@@ -610,15 +566,11 @@ object StreamingQueries {
           .write.parquet(s"$r/fps")
       }
       val index = s.read.parquet(s"$idxRoot/fps").cache()
-      val newDocs = graft.core.Scratch.cachedValue(s"st_newdocs_fixture_$d") {
-        docs.filter(col("doc_id") % 10 === 0)
-          .as[(Long, String)].collect().toSeq
-      }
+      val (a, b) = newDocsFixture(s, d).partition(_._1 % 20 == 0)
 
       val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("doc_id", "text")
+      val in = MemoryStream[(Long, String)]
+      try feed(s, in.toDF().toDF("doc_id", "text")
           .writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             buf.synchronized {
@@ -627,19 +579,8 @@ object StreamingQueries {
                 .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
             }
             ()
-          }
-          .start()
-        try {
-          val (a, b) = newDocs.partition(_._1 % 20 == 0)
-          in.addData(a)
-          q.processAllAvailable()
-          in.addData(b)
-          q.processAllAvailable()
-        } finally {
-          q.stop()
-          index.unpersist()
-        }
-      }
+          })(addEach(in, Seq(a, b)): _*)
+      finally index.unpersist()
 
       buf.toSeq.toDF("new_id", "old_id", "n_shared")
         .orderBy("new_id", "old_id")
@@ -667,19 +608,12 @@ object StreamingQueries {
         toks.as[String].collect().toSeq
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[String]
-      withShufflePartitions(s, StreamPartitions) {
-        val mg = udaf(new graft.functions.MisraGriesAggregator(mgK))
-        val q = in.toDF().toDF("w")
-          .agg(count(lit(1)).as("n_total"), mg(col("w")).as("cands"))
-          .writeStream.format("memory").queryName("st13_sketch")
-          .outputMode("complete").start()
-        try {
-          fed.grouped(fed.size / 3 + 1).foreach { b =>
-            in.addData(b); q.processAllAvailable()
-          }
-        } finally q.stop()
-      }
+      val in = MemoryStream[String]
+      val mg = udaf(new graft.functions.MisraGriesAggregator(mgK))
+      feed(s, toMemory(in.toDF().toDF("w")
+          .agg(count(lit(1)).as("n_total"), mg(col("w")).as("cands")),
+          "st13_sketch", "complete"))(
+        addEach(in, fed.grouped(fed.size / 3 + 1).toSeq): _*)
 
       val cand = s.table("st13_sketch")
         .select(col("n_total"), explode(col("cands")).as("w"))
@@ -703,19 +637,14 @@ object StreamingQueries {
       import s.implicits._
       implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
 
-      val rows = graft.core.Scratch.cachedValue(s"st_uid_sec_type_fixture_$d") {
-        Tables.events(s, d)
-          .select(col("user_id"), Tables.tsSec.as("sec"), col("event_type"))
-          .as[(Long, Long, String)].collect().toSeq
-      }
+      val rows = uidSecTypeFixture(s, d)
       val tmax = rows.map(_._2).max
       val sentinel = (-1L, tmax + 100L * 7200L, "view")
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, String)]
-      withShufflePartitions(s, StreamPartitions) {
-        val gap = when(col("event_type") === "purchase", lit("7200 seconds"))
-          .otherwise(lit("1800 seconds"))
-        val q = in.toDF().toDF("user_id", "sec", "event_type")
+      val in = MemoryStream[(Long, Long, String)]
+      val gap = when(col("event_type") === "purchase", lit("7200 seconds"))
+        .otherwise(lit("1800 seconds"))
+      feed(s, toMemory(in.toDF().toDF("user_id", "sec", "event_type")
           .select(col("user_id"), timestamp_seconds(col("sec")).as("ts"),
             col("event_type"))
           .withWatermark("ts", "0 seconds")
@@ -724,18 +653,10 @@ object StreamingQueries {
           .select(col("user_id"),
             unix_timestamp(col("session_window.start")).as("start_sec"),
             unix_timestamp(col("session_window.end")).as("end_sec"),
-            col("n_events"))
-          .writeStream.format("memory").queryName("st14_sessions")
-          .outputMode("append").start()
-        try {
-          in.addData(rows) // batch 1: everything, watermark 0
-          q.processAllAvailable()
-          in.addData(sentinel) // advance watermark past every session end
-          q.processAllAvailable()
-          in.addData(sentinel)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+            col("n_events")), "st14_sessions", "append"))(
+        () => in.addData(rows), // batch 1: everything, watermark 0
+        () => in.addData(sentinel), // advance watermark past every session end
+        () => in.addData(sentinel))
 
       s.table("st14_sessions").filter(col("user_id") >= 0)
         .orderBy("user_id", "start_sec")
@@ -756,46 +677,36 @@ object StreamingQueries {
       import s.implicits._
       implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
 
-      val ev = graft.core.Scratch.cachedValue(s"st_ev_uid_fixture_$d") {
-        Tables.events(s, d)
-          .select(col("event_id"), col("user_id"), Tables.tsSec.as("sec"))
-          .as[(Long, Long, Long)].collect().toSeq
-      }
+      val ev = evUidFixture(s, d)
       val (evens, odds) = ev.partition(_._1 % 2 == 0)
       val tmax = ev.map(_._3).max
       val sentinelL = (-2L, -1L, tmax + 100L * 3600L)
       val sentinelR = (-3L, -1L, tmax + 100L * 3600L)
 
-      val inL = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-      val inR = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-      withShufflePartitions(s, StreamPartitions) {
-        // small delay: all real rows arrive in batch 1 (watermark
-        // still at its initial floor, nothing is late); the sentinel
-        // batch then jumps the watermark past max(l_ts)+1h, closing
-        // every left row's horizon
+      val inL = MemoryStream[(Long, Long, Long)]
+      val inR = MemoryStream[(Long, Long, Long)]
+      // small delay: all real rows arrive in batch 1 (watermark
+      // still at its initial floor, nothing is late); the sentinel
+      // batch then jumps the watermark past max(l_ts)+1h, closing
+      // every left row's horizon
+      def matches = {
         val l = inL.toDF().toDF("l_event", "user_id", "l_sec")
           .withColumn("l_ts", timestamp_seconds(col("l_sec")))
           .withWatermark("l_ts", "10 seconds")
         val r = inR.toDF().toDF("r_event", "r_user", "r_sec")
           .withColumn("r_ts", timestamp_seconds(col("r_sec")))
           .withWatermark("r_ts", "10 seconds")
-        val q = l.join(r,
+        l.join(r,
             col("user_id") === col("r_user") &&
               col("r_ts") > col("l_ts") &&
               col("r_ts") <= col("l_ts") + expr("INTERVAL 1 HOUR"),
             "left_outer")
           .select("l_event", "user_id", "l_sec", "r_event", "r_sec")
-          .writeStream.format("memory").queryName("st15_matches")
-          .outputMode("append").start()
-        try {
-          inL.addData(evens); inR.addData(odds)
-          q.processAllAvailable()
-          inL.addData(sentinelL); inR.addData(sentinelR)
-          q.processAllAvailable()
-          inL.addData(sentinelL); inR.addData(sentinelR)
-          q.processAllAvailable()
-        } finally q.stop()
       }
+      feed(s, toMemory(matches, "st15_matches", "append"))(
+        () => { inL.addData(evens); inR.addData(odds) },
+        () => { inL.addData(sentinelL); inR.addData(sentinelR) },
+        () => { inL.addData(sentinelL); inR.addData(sentinelR) })
 
       s.table("st15_matches").filter(col("l_event") >= 0)
         .orderBy("l_event", "r_event")
@@ -815,17 +726,12 @@ object StreamingQueries {
       import s.implicits._
       implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
 
-      val rows = graft.core.Scratch.cachedValue(s"st_uid_sec_type_fixture_$d") {
-        Tables.events(s, d)
-          .select(col("user_id"), Tables.tsSec.as("sec"), col("event_type"))
-          .as[(Long, Long, String)].collect().toSeq
-      }
+      val rows = uidSecTypeFixture(s, d)
       val tmax = rows.map(_._2).max
       val sentinel = (-1L, tmax + 100L * 3600L, "view")
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, String)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("user_id", "sec", "event_type")
+      val in = MemoryStream[(Long, Long, String)]
+      feed(s, toMemory(in.toDF().toDF("user_id", "sec", "event_type")
           .select(timestamp_seconds(col("sec")).as("ts"), col("event_type"))
           .withWatermark("ts", "0 seconds")
           .groupBy(window(col("ts"), "300 seconds"), col("event_type"))
@@ -833,18 +739,10 @@ object StreamingQueries {
           .groupBy(window(col("window"), "3600 seconds"), col("event_type"))
           .agg(sum("n5").as("n"), max("n5").as("peak5"))
           .select(unix_timestamp(col("window.start")).as("hour_start"),
-            col("event_type"), col("n"), col("peak5"))
-          .writeStream.format("memory").queryName("st16_rollup")
-          .outputMode("append").start()
-        try {
-          in.addData(rows)
-          q.processAllAvailable()
-          in.addData(sentinel)
-          q.processAllAvailable()
-          in.addData(sentinel)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+            col("event_type"), col("n"), col("peak5")), "st16_rollup", "append"))(
+        () => in.addData(rows),
+        () => in.addData(sentinel),
+        () => in.addData(sentinel))
 
       // the sentinel's own (still-open) windows never emit; guard by
       // horizon anyway so a re-run against drifted data stays exact
@@ -887,18 +785,13 @@ object StreamingQueries {
       // eager localCheckpoint per fold: the next batch's merge reads a
       // MATERIALIZED snapshot, not a growing lineage of window passes
       @volatile var snap = base.localCheckpoint(true)
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long, Long, String)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("o_orderkey", "o_custkey", "price_c", "ver", "op")
+      val in = MemoryStream[(Long, Long, Long, Long, String)]
+      feed(s, in.toDF().toDF("o_orderkey", "o_custkey", "price_c", "ver", "op")
           .writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             snap = SnapshotMerge(snap, batch, Seq("o_orderkey"), "ver", "op")
               .localCheckpoint(true)
-          }
-          .start()
-        try batches.foreach { b => in.addData(b); q.processAllAvailable() }
-        finally q.stop()
-      }
+          })(addEach(in, batches): _*)
       snap.orderBy("o_orderkey")
     }),
 
@@ -922,23 +815,16 @@ object StreamingQueries {
         Tables.documents(s, d).select(col("doc_id"), col("source"))
           .as[(Long, String)].collect().toSeq
       }
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("doc_id", "source")
+      val in = MemoryStream[(Long, String)]
+      val (b1, b2) = rows.splitAt(rows.size / 2)
+      feed(s, toMemory(in.toDF().toDF("doc_id", "source")
           .select(col("source"),
             graft.llm.TextFunctions.hash60(
               concat(lit("quota:"), col("doc_id").cast("string"))).as("score"),
             col("doc_id").as("id"))
           .groupBy("source")
-          .agg(topk(col("score"), col("id")).as("kept"))
-          .writeStream.format("memory").queryName("st18_quota")
-          .outputMode("complete").start()
-        try {
-          val (b1, b2) = rows.splitAt(rows.size / 2)
-          in.addData(b1); q.processAllAvailable()
-          in.addData(b2); q.processAllAvailable()
-        } finally q.stop()
-      }
+          .agg(topk(col("score"), col("id")).as("kept")), "st18_quota", "complete"))(
+        addEach(in, Seq(b1, b2)): _*)
       s.table("st18_quota")
         .select(col("source"), posexplode(col("kept")).as(Seq("pos", "t")))
         .select(col("source"), col("t.id").as("doc_id"),
@@ -968,24 +854,14 @@ object StreamingQueries {
           .as[(String, Long)].collect().toSeq
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("event_type", "user_id")
+      val in = MemoryStream[(String, Long)]
+      // three uneven batches: the sketch state must merge across
+      // them into the same set-function a single batch would give
+      feed(s, toMemory(in.toDF().toDF("event_type", "user_id")
           .groupBy("event_type")
           .agg(hll_sketch_agg(col("user_id"), 12).as("sk"),
-            count(lit(1)).as("n"))
-          .writeStream.format("memory").queryName("st19_uniques")
-          .outputMode("complete").start()
-        try {
-          // three uneven batches: the sketch state must merge across
-          // them into the same set-function a single batch would give
-          val (a, rest) = rows.splitAt(rows.length / 3)
-          val (b, c) = rest.splitAt(rest.length / 2)
-          in.addData(a); q.processAllAvailable()
-          in.addData(b); q.processAllAvailable()
-          in.addData(c); q.processAllAvailable()
-        } finally q.stop()
-      }
+            count(lit(1)).as("n")), "st19_uniques", "complete"))(
+        addEach(in, thirds(rows)): _*)
 
       val exact = graft.core.Scratch.cachedFrame(s, s"st19_exact_$d") {
         Tables.events(s, d).groupBy("event_type")
@@ -1014,28 +890,11 @@ object StreamingQueries {
       val Gamma = 1.04
       val QsE6 = Seq(500000L, 950000L, 990000L)
 
-      val rows = graft.core.Scratch.cachedValue(s"st_type_valc_fixture_$d") {
-        Tables.events(s, d)
-          .select(col("event_type"),
-            round(col("value") * 100).cast("long").as("value_c"))
-          .as[(String, Long)].collect().toSeq
-      }
-
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = graft.operators.DdSketch.sketch(
-            in.toDF().toDF("event_type", "value_c"),
-            Seq("event_type"), "value_c", Gamma)
-          .writeStream.format("memory").queryName("st20_sketch")
-          .outputMode("complete").start()
-        try {
-          val (a, rest) = rows.splitAt(rows.length / 3)
-          val (b, c) = rest.splitAt(rest.length / 2)
-          in.addData(a); q.processAllAvailable()
-          in.addData(b); q.processAllAvailable()
-          in.addData(c); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val in = MemoryStream[(String, Long)]
+      feed(s, toMemory(graft.operators.DdSketch.sketch(
+          in.toDF().toDF("event_type", "value_c"),
+          Seq("event_type"), "value_c", Gamma), "st20_sketch", "complete"))(
+        addEach(in, thirds(typeValcFixture(s, d))): _*)
 
       val est = graft.operators.DdSketch.quantiles(
           s.table("st20_sketch"), Seq("event_type"), QsE6)
@@ -1087,22 +946,12 @@ object StreamingQueries {
           .as[(String, String)].collect().toSeq
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, String)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("event_type", "ud")
+      val in = MemoryStream[(String, String)]
+      feed(s, toMemory(in.toDF().toDF("event_type", "ud")
           .select(col("event_type"), hash63(col("ud")).as("h"))
           .groupBy("event_type")
-          .agg(kmv(col("h")).as("sk"), count(lit(1)).as("n"))
-          .writeStream.format("memory").queryName("st21_theta")
-          .outputMode("complete").start()
-        try {
-          val (a, rest) = rows.splitAt(rows.length / 3)
-          val (b, c) = rest.splitAt(rest.length / 2)
-          in.addData(a); q.processAllAvailable()
-          in.addData(b); q.processAllAvailable()
-          in.addData(c); q.processAllAvailable()
-        } finally q.stop()
-      }
+          .agg(kmv(col("h")).as("sk"), count(lit(1)).as("n")), "st21_theta", "complete"))(
+        addEach(in, thirds(rows)): _*)
 
       def ud = Tables.events(s, d)
         .select(col("event_type"), col("user_id"), dayCol.as("day"))
@@ -1168,19 +1017,10 @@ object StreamingQueries {
           .filter(col("l_orderkey") % 4 === 0)
           .as[Long].collect().toSeq
       }
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = CmSketch.sketch(in.toDF().toDF("k"), col("k"), "cnt_a", w = W)
-          .writeStream.format("memory").queryName("st22_cm")
-          .outputMode("complete").start()
-        try {
-          val (a, rest) = rows.splitAt(rows.length / 3)
-          val (b, c) = rest.splitAt(rest.length / 2)
-          in.addData(a); q.processAllAvailable()
-          in.addData(b); q.processAllAvailable()
-          in.addData(c); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val in = MemoryStream[Long]
+      feed(s, toMemory(CmSketch.sketch(in.toDF().toDF("k"), col("k"), "cnt_a", w = W),
+          "st22_cm", "complete"))(
+        addEach(in, thirds(rows)): _*)
       // comparison fixtures memoized per sf: the static dim sketch and
       // the exact join count are deterministic batch frames the entry
       // only COMPARES against — the streamed sketch is what the entry
@@ -1233,9 +1073,8 @@ object StreamingQueries {
         ord.as[(Long, Long)].collect().toSeq
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("month_sec", "o_custkey")
+      val in = MemoryStream[(Long, Long)]
+      feed(s, in.toDF().toDF("month_sec", "o_custkey")
           .writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             // write-optimized staging append: one flat file per batch
@@ -1245,16 +1084,7 @@ object StreamingQueries {
             graft.operators.SketchIndex.appendStaged(
               batch, "month_sec", "o_custkey", idx, K)
             ()
-          }
-          .start()
-        try {
-          val (a, rest) = rows.splitAt(rows.length / 3)
-          val (b, c) = rest.splitAt(rest.length / 2)
-          in.addData(a); q.processAllAvailable()
-          in.addData(b); q.processAllAvailable()
-          in.addData(c); q.processAllAvailable()
-        } finally q.stop()
-      }
+          })(addEach(in, thirds(rows)): _*)
 
       // the nightly COMPACTION pass a long-running stream needs
       // (VERDICT r9 ask #1): fold each month's accumulated partials
@@ -1303,22 +1133,13 @@ object StreamingQueries {
           .as[(String, Long)].collect().toSeq
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = graft.operators.SaltedAgg.collectSetSharded(
-            in.toDF().toDF("event_type", "uid_bucket"),
-            Seq("event_type"), "uid_bucket",
-            shardExpr = pmod(col("uid_bucket"), lit(4)), out = "uniq")
-          .writeStream.format("memory").queryName("st24_sharded")
-          .outputMode("complete").start()
-        try {
-          val (a, rest) = rows.splitAt(rows.length / 3)
-          val (b, c) = rest.splitAt(rest.length / 2)
-          in.addData(a); q.processAllAvailable()
-          in.addData(b); q.processAllAvailable()
-          in.addData(c); q.processAllAvailable()
-        } finally q.stop()
-      }
+      val in = MemoryStream[(String, Long)]
+      feed(s, toMemory(graft.operators.SaltedAgg.collectSetSharded(
+          in.toDF().toDF("event_type", "uid_bucket"),
+          Seq("event_type"), "uid_bucket",
+          shardExpr = pmod(col("uid_bucket"), lit(4)), out = "uniq"),
+          "st24_sharded", "complete"))(
+        addEach(in, thirds(rows)): _*)
 
       s.table("st24_sharded")
         .withColumnRenamed("__shard", "shard")
@@ -1354,9 +1175,9 @@ object StreamingQueries {
           .as[(Long, Long, String, Long)].collect().toSeq
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, String, Long)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("l_partkey", "l_suppkey", "l_returnflag", "qty")
+      val in = MemoryStream[(Long, Long, String, Long)]
+      val Seq(a, b, c) = thirds(rows)
+      feed(s, in.toDF().toDF("l_partkey", "l_suppkey", "l_returnflag", "qty")
           .writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             val before = ZoneMap.dataFiles(s, table).toSet
@@ -1366,21 +1187,14 @@ object StreamingQueries {
             val landed = ZoneMap.dataFiles(s, table).filterNot(before)
             ZoneMap.appendStats(s, landed, Seq("l_partkey", "l_suppkey"), zm)
             ()
-          }
-          .start()
-        try {
-          val (a, rest) = rows.splitAt(rows.length / 3)
-          val (b, c) = rest.splitAt(rest.length / 2)
-          in.addData(a); q.processAllAvailable()
-          in.addData(b); q.processAllAvailable()
-          // the nightly pass while the stream is quiescent: fold the
-          // per-batch stats files to one (per-file facts — a pure
-          // rewrite); the third batch appends AFTER compaction, so
-          // the probe reads the compacted ∪ appended map
-          ZoneMap.compactStats(s, zm)
-          in.addData(c); q.processAllAvailable()
-        } finally q.stop()
-      }
+          })(
+        () => in.addData(a),
+        () => in.addData(b),
+        // the nightly pass while the stream is quiescent: fold the
+        // per-batch stats files to one (per-file facts — a pure
+        // rewrite); the third batch appends AFTER compaction, so
+        // the probe reads the compacted ∪ appended map
+        () => { ZoneMap.compactStats(s, zm); in.addData(c) })
 
       val box = Seq(Range("l_partkey", 10, 400), Range("l_suppkey", 1, 40))
       ZoneMap.readPruned(s, table, zm, box)
@@ -1404,11 +1218,6 @@ object StreamingQueries {
       implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
       import graft.streaming.{TemporalJoin, TemporalRow}
 
-      val probes = graft.core.Scratch.cachedValue(s"st_ev_uid_fixture_$d") {
-        Tables.events(s, d)
-          .select(col("event_id"), col("user_id"), Tables.tsSec.as("sec"))
-          .as[(Long, Long, Long)].collect().toSeq
-      }
       val dims = graft.core.Scratch.cachedValue(s"st26_dims_fixture_$d") {
         Tables.orders(s, d)
           .groupBy(col("o_custkey"),
@@ -1417,26 +1226,19 @@ object StreamingQueries {
           .as[(Long, Long, Long)].collect().toSeq
       }
       val rows: Seq[TemporalRow] =
-        probes.map(p => TemporalRow(p._2, is_dim = false, p._1, p._3)) ++
+        evUidFixture(s, d).map(p => TemporalRow(p._2, is_dim = false, p._1, p._3)) ++
           dims.map(v => TemporalRow(v._1, is_dim = true, v._3, v._2))
       val mid = (rows.map(_.sec).min + rows.map(_.sec).max) / 2
       val far = rows.map(_.sec).max + 1000000L
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[TemporalRow]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = TemporalJoin.join(in.toDF(), watermarkDelaySec = 1)
-          .writeStream.format("memory").queryName("st26_matches")
-          .outputMode("append").start()
-        try {
-          val (b1, b2) = rows.partition(_.sec < mid)
-          in.addData(b1); q.processAllAvailable()
-          in.addData(b2); q.processAllAvailable()
-          in.addData(TemporalRow(-1L, is_dim = true, -1L, far))
-          q.processAllAvailable()
-          in.addData(TemporalRow(-1L, is_dim = true, -2L, far + 10))
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+      val in = MemoryStream[TemporalRow]
+      val (b1, b2) = rows.partition(_.sec < mid)
+      feed(s, toMemory(TemporalJoin.join(in.toDF(), watermarkDelaySec = 1),
+          "st26_matches", "append"))(
+        () => in.addData(b1),
+        () => in.addData(b2),
+        () => in.addData(TemporalRow(-1L, is_dim = true, -1L, far)),
+        () => in.addData(TemporalRow(-1L, is_dim = true, -2L, far + 10)))
 
       s.table("st26_matches")
         .select(col("event_id"), col("user_id"), col("evt_sec"),
@@ -1460,42 +1262,32 @@ object StreamingQueries {
       import s.implicits._
       implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
 
-      val ev = graft.core.Scratch.cachedValue(s"st_ev_uid_fixture_$d") {
-        Tables.events(s, d)
-          .select(col("event_id"), col("user_id"), Tables.tsSec.as("sec"))
-          .as[(Long, Long, Long)].collect().toSeq
-      }
+      val ev = evUidFixture(s, d)
       val (evens, odds) = ev.partition(_._1 % 2 == 0)
       val tmax = ev.map(_._3).max
       val sentinelL = (-2L, -1L, tmax + 100L * 3600L)
       val sentinelR = (-3L, -1L, tmax + 100L * 3600L)
 
-      val inL = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-      val inR = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long, Long)]
-      withShufflePartitions(s, StreamPartitions) {
+      val inL = MemoryStream[(Long, Long, Long)]
+      val inR = MemoryStream[(Long, Long, Long)]
+      def matches = {
         val l = inL.toDF().toDF("l_event", "l_user", "l_sec")
           .withColumn("l_ts", timestamp_seconds(col("l_sec")))
           .withWatermark("l_ts", "10 seconds")
         val r = inR.toDF().toDF("r_event", "r_user", "r_sec")
           .withColumn("r_ts", timestamp_seconds(col("r_sec")))
           .withWatermark("r_ts", "10 seconds")
-        val q = l.join(r,
+        l.join(r,
             col("l_user") === col("r_user") &&
               col("r_ts") > col("l_ts") &&
               col("r_ts") <= col("l_ts") + expr("INTERVAL 1 HOUR"),
             "full_outer")
           .select("l_event", "l_user", "l_sec", "r_event", "r_user", "r_sec")
-          .writeStream.format("memory").queryName("st27_matches")
-          .outputMode("append").start()
-        try {
-          inL.addData(evens); inR.addData(odds)
-          q.processAllAvailable()
-          inL.addData(sentinelL); inR.addData(sentinelR)
-          q.processAllAvailable()
-          inL.addData(sentinelL); inR.addData(sentinelR)
-          q.processAllAvailable()
-        } finally q.stop()
       }
+      feed(s, toMemory(matches, "st27_matches", "append"))(
+        () => { inL.addData(evens); inR.addData(odds) },
+        () => { inL.addData(sentinelL); inR.addData(sentinelR) },
+        () => { inL.addData(sentinelL); inR.addData(sentinelR) })
 
       s.table("st27_matches")
         .filter((col("l_event").isNull || col("l_event") >= 0) &&
@@ -1530,9 +1322,9 @@ object StreamingQueries {
           .as[(Long, String, String, String, Long)].collect().toSeq
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String, String, String, Long)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
+      val in = MemoryStream[(Long, String, String, String, Long)]
+      val Seq(a, b, c) = thirds(rows)
+      feed(s, in.toDF().toDF("doc_id", "text", "lang", "source", "n_chars")
           .writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             val before = ZoneMap.dataFiles(s, table).toSet
@@ -1541,20 +1333,13 @@ object StreamingQueries {
             val landed = ZoneMap.dataFiles(s, table).filterNot(before)
             FileBloom.appendStats(s, landed, "doc_id", bm, m = 8192, k = 4)
             ()
-          }
-          .start()
-        try {
-          val (a, rest) = rows.splitAt(rows.length / 3)
-          val (b, c) = rest.splitAt(rest.length / 2)
-          in.addData(a); q.processAllAvailable()
-          in.addData(b); q.processAllAvailable()
-          // the nightly pass while the stream is quiescent; the third
-          // batch appends AFTER compaction, so the probe reads the
-          // compacted ∪ appended index
-          FileBloom.compactStats(s, bm)
-          in.addData(c); q.processAllAvailable()
-        } finally q.stop()
-      }
+          })(
+        () => in.addData(a),
+        () => in.addData(b),
+        // the nightly pass while the stream is quiescent; the third
+        // batch appends AFTER compaction, so the probe reads the
+        // compacted ∪ appended index
+        () => { FileBloom.compactStats(s, bm); in.addData(c) })
 
       FileBloom.readPruned(s, table, bm, "doc_id",
           Seq(lit(7L), lit(233L), lit(481L)))
@@ -1598,15 +1383,12 @@ object StreamingQueries {
       }
       var labels = s.read.parquet(s"$root/labels")
       var index = s.read.parquet(s"$root/index")
-      val newDocs = graft.core.Scratch.cachedValue(s"st_newdocs_fixture_$d") {
-        Tables.documents(s, d).select("doc_id", "text")
-          .filter(col("doc_id") % 10 === 0)
-          .as[(Long, String)].collect().toSeq
-      }
+      // the split puts same-signature duplicates in DIFFERENT
+      // batches, so the accumulating index is load-bearing
+      val (a, b) = newDocsFixture(s, d).partition(_._1 % 20 == 0)
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, String)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("doc_id", "text")
+      val in = MemoryStream[(Long, String)]
+      feed(s, in.toDF().toDF("doc_id", "text")
           .writeStream
           .foreachBatch { (batch0: org.apache.spark.sql.DataFrame, _: Long) =>
             // ONE text→signature pass per batch: the probe, the
@@ -1639,18 +1421,7 @@ object StreamingQueries {
                 Dedup.bandIndexDistinctFromSigs(batchSigs, "doc_id"), "doc_id")
               .localCheckpoint(true)
             ()
-          }
-          .start()
-        try {
-          // the split puts same-signature duplicates in DIFFERENT
-          // batches, so the accumulating index is load-bearing
-          val (a, b) = newDocs.partition(_._1 % 20 == 0)
-          in.addData(a)
-          q.processAllAvailable()
-          in.addData(b)
-          q.processAllAvailable()
-        } finally q.stop()
-      }
+          })(addEach(in, Seq(a, b)): _*)
 
       labels.select(col("node").as("doc_id"), col("label").as("cluster_rep"))
         .orderBy("doc_id")
@@ -1710,7 +1481,7 @@ object StreamingQueries {
       // tombstone-of-absent edge; they land live via the second add)
       // — the final live set is unchanged, so the oracle predicate is
       // the same as before ADVICE r14's fix
-      val feed = graft.core.Scratch.cachedValue(s"st30_feed_fixture_$d") {
+      val batches = graft.core.Scratch.cachedValue(s"st30_feed_fixture_$d") {
         val docs = Tables.documents(s, d).select("doc_id", "text")
           .as[(Long, String)].collect()
         val a1 = docs.filter(_._1 % 20 == 0).map { case (i, t) => ("add", i, t) }
@@ -1720,9 +1491,8 @@ object StreamingQueries {
         Seq(a1.toSeq, del.toSeq, a2.toSeq)
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long, String)]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("op", "doc_id", "text")
+      val in = MemoryStream[(String, Long, String)]
+      feed(s, in.toDF().toDF("op", "doc_id", "text")
           .writeStream
           .foreachBatch { (batch0: org.apache.spark.sql.DataFrame, _: Long) =>
             val batch = batch0.localCheckpoint(true)
@@ -1779,12 +1549,7 @@ object StreamingQueries {
                 .localCheckpoint(true)
             }
             ()
-          }
-          .start()
-        try {
-          feed.foreach { b => in.addData(b); q.processAllAvailable() }
-        } finally q.stop()
-      }
+          })(addEach(in, batches): _*)
 
       graft.llm.LabelStore.read(s, store)
         .select(col("node").as("doc_id"), col("label").as("cluster_rep"))
@@ -1822,7 +1587,7 @@ object StreamingQueries {
       // the re-ingest feed, exactly x91's corpus arithmetic: 2×
       // nearest-neighbor upscales (+1M) and one corrupted sample per
       // 5th asset (+2M, the splice at 1-D sample 30's position)
-      val feed = graft.core.Scratch.cachedValue(s"st31_feed_fixture_$d") {
+      val batches = graft.core.Scratch.cachedValue(s"st31_feed_fixture_$d") {
         val base = Tables.documents(s, d).select("doc_id", "text")
           .as[(Long, String)].collect().toSeq
         def upscale(t: String): Array[Byte] = {
@@ -1841,9 +1606,8 @@ object StreamingQueries {
         Seq(rend, corr)
       }
 
-      val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Array[Byte])]
-      withShufflePartitions(s, StreamPartitions) {
-        val q = in.toDF().toDF("doc_id", "media")
+      val in = MemoryStream[(Long, Array[Byte])]
+      feed(s, in.toDF().toDF("doc_id", "media")
           .writeStream
           .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
             val before = graft.operators.ZoneMap.dataFiles(s, table).toSet
@@ -1851,11 +1615,7 @@ object StreamingQueries {
             idx.append(s,
               graft.operators.ZoneMap.dataFiles(s, table).filterNot(before))
             ()
-          }
-          .start()
-        try feed.foreach { b => in.addData(b); q.processAllAvailable() }
-        finally q.stop()
-      }
+          })(addEach(in, batches): _*)
 
       idx.pairs(s).orderBy("doc_a", "doc_b")
     })

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.llm.{Dedup, LabelStore, Similarity, TextFunctions => TF}
+import graft.core.GraftSession.withConf
 import graft.operators.CmSketch
 
 /** Dev harness: do the heavy operator families keep their shape at
@@ -1208,23 +1209,6 @@ object ScaleSmoke {
     val csum = sk.select(explode(col("sk")).as("h"))
       .agg(sum(pmod(col("h"), lit(1000000007L)))).head().getLong(0)
     println(s"  sketch checksum (mult-invariant): $csum")
-  }
-
-  /** Run `f` with session confs temporarily overridden (restored on
-    * exit; body must EXECUTE inside the scope — all uses here count()
-    * eagerly).
-    */
-  private def withConf[A](spark: SparkSession, kvs: (String, String)*)(f: => A): A = {
-    // get() can return null for confs whose DEFAULT is null (e.g.
-    // adaptive.autoBroadcastJoinThreshold) — restore those via unset
-    val prev = kvs.map { case (k, _) =>
-      k -> scala.util.Try(spark.conf.get(k)).toOption.filter(_ != null) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
   }
 
   /** VERDICT r8 ask #1 — the one 100 TB risk that had no measurement:

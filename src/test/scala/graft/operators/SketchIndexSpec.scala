@@ -171,7 +171,13 @@ class SketchIndexSpec extends AnyFunSuite with SparkTestSession {
     val dir = graft.core.Scratch.dir("ski_compact_dyn")
     SketchIndex.appendMonthly(all, "month_sec", "key", dir, K)
     SketchIndex.appendMonthly(all, "month_sec", "key", dir, K)
+    // a month directory holding no data file is outside the fold:
+    // dynamic overwrite must leave it, a static one would delete it
+    val pending = new org.apache.hadoop.fs.Path(s"$dir/month_sec=${12L * Month}/_pending")
+    val fs = pending.getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.create(pending).close()
     SketchIndex.compact(s, dir, K)
+    assert(fs.exists(pending), "compact deleted a month directory outside its fold")
     // a NEW month appended after compaction coexists with folded rows
     val late = Seq((11L * Month, 42L)).toDF("month_sec", "key")
     SketchIndex.appendMonthly(late, "month_sec", "key", dir, K)

@@ -212,4 +212,19 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession {
         (2L, 0L, 7200L, 2L)))
     } finally q.stop()
   }
+
+  test("st05 and st10 run through the feed harness and leave the session " +
+    "confs as they found them") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.noDataMicroBatches.enabled",
+      "spark.sql.streaming.stateStore.providerClass")
+    def confs = keys.map(k => k -> spark.conf.getOption(k))
+    for (name <- Seq("st05_streaming_dedup_ttl", "st10_transform_with_state")) {
+      val before = confs
+      val rows = graft.queries.StreamingQueries.all(name)(
+        spark, "/root/testdata/sf0.001").collect()
+      assert(rows.nonEmpty, s"$name returned no rows")
+      assert(confs === before, s"$name leaked a session conf")
+    }
+  }
 }

@@ -1,6 +1,6 @@
 #!/bin/bash
 # tools/gate.sh — the full verification gate in one command:
-#   compile → scalatest → Verify dump → DuckDB oracle diff → bench JSON
+#   conf-scope check → compile → scalatest → Verify dump → DuckDB oracle diff → bench JSON
 #   → plan-shape regression check → one untraced perfbench run per
 #   workload (its output checks must pass).
 # Exit nonzero on ANY failure. Usage: tools/gate.sh [sfDir]
@@ -8,6 +8,12 @@ set -euo pipefail
 cd "$(dirname "$0")/.."
 SF="${1:-/root/testdata/sf0.01}"
 OUT="$(mktemp -d /tmp/graft_gate.XXXXXX)"
+
+echo "== conf scopes go through GraftSession.withConf =="
+if grep -rn --include='*.scala' 'conf.unset(' src/main | grep -v '/GraftSession.scala:'; then
+  echo "hand-written conf scope above: use graft.core.GraftSession.withConf"
+  exit 1
+fi
 
 echo "== compile + test =="
 sbt -batch test
