@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlShims.inLongSet
 import TextFunctions._
 
 /** Document deduplication operators (builder brief: exact hash dedup,
@@ -364,13 +365,50 @@ object Dedup {
     // at risk — null band keys match no probe — but the index rows
     // themselves must exist.) sig[0] decides null-ness: minhash
     // positions are all-or-nothing null (see minhashCandidates).
-    val batchSigs = batchIndex
-      .filter(col("band") === 0 && col("sig").getItem(0).isNotNull)
-      .select("sig")
-    val matched = index
-      .filter(col("band") === 0 && col("sig").getItem(0).isNotNull)
-      .select("sig")
-      .join(broadcast(batchSigs), Seq("sig"), "left_semi")
+    val sigMax = driverCeiling(BroadcastMaxRows, SigRowWidth)
+    if (sigMax < 0) {
+      ccLog.info("freshIndexRows: distributed arm (driver arms off)")
+      return distributedFresh(index, batchIndex)
+    }
+    val batch = collectSlice(batchIndex, sigMax)
+    batch.rows match {
+      case None =>
+        ccLog.info(s"freshIndexRows: distributed arm (${batch.count} batch rows > $sigMax)")
+        distributedFresh(index, batch.frame)
+      case Some(rows) =>
+        // driver arm: with the batch's rows in hand, one query collects
+        // the index's band-0 rows under the batch's band-0 keys (equal
+        // signatures have equal keys), their signatures are compared
+        // here, and the caller's fold reads the index plus local rows
+        val sig = batchIndex.schema.fieldIndex("sig")
+        val bkey = batchIndex.schema.fieldIndex("bkey")
+        val band = batchIndex.schema.fieldIndex("band")
+        val zero = rows.filter(r => r.getAs[Number](band).intValue == 0 &&
+          !r.isNullAt(sig) && r.getSeq[Any](sig).headOption.exists(_ != null))
+        val batchSigs = zero.map(_.getSeq[Any](sig)).toSet
+        val matched = collectSlice(bandZeroSigs(index.filter(inLongSet(col("bkey"),
+            zero.map(_.getAs[Number](bkey).longValue)))), Long.MaxValue)
+          .rows.get.map(_.getSeq[Any](0)).filter(batchSigs).toSet
+        val fresh = rows.filterNot(r => !r.isNullAt(sig) && matched(r.getSeq[Any](sig)))
+        ccLog.info(s"freshIndexRows: driver arm (${rows.length} batch rows <= $sigMax, " +
+          s"${matched.size} of their signatures indexed)")
+        index.sparkSession.createDataFrame(java.util.Arrays.asList(fresh: _*),
+          batchIndex.schema)
+    }
+  }
+
+  /** The band-0 slice's non-null signatures: one row per doc's
+    * signature. Null signatures never match (see [[freshIndexRows]]).
+    */
+  private def bandZeroSigs(index: DataFrame): DataFrame =
+    index.filter(col("band") === 0 && col("sig").getItem(0).isNotNull).select("sig")
+
+  /** [[freshIndexRows]]' distributed form: the index is streamed once
+    * against the broadcast batch signatures.
+    */
+  private def distributedFresh(index: DataFrame, batchIndex: DataFrame): DataFrame = {
+    val matched = bandZeroSigs(index)
+      .join(broadcast(bandZeroSigs(batchIndex)), Seq("sig"), "left_semi")
       .distinct()
     batchIndex.join(broadcast(matched), Seq("sig"), "left_anti")
   }
@@ -484,7 +522,7 @@ object Dedup {
     def side: DataFrame = if (rows.isDefined) broadcast(frame) else frame
   }
 
-  private def isLocal(df: DataFrame): Boolean =
+  private[llm] def isLocal(df: DataFrame): Boolean =
     df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
 
   /** Count AND materialize `df` in ONE job, collecting its rows when
@@ -540,9 +578,10 @@ object Dedup {
   private[graft] def materialized(df: DataFrame): DataFrame =
     if (isLocal(df)) df else df.localCheckpoint(true)
 
-  /** Union-find over (src, dst) long pairs already on the driver. */
-  private def driverUnionFind(rows: Array[Row],
-                              spark: org.apache.spark.sql.SparkSession): DataFrame = {
+  /** Union-find over (src, dst) long pairs already on the driver: every
+    * node of the pairs with its component's minimum.
+    */
+  private def unionFind(pairs: Iterator[(Long, Long)]): Array[(Long, Long)] = {
     val parent = new java.util.HashMap[Long, Long]()
     def find(x: Long): Long = {
       var r = x
@@ -551,17 +590,76 @@ object Dedup {
       while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
       r
     }
-    rows.foreach { row =>
-      val a = row.getLong(0); val b = row.getLong(1)
+    pairs.foreach { case (a, b) =>
       if (!parent.containsKey(a)) parent.put(a, a)
       if (!parent.containsKey(b)) parent.put(b, b)
       val ra = find(a); val rb = find(b)
       if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
     }
-    import spark.implicits._
     parent.keySet.toArray(Array.empty[java.lang.Long])
-      .map(n => (n.toLong, find(n.toLong))).toSeq.toDF("node", "label")
+      .map(n => (n.toLong, find(n.toLong)))
   }
+
+  /** [[unionFind]] over (src, dst) long rows, as a (node, label) frame. */
+  private def driverUnionFind(rows: Array[Row],
+                              spark: org.apache.spark.sql.SparkSession): DataFrame = {
+    import spark.implicits._
+    unionFind(rows.iterator.map(r => (r.getLong(0), r.getLong(1)))).toSeq
+      .toDF("node", "label")
+  }
+
+  /** Whether the per-batch maintenance verbs may take their DRIVER arm
+    * ([[incrementalComponentsDelta]], [[LabelStore.appendDelete]],
+    * [[freshIndexRows]], [[deleteFromIndexDistinct]]): a batch whose
+    * touched slice fits [[driverCeiling]] is collected in one query per
+    * side and folded on the driver, so the store's log is written from
+    * local rows. Specs turn it off to run the distributed arm on the
+    * same batch.
+    */
+  private[graft] val driverArms = new scala.util.DynamicVariable[Boolean](true)
+
+  /** Row ceiling of a driver arm's collect of rows `width` longs wide:
+    * the broadcast budget ([[BroadcastMaxRows]] (node, label) pairs,
+    * ~64 MB) in rows of that width, so a (doc, 24-long signature) slice
+    * gets the same bytes as a label slice. -1 (the distributed arm)
+    * when the arms are off or the caller's broadcast gate is.
+    */
+  private def driverCeiling(broadcastMaxRows: Long, width: Int): Long =
+    if (driverArms.value && broadcastMaxRows >= 0) broadcastMaxRows * 2 / width else -1L
+
+  /** Run `body`'s queries over driver-local rows as one job each: AQE
+    * off (its stage-by-stage scheduling runs one job per exchange) and
+    * no size-based broadcast (each broadcast is a job of its own).
+    */
+  private def localQueries[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A =
+    graft.core.GraftSession.withConf(spark,
+      "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")(body)
+
+  /** [[measure]] for a driver arm's collect of a batch-sized frame whose
+    * joins all have a hinted broadcast side: planned without AQE
+    * ([[localQueries]]), it skips AQE's re-planning after each stage.
+    */
+  private def collectSlice(df: DataFrame, maxRows: Long): Measured =
+    localQueries(df.sparkSession)(
+      measure(df, maxRows, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+
+  /** Width of a (doc id, signature) row in longs. */
+  private val SigRowWidth = 1 + MinHashK
+
+  /** `df` canonicalized to (node long, label long), null rows dropped:
+    * the form every label-consuming verb reads.
+    */
+  private[llm] def canonicalLabels(df: DataFrame): DataFrame =
+    df.select(col("node").cast("long").as("node"), col("label").cast("long").as("label"))
+      .filter(col("node").isNotNull && col("label").isNotNull)
+
+  /** `df`'s (aCol, bCol) edges canonicalized to (a long, b long), null
+    * ends dropped.
+    */
+  private def canonicalEdges(df: DataFrame, aCol: String, bCol: String): DataFrame =
+    df.select(col(aCol).cast("long").as("a"), col(bCol).cast("long").as("b"))
+      .filter(col("a").isNotNull && col("b").isNotNull)
 
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
                           maxIter: Int = 50,
@@ -804,16 +902,11 @@ object Dedup {
     // connectedComponents documents); labels feed two streamed scans,
     // edges feed the resolve join + the new-node set — data-sized
     // frames checkpoint DISK_ONLY, batch-sized edges keep the default
-    val lab0 = labels.select(col("node").cast("long").as("node"),
-        col("label").cast("long").as("label"))
-      .filter(col("node").isNotNull && col("label").isNotNull)
+    val lab0 = canonicalLabels(labels)
     val lab = if (materialize) lab0.localCheckpoint(true, DataSized) else lab0
-    val e = newEdges.select(col(aCol).cast("long").as("a"),
-        col(bCol).cast("long").as("b"))
-      .filter(col("a").isNotNull && col("b").isNotNull)
-      // lazy: the ends gate below materializes e's cache on the way —
-      // one pass over the candidate producer instead of two
-      .localCheckpoint(false)
+    // lazy: the ends gate below materializes e's cache on the way —
+    // one pass over the candidate producer instead of two
+    val e = canonicalEdges(newEdges, aCol, bCol).localCheckpoint(false)
     // the touched endpoints' current labels: ONE streamed scan of the
     // label table against the broadcast endpoint set — the batch-sized
     // output is all later stages ever see of the corpus.
@@ -879,13 +972,83 @@ object Dedup {
     * feeds the batch-sized changed-rows join, so a maintenance loop's
     * per-batch WRITE and COMPUTE are both O(touched components), with
     * the full table reconstructed lazily at read time.
+    *
+    * Driver arm: a batch of at most [[DriverCcMaxPairs]] edges whose
+    * touched components hold at most `broadcastMaxRows` label rows
+    * (both counted by the collects themselves) is collected in two
+    * queries — the edges, then every label row of the touched
+    * endpoints' components — merged at label level by driver
+    * union-find, and returned as two local relations, so the writer's
+    * one job reads no label table. Past either ceiling the distributed
+    * form below runs, reading the collected edges' checkpoint.
     */
   def incrementalComponentsDelta(labels: DataFrame, newEdges: DataFrame,
                                  aCol: String, bCol: String,
                                  materialize: Boolean = true,
                                  broadcastMaxRows: Long = BroadcastMaxRows)
       : (DataFrame, DataFrame) = {
-    val p = incCcParts(labels, newEdges, aCol, bCol, materialize, broadcastMaxRows)
+    val edgeMax = math.min(DriverCcMaxPairs, driverCeiling(broadcastMaxRows, 2))
+    if (edgeMax < 0) {
+      ccLog.info("incrementalComponentsDelta: distributed arm (driver arms off)")
+      return distributedDelta(
+        incCcParts(labels, newEdges, aCol, bCol, materialize, broadcastMaxRows),
+        broadcastMaxRows)
+    }
+    val lab0 = canonicalLabels(labels)
+    val lab = if (materialize) lab0.localCheckpoint(true, DataSized) else lab0
+    val edges = measure(canonicalEdges(newEdges, aCol, bCol), edgeMax,
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val local = edges.rows.map(driverDelta(lab, _, broadcastMaxRows))
+    local.flatMap(_._2) match {
+      case Some(out) =>
+        ccLog.info(s"incrementalComponentsDelta: driver arm (${edges.count} edges <= " +
+          s"$edgeMax, ${local.get._1} touched label rows <= $broadcastMaxRows)")
+        out
+      case None =>
+        ccLog.info("incrementalComponentsDelta: distributed arm (" + local.fold(
+          s"${edges.count} edges > $edgeMax")(l =>
+          s"${l._1} touched label rows > $broadcastMaxRows") + ")")
+        distributedDelta(incCcParts(lab, edges.frame, "a", "b", materialize = false,
+          broadcastMaxRows), broadcastMaxRows)
+    }
+  }
+
+  /** [[incrementalComponentsDelta]]'s driver fold over collected edges:
+    * (the touched components' label-row count, and the (changed rows,
+    * dropped labels) relations when those rows fit `maxRows`). Every
+    * label row of a touched endpoint's component is collected in ONE
+    * query; the label-level graph, its union-find and the remap run
+    * here, with the distributed form's outputs row for row: the changed
+    * rows are the rows of remapped labels, the new nodes are the
+    * endpoints with no label row, and the drops are every remapped
+    * label-graph node.
+    */
+  private def driverDelta(lab: DataFrame, edges: Array[Row], maxRows: Long)
+      : (Long, Option[(DataFrame, DataFrame)]) = {
+    val spark = lab.sparkSession
+    import spark.implicits._
+    val pairs = edges.map(r => (r.getLong(0), r.getLong(1)))
+    val ends = pairs.flatMap { case (a, b) => Array(a, b) }.distinct
+    val members = collectSlice(lab.join(
+        broadcast(lab.filter(inLongSet(col("node"), ends)).select("label")),
+      Seq("label"), "left_semi").select("node", "label"), maxRows)
+    members.count -> members.rows.map { rows =>
+      val member = rows.map(r => (r.getLong(0), r.getLong(1)))
+      val labelOf = member.toMap
+      // an endpoint with no label row stands for itself
+      val root = unionFind(pairs.iterator.map { case (a, b) =>
+        (labelOf.getOrElse(a, a), labelOf.getOrElse(b, b)) }).toMap
+      val changed = root.filter { case (n, r) => n != r }
+      val changedRows = member.collect { case (n, l) if changed.contains(l) => (n, changed(l)) }
+      val newNodes = ends.filterNot(labelOf.contains).map(n => (n, root(n)))
+      ((changedRows ++ newNodes).toSeq.toDF("node", "label"),
+        changed.keys.toSeq.toDF("label"))
+    }
+  }
+
+  /** [[incrementalComponentsDelta]]'s distributed form over [[incCcParts]]. */
+  private def distributedDelta(p: IncCcParts, broadcastMaxRows: Long)
+      : (DataFrame, DataFrame) = {
     val changed = gate(
       p.remap.frame.filter(col("old_label") =!= col("new_label")), broadcastMaxRows)
     val changedRows = p.lab
@@ -995,9 +1158,7 @@ object Dedup {
                                  priorLabels: DataFrame, idCol: String,
                                  materialize: Boolean = true,
                                  broadcastMaxRows: Long = BroadcastMaxRows): ScopedParts = {
-    val lab0 = priorLabels.select(col("node").cast("long").as("node"),
-        col("label").cast("long").as("label"))
-      .filter(col("node").isNotNull && col("label").isNotNull)
+    val lab0 = canonicalLabels(priorLabels)
     val lab = if (materialize) lab0.localCheckpoint(true, DataSized) else lab0
     // tombstones: two consumers (label lookup + slice anti-join),
     // batch-sized
@@ -1022,6 +1183,79 @@ object Dedup {
       .join(dead.side.withColumnRenamed("node", idCol), Seq(idCol), "left_anti")
     ScopedParts(slice, untouched.select("node", "label"), lab, dead,
       touchedDocs.count, touchedLabels.frame)
+  }
+
+  /** A scoped delete batch as driver-local relations: the recomputed
+    * touched-component rows (node, label), the touched labels (label)
+    * and the distinct tombstones (node).
+    */
+  private[graft] final case class LocalDelete(delta: DataFrame, touchedLabels: DataFrame,
+                                              dead: DataFrame)
+
+  /** The scoped delete's driver arm ([[LabelStore.appendDelete]]'s):
+    * the tombstones, every label row of the components they touch (ONE
+    * query) and those members' retained signatures (one more) are
+    * collected, each under its share of the broadcast budget
+    * ([[driverCeiling]]), and the slice's delta is computed from the
+    * local rows by the same candidates + components verbs as the
+    * distributed arm. None past any ceiling or when the driver arms are
+    * off: the caller takes the distributed [[scopedParts]]. Same rows
+    * as the distributed arm: the touched labels are the tombstones'
+    * labels, the slice is every retained member of their components.
+    */
+  private[graft] def scopedDeleteOnDriver(sigs: DataFrame, tombstones: DataFrame,
+                                          priorLabels: DataFrame, idCol: String,
+                                          minEstE6: Long,
+                                          broadcastMaxRows: Long = BroadcastMaxRows)
+      : Option[LocalDelete] = {
+    val labelMax = driverCeiling(broadcastMaxRows, 2)
+    val sigMax = driverCeiling(broadcastMaxRows, SigRowWidth)
+    def distributed(why: String): Option[LocalDelete] = {
+      ccLog.info(s"scoped delete: distributed arm ($why)"); None
+    }
+    if (labelMax < 0) return distributed("driver arms off")
+    val spark = sigs.sparkSession
+    import spark.implicits._
+    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val lab = canonicalLabels(priorLabels)
+    val dead0 = measure(tombstones.select(col(idCol).cast("long").as("node"))
+      .filter(col("node").isNotNull), labelMax, level)
+    dead0.rows match {
+      case None => distributed(s"${dead0.count} tombstones > $labelMax")
+      case Some(d) =>
+        val dead = d.map(_.getLong(0)).distinct
+        val members = collectSlice(lab.join(
+            broadcast(lab.filter(inLongSet(col("node"), dead)).select("label")),
+          Seq("label"), "left_semi").select("node", "label"), labelMax)
+        members.rows match {
+          case None => distributed(s"${members.count} touched label rows > $labelMax")
+          case Some(ms) =>
+            val deadSet = dead.toSet
+            val rows = ms.map(r => (r.getLong(0), r.getLong(1)))
+            // no candidate pair leaves a prior component (the scoping
+            // theorem), so only components with two or more retained
+            // members can keep a pair: the rest become singletons
+            val retained = rows.filterNot(r => deadSet(r._1)).groupBy(_._2).values
+              .map(_.map(_._1).distinct).filter(_.length > 1).flatten.toSeq
+            val slice = if (retained.isEmpty) None else Some(collectSlice(
+              sigs.select(col(idCol), col("sig")).filter(inLongSet(col(idCol), retained)),
+              sigMax))
+            if (slice.exists(_.rows.isEmpty)) distributed(s"${slice.get.count} slice rows > $sigMax")
+            else {
+              ccLog.info(s"scoped delete: driver arm (${dead.length} tombstones, " +
+                s"${rows.length} touched label rows <= $labelMax, " +
+                s"${slice.fold(0L)(_.count)} slice rows <= $sigMax)")
+              val touched = rows.collect { case (n, l) if deadSet(n) => l }.distinct
+              // the slice is local rows: its candidate and components
+              // queries plan as one job each
+              val delta = slice.fold(Seq.empty[(Long, Long)].toDF("node", "label"))(sl =>
+                localQueries(spark)(materialized(connectedComponents(
+                  candidatesFromSigs(sl.frame, idCol, minEstE6, materialize = false,
+                    assumeUnique = true), "doc_a", "doc_b"))))
+              Some(LocalDelete(delta, touched.toSeq.toDF("label"), dead.toSeq.toDF("node")))
+            }
+        }
+    }
   }
 
   /** [[relabelScopedFromSigs]]' two halves, exposed as a seam so the
@@ -1127,9 +1361,43 @@ object Dedup {
     // passed into the re-election (ADVICE r15: the public overload
     // rebuilt and re-measured the identical frame — extra eager jobs
     // per delete batch on the hot maintenance path).
-    val deadSide = gate(tombstones.select(col(idCol)).distinct(), broadcastMaxRows).side
-    index.join(deadSide, Seq(idCol), "left_anti")
-      .unionByName(reElectRows(index, retainedSigs, deadSide, idCol, broadcastMaxRows))
+    def distributed(why: String): DataFrame = {
+      ccLog.info(s"deleteFromIndexDistinct: distributed arm ($why)")
+      val deadSide = gate(tombstones.select(col(idCol)).distinct(), broadcastMaxRows).side
+      index.join(deadSide, Seq(idCol), "left_anti")
+        .unionByName(reElectRows(index, retainedSigs, deadSide, idCol, broadcastMaxRows))
+    }
+    val sigMax = driverCeiling(broadcastMaxRows, SigRowWidth)
+    if (sigMax < 0) return distributed("driver arms off")
+    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val dead = measure(tombstones.select(col(idCol)).filter(col(idCol).isNotNull),
+      sigMax, level)
+    if (dead.rows.isEmpty) return distributed(s"${dead.count} tombstones > $sigMax")
+    // driver arm: ONE query collects the retained rows of every
+    // signature group whose kept representative is tombstoned, the
+    // group minimum is re-elected here, and the caller's fold reads
+    // the index filtered by the tombstone set plus local rows
+    val ids = dead.rows.get.map(_.getAs[Number](0).longValue)
+    val live = coalesce(not(inLongSet(col(idCol), ids)), lit(true))
+    val group = collectSlice(retainedSigs.select(col(idCol), col("sig"))
+        .filter(col("sig").getItem(0).isNotNull && live)
+        .join(broadcast(bandZeroSigs(index.filter(inLongSet(col(idCol), ids)))),
+          Seq("sig"), "left_semi")
+        .select(col(idCol), col("sig")), sigMax)
+    group.rows match {
+      case None => distributed(s"${group.count} retained rows of dead-representative " +
+        s"groups > $sigMax")
+      case Some(rows) =>
+        def id(r: Row) = r.getAs[Number](0).longValue
+        val minOf = rows.groupBy(_.getSeq[Any](1)).map { case (sig, rs) => sig -> rs.map(id).min }
+        val reps = rows.filter(r => id(r) == minOf(r.getSeq[Any](1)))
+        ccLog.info(s"deleteFromIndexDistinct: driver arm (${dead.count} tombstones, " +
+          s"${rows.length} retained rows of ${minOf.size} dead-representative groups " +
+          s"<= $sigMax)")
+        index.filter(live)
+          .unionByName(bandIndexFromSigs(index.sparkSession.createDataFrame(
+            java.util.Arrays.asList(reps: _*), group.frame.schema), idCol))
+    }
   }
 
   /** Just the rows [[deleteFromIndexDistinct]] would ADD — the

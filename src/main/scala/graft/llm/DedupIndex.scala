@@ -269,26 +269,6 @@ object DedupIndex {
     Dedup.relabelScopedAutoFromSigs(sigsOf(spark, table), tombstones,
       priorLabels, idColOf(spark, table), minEstE6, materialize)
 
-  /** The scoped deletion lifecycle in one call: the SCOPED relabel
-    * (touched components only — behind the [[relabelScopedAuto]] cost
-    * dispatch since round 16, so a tiny corpus or a mass takedown
-    * falls back to the full retained recompute it would lose to) plus
-    * the physical tombstone [[compact]] into `toTable` — x89's
-    * [[deleteAndRelabel]] shape with the O(corpus) relabel replaced by
-    * the touched-slice recompute. The labels are materialized BEFORE
-    * the compact so the returned frame never races the rewrite.
-    */
-  def deleteAndRelabelScoped(spark: SparkSession, fromTable: String,
-                             toTable: String, toPath: String,
-                             tombstones: DataFrame, idCol: String,
-                             priorLabels: DataFrame,
-                             minEstE6: Long = 250000L): DataFrame = {
-    val labels = relabelScopedAuto(spark, fromTable, tombstones, priorLabels,
-      minEstE6).localCheckpoint(true)
-    compact(spark, fromTable, toTable, toPath, tombstones, idCol)
-    labels
-  }
-
   /** New-vs-corpus candidates against the PERSISTED index (the shape
     * st04 streams through): the index side joins in its bucket layout
     * — no exchange — and only the batch pays signature + shuffle.

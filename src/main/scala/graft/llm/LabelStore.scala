@@ -76,10 +76,6 @@ object LabelStore {
   def exists(spark: SparkSession, dir: String): Boolean =
     pathExists(spark, basePath(dir))
 
-  private def norm(labels: DataFrame): DataFrame =
-    labels.select(col("node").cast("long").as("node"),
-        col("label").cast("long").as("label"))
-      .filter(col("node").isNotNull && col("label").isNotNull)
 
   /** Outstanding batch seqs, in fold order. */
   private[llm] def seqs(spark: SparkSession, dir: String): Seq[Int] = {
@@ -112,7 +108,7 @@ object LabelStore {
     // swapped in after the write: one job, where an eager checkpoint
     // before an in-place overwrite took two
     val next = new Path(s"$dir/base.next")
-    norm(labels).write.mode("overwrite").parquet(next.toString)
+    Dedup.canonicalLabels(labels).write.mode("overwrite").parquet(next.toString)
     val f = fs(spark, dir)
     f.delete(new Path(basePath(dir)), true)
     if (!f.rename(next, new Path(basePath(dir))))
@@ -181,12 +177,14 @@ object LabelStore {
     requireLogLayout(spark, dir)
     val n = seqs(spark, dir).lastOption.getOrElse(-1) + 1
     val noId = lit(null).cast("long")
-    norm(delta).withColumn("kind", lit("delta"))
+    val rows = Dedup.canonicalLabels(delta).withColumn("kind", lit("delta"))
       .unionByName(dropLabels.select(noId.as("node"),
           col("label").cast("long").as("label"), lit("drop").as("kind"))
         .filter(col("label").isNotNull))
       .unionByName(tombs.select(col("node").cast("long").as("node"),
         noId.as("label"), lit("tomb").as("kind")))
+    // a batch of driver-local rows (a driver arm's) is one task and one file
+    (if (Seq(delta, dropLabels, tombs).forall(Dedup.isLocal)) rows.coalesce(1) else rows)
       .write.parquet(s"${logPath(dir)}/seq=$n")
   }
 
@@ -214,17 +212,23 @@ object LabelStore {
   def appendDelete(spark: SparkSession, dir: String, sigs: DataFrame,
                    tombstones: DataFrame, idCol: String,
                    minEstE6: Long, current: DataFrame): Unit = {
-    val parts = Dedup.scopedParts(sigs, tombstones, current, idCol,
-      materialize = false)
-    // the delta reads the label state the write extends — land it
-    // before anything else moves (the compact rule, O(touched)); a
-    // driver union-find result is landed already. The touched labels
-    // and the scoping's distinct long node ids are measured and
-    // materialized by the scoping.
-    val delta = Dedup.materialized(Dedup.connectedComponents(
-        Dedup.candidatesFromSigs(parts.slice, idCol, minEstE6,
-          assumeUnique = true), "doc_a", "doc_b"))
-    appendLog(spark, dir, delta, parts.touchedLabels, parts.dead.frame)
+    // driver arm: the delta, the touched labels and the tombstones come
+    // back as local relations, so the write below scans nothing
+    Dedup.scopedDeleteOnDriver(sigs, tombstones, current, idCol, minEstE6) match {
+      case Some(l) => appendLog(spark, dir, l.delta, l.touchedLabels, l.dead)
+      case None =>
+        val parts = Dedup.scopedParts(sigs, tombstones, current, idCol,
+          materialize = false)
+        // the delta reads the label state the write extends — land it
+        // before anything else moves (the compact rule, O(touched)); a
+        // driver union-find result is landed already. The touched labels
+        // and the scoping's distinct long node ids are measured and
+        // materialized by the scoping.
+        val delta = Dedup.materialized(Dedup.connectedComponents(
+            Dedup.candidatesFromSigs(parts.slice, idCol, minEstE6,
+              assumeUnique = true), "doc_a", "doc_b"))
+        appendLog(spark, dir, delta, parts.touchedLabels, parts.dead.frame)
+    }
   }
 
   /** Append a PRECOMPUTED (delta, dropLabels) batch — the zero-diff

@@ -2,7 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, LeafExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, InSet, LeafExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode, JavaCode}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic
@@ -61,6 +61,19 @@ object GraftSqlShims {
     * is the same whatever the value (see [[BoundLong]]).
     */
   def boundLong(value: Long): Column = toColumn(BoundLong(value))
+
+  /** `c` (as BIGINT) IN `values`, as one bound set: Catalyst's `InSet`,
+    * whose BIGINT code reads the set from the generated class's
+    * `references`. The generated code names the set's class, so the
+    * set is always a `HashSet` (Scala's small sets are `Set1`…`Set4`):
+    * the code is the same whatever the ids. `Column.isin` builds `In`
+    * over literals, which under 10 values are inlined into the
+    * generated code; a join against a local relation of the ids
+    * broadcasts it in a job of its own.
+    */
+  def inLongSet(c: Column, values: Iterable[Long]): Column =
+    toColumn(InSet(toExpression(c.cast(LongType)), scala.collection.immutable.HashSet.from(
+      values.iterator.map(v => java.lang.Long.valueOf(v): Any))))
 }
 
 /** A BIGINT constant that plans like a parameter: a long `Literal` is

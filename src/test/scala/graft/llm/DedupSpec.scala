@@ -699,7 +699,9 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     val autoKey = "spark.sql.autoBroadcastJoinThreshold"
     val autoPrev = s.conf.get(autoKey)
     def both[T](f: Long => T): (T, T) = {
-      val wide = f(Dedup.BroadcastMaxRows)
+      // the broadcast branch of the distributed arms: the driver arms
+      // (MaintenanceArmsSpec) would take these batches
+      val wide = Dedup.driverArms.withValue(false)(f(Dedup.BroadcastMaxRows))
       // and no size-based broadcast either: the shuffle joins run
       s.conf.set(autoKey, "-1")
       try (wide, f(-1L)) finally s.conf.set(autoKey, autoPrev)

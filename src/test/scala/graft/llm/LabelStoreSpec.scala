@@ -172,9 +172,14 @@ class LabelStoreSpec extends AnyFunSuite with SparkTestSession {
         "doc_a", "doc_b").localCheckpoint(true)
       LabelStore.create(s, dir, prior)
       val tomb = Seq(3L).toDF("doc_id")
-      LabelStore.appendDelete(s, dir, sigs, tomb, "doc_id")
+      // the distributed arm's gates, then the driver arm's queries
+      Dedup.driverArms.withValue(false)(LabelStore.appendDelete(s, dir, sigs, tomb, "doc_id"))
       val want = labelsOf(Dedup.relabelScopedFromSigs(sigs, tomb, prior, "doc_id"))
       assert(labelsOf(LabelStore.read(s, dir)) === want)
+      val local = graft.core.Scratch.dir("labelstore-noaqe-driver")
+      LabelStore.create(s, local, prior)
+      LabelStore.appendDelete(s, local, sigs, tomb, "doc_id")
+      assert(labelsOf(LabelStore.read(s, local)) === want)
       assert(labelsOf(Dedup.relabelScopedFromSigs(sigs, tomb, prior, "doc_id",
         broadcastMaxRows = -1L)) === want)
     } finally s.conf.set(key, prev)
@@ -222,33 +227,6 @@ class LabelStoreSpec extends AnyFunSuite with SparkTestSession {
     assert(second <= 10L, s"the second batch compiled $second classes")
   }
 
-  /** Jobs the body runs, counted by job group. Listener delivery is
-    * asynchronous but in order, so a marker job run afterwards bounds
-    * the wait for the body's events.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup("labelstore-body", "body"); body
-      sc.setJobGroup("labelstore-marker", "marker")
-      sc.parallelize(Seq(1), 1).count()
-      sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.contains("labelstore-marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(groups.contains("labelstore-marker"), "listener never saw the marker")
-      groups.toArray.count(_ == "labelstore-body")
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
-  }
-
   test("after k batches the store holds base and delta/seq=0..k-1 only, " +
     "each batch written by one job") {
     val s = spark; import s.implicits._
@@ -260,7 +238,7 @@ class LabelStoreSpec extends AnyFunSuite with SparkTestSession {
     LabelStore.appendDelete(s, dir, sigs, Seq(3L).toDF("doc_id"), "doc_id")
     val chg = Seq((20L, 10L)).toDF("node", "label")
     val dropped = Seq(10L, 20L).toDF("label")
-    assert(jobsOf(LabelStore.appendDelta(s, dir, chg, dropped)) === 1)
+    assert(MaintenancePipeline.jobsOf(s)(LabelStore.appendDelta(s, dir, chg, dropped)) === 1)
     def names(p: String) = new java.io.File(p).listFiles()
       .map(_.getName).filterNot(n => n.startsWith(".") || n.startsWith("_")).toSet
     assert(names(dir) === Set("base", "delta"))

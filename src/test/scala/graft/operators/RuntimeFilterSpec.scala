@@ -28,10 +28,16 @@ class RuntimeFilterSpec extends AnyFunSuite with SparkTestSession {
 
   test("session confs are restored after the scope, even on throw") {
     val key = "spark.sql.optimizer.runtime.bloomFilter.enabled"
+    // the scope sets this one to -1, so a scope that never restores
+    // leaves it changed
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
     val before = spark.conf.getOption(key)
+    val thresholdBefore = spark.conf.getOption(threshold)
+    assert(!thresholdBefore.contains("-1"), "the scope's value must differ from the session's")
     intercept[RuntimeException] {
       RuntimeFilters.withBloomPruning(spark) { throw new RuntimeException("boom") }
     }
     assert(spark.conf.getOption(key) === before)
+    assert(spark.conf.getOption(threshold) === thresholdBefore)
   }
 }
