@@ -365,7 +365,7 @@ object Dedup {
     // at risk — null band keys match no probe — but the index rows
     // themselves must exist.) sig[0] decides null-ness: minhash
     // positions are all-or-nothing null (see minhashCandidates).
-    val sigMax = driverCeiling(BroadcastMaxRows, SigRowWidth)
+    val sigMax = driverCeiling(SigRowWidth)
     if (sigMax < 0) {
       ccLog.info("freshIndexRows: distributed arm (driver arms off)")
       return distributedFresh(index, batchIndex)
@@ -569,14 +569,8 @@ object Dedup {
   /** [[measure]] for a batch-sized broadcast-candidate side, at the
     * default checkpoint level (sides are bounded by the batch).
     */
-  private def gate(side: DataFrame, maxRows: Long): Measured =
-    measure(side, maxRows, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-  /** `df` materialized: as is when it is already a driver-local
-    * relation, else by an eager checkpoint (one job).
-    */
-  private[graft] def materialized(df: DataFrame): DataFrame =
-    if (isLocal(df)) df else df.localCheckpoint(true)
+  private def gate(side: DataFrame): Measured =
+    measure(side, broadcastRows, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
   /** Union-find over (src, dst) long pairs already on the driver: every
     * node of the pairs with its component's minimum.
@@ -608,24 +602,41 @@ object Dedup {
       .toDF("node", "label")
   }
 
-  /** Whether the per-batch maintenance verbs may take their DRIVER arm
-    * ([[incrementalComponentsDelta]], [[LabelStore.appendDelete]],
-    * [[freshIndexRows]], [[deleteFromIndexDistinct]]): a batch whose
-    * touched slice fits [[driverCeiling]] is collected in one query per
-    * side and folded on the driver, so the store's log is written from
-    * local rows. Specs turn it off to run the distributed arm on the
-    * same batch.
+  /** The arm the per-batch verbs take, the one seam over them:
+    *  - `Driver` (the default): a batch whose touched slice fits
+    *    [[driverCeiling]] is collected in one query per side and folded
+    *    on the driver ([[incrementalComponentsDelta]], [[scopedDelete]],
+    *    [[freshIndexRows]], [[deleteFromIndexDistinct]]), so the store's
+    *    log is written from local rows; past the ceiling, as `Broadcast`;
+    *  - `Broadcast`: the distributed arms, each batch-sized join side
+    *    broadcast when its measured rows fit [[BroadcastMaxRows]];
+    *  - `Shuffle`: the distributed arms past every broadcast gate, as a
+    *    mass batch runs them.
+    * Specs pick one with `Dedup.arm.withValue(Dedup.Arm.Shuffle) { ... }`
+    * to run each arm on the same batch.
     */
-  private[graft] val driverArms = new scala.util.DynamicVariable[Boolean](true)
+  private[graft] sealed trait Arm
+  private[graft] object Arm {
+    case object Driver extends Arm
+    case object Broadcast extends Arm
+    case object Shuffle extends Arm
+  }
+  private[graft] val arm = new scala.util.DynamicVariable[Arm](Arm.Driver)
+
+  /** Row ceiling of a broadcast join side under [[arm]]: -1 (every side
+    * shuffled) on the `Shuffle` arm.
+    */
+  private def broadcastRows: Long =
+    if (arm.value == Arm.Shuffle) -1L else BroadcastMaxRows
 
   /** Row ceiling of a driver arm's collect of rows `width` longs wide:
     * the broadcast budget ([[BroadcastMaxRows]] (node, label) pairs,
     * ~64 MB) in rows of that width, so a (doc, 24-long signature) slice
     * gets the same bytes as a label slice. -1 (the distributed arm)
-    * when the arms are off or the caller's broadcast gate is.
+    * off the `Driver` arm.
     */
-  private def driverCeiling(broadcastMaxRows: Long, width: Int): Long =
-    if (driverArms.value && broadcastMaxRows >= 0) broadcastMaxRows * 2 / width else -1L
+  private def driverCeiling(width: Int): Long =
+    if (arm.value == Arm.Driver) BroadcastMaxRows * 2 / width else -1L
 
   /** Run `body`'s queries over driver-local rows as one job each: AQE
     * off (its stage-by-stage scheduling runs one job per exchange) and
@@ -873,9 +884,8 @@ object Dedup {
     */
   def incrementalComponents(labels: DataFrame, newEdges: DataFrame,
                             aCol: String, bCol: String,
-                            materialize: Boolean = true,
-                            broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
-    val p = incCcParts(labels, newEdges, aCol, bCol, materialize, broadcastMaxRows)
+                            materialize: Boolean = true): DataFrame = {
+    val p = incCcParts(labels, newEdges, aCol, bCol, materialize)
     // second streamed scan: relabel ONLY rows whose label is remapped
     // (broadcast hash join, no exchange of the label table); rows of
     // untouched components coalesce through unchanged
@@ -896,8 +906,7 @@ object Dedup {
 
   private def incCcParts(labels: DataFrame, newEdges: DataFrame,
                          aCol: String, bCol: String,
-                         materialize: Boolean,
-                         broadcastMaxRows: Long): IncCcParts = {
+                         materialize: Boolean): IncCcParts = {
     // canonicalize both inputs once (the long cast + null drop rule
     // connectedComponents documents); labels feed two streamed scans,
     // edges feed the resolve join + the new-node set — data-sized
@@ -916,7 +925,7 @@ object Dedup {
     // a graceful shuffle join, not force-broadcast into a driver OOM —
     // the same 2M-row gate the CC label table uses.
     val ends = gate(e.select(col("a").as("node"))
-      .union(e.select(col("b").as("node"))).distinct(), broadcastMaxRows)
+      .union(e.select(col("b").as("node"))).distinct())
     val touched = lab.join(ends.side, Seq("node"), "left_semi")
       .localCheckpoint(true)
     // endpoints resolve to their current label; an unlabeled endpoint
@@ -943,7 +952,7 @@ object Dedup {
     // common case and the shuffle the mega-batch one. On the driver
     // union-find path it is a local relation already: no job.
     val remap = gate(merged.select(col("node").as("old_label"),
-      col("label").as("new_label")), broadcastMaxRows)
+      col("label").as("new_label")))
     // endpoints not in the label table enter the output with their
     // merged label (they were their own label-graph nodes, so remap
     // always covers them). The anti-join runs against `touched` —
@@ -958,7 +967,7 @@ object Dedup {
   }
 
   /** [[incrementalComponents]]' MERGE-ON-READ form (the additions-side
-    * twin of [[relabelScopedDelta]]): returns (the CHANGED label rows
+    * twin of [[ScopedDelete.delta]]): returns (the CHANGED label rows
     * alone — existing rows whose component was remapped, relabeled,
     * plus the batch's new nodes — and the DROPPED pre-batch labels of
     * those changed rows). The full post-fold table is
@@ -974,7 +983,7 @@ object Dedup {
     * the full table reconstructed lazily at read time.
     *
     * Driver arm: a batch of at most [[DriverCcMaxPairs]] edges whose
-    * touched components hold at most `broadcastMaxRows` label rows
+    * touched components hold at most [[BroadcastMaxRows]] label rows
     * (both counted by the collects themselves) is collected in two
     * queries — the edges, then every label row of the touched
     * endpoints' components — merged at label level by driver
@@ -984,32 +993,29 @@ object Dedup {
     */
   def incrementalComponentsDelta(labels: DataFrame, newEdges: DataFrame,
                                  aCol: String, bCol: String,
-                                 materialize: Boolean = true,
-                                 broadcastMaxRows: Long = BroadcastMaxRows)
+                                 materialize: Boolean = true)
       : (DataFrame, DataFrame) = {
-    val edgeMax = math.min(DriverCcMaxPairs, driverCeiling(broadcastMaxRows, 2))
+    val labelMax = driverCeiling(2)
+    val edgeMax = math.min(DriverCcMaxPairs, labelMax)
     if (edgeMax < 0) {
       ccLog.info("incrementalComponentsDelta: distributed arm (driver arms off)")
-      return distributedDelta(
-        incCcParts(labels, newEdges, aCol, bCol, materialize, broadcastMaxRows),
-        broadcastMaxRows)
+      return distributedDelta(incCcParts(labels, newEdges, aCol, bCol, materialize))
     }
     val lab0 = canonicalLabels(labels)
     val lab = if (materialize) lab0.localCheckpoint(true, DataSized) else lab0
     val edges = measure(canonicalEdges(newEdges, aCol, bCol), edgeMax,
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val local = edges.rows.map(driverDelta(lab, _, broadcastMaxRows))
+    val local = edges.rows.map(driverDelta(lab, _, labelMax))
     local.flatMap(_._2) match {
       case Some(out) =>
         ccLog.info(s"incrementalComponentsDelta: driver arm (${edges.count} edges <= " +
-          s"$edgeMax, ${local.get._1} touched label rows <= $broadcastMaxRows)")
+          s"$edgeMax, ${local.get._1} touched label rows <= $labelMax)")
         out
       case None =>
         ccLog.info("incrementalComponentsDelta: distributed arm (" + local.fold(
           s"${edges.count} edges > $edgeMax")(l =>
-          s"${l._1} touched label rows > $broadcastMaxRows") + ")")
-        distributedDelta(incCcParts(lab, edges.frame, "a", "b", materialize = false,
-          broadcastMaxRows), broadcastMaxRows)
+          s"${l._1} touched label rows > $labelMax") + ")")
+        distributedDelta(incCcParts(lab, edges.frame, "a", "b", materialize = false))
     }
   }
 
@@ -1047,10 +1053,8 @@ object Dedup {
   }
 
   /** [[incrementalComponentsDelta]]'s distributed form over [[incCcParts]]. */
-  private def distributedDelta(p: IncCcParts, broadcastMaxRows: Long)
-      : (DataFrame, DataFrame) = {
-    val changed = gate(
-      p.remap.frame.filter(col("old_label") =!= col("new_label")), broadcastMaxRows)
+  private def distributedDelta(p: IncCcParts): (DataFrame, DataFrame) = {
+    val changed = gate(p.remap.frame.filter(col("old_label") =!= col("new_label")))
     val changedRows = p.lab
       .join(changed.side, col("label") === col("old_label"))
       .select(col("node"), col("new_label").as("label"))
@@ -1066,14 +1070,15 @@ object Dedup {
     * label outside the touched components is invariant. The round-14
     * form recomputed CC over the ENTIRE retained signature relation per
     * deletion batch — O(corpus) for a takedown touching a handful of
-    * clusters; this recomputes over exactly the touched slice and
-    * stitches.
+    * clusters; this recomputes over exactly the touched slice
+    * ([[scopedDelete]]) and stitches: (prior ∖ rows of touched labels)
+    * ∪ the slice's recomputed labels.
     *
     * Inputs: `sigs` is the doc-level signature relation ([[docSigs]]
     * shape — DedupIndex's `_sigs` sidecar or a stream's accumulated
-    * state; tombstoned rows may still be present, the slice anti-joins
-    * them out, so the verb works before OR after the physical
-    * compact). `priorLabels` must be the CC fixpoint over the current
+    * state; tombstoned rows may still be present, the slice excludes
+    * them, so the verb works before OR after the physical compact).
+    * `priorLabels` must be the CC fixpoint over the current
     * pre-deletion corpus ((node, label = component min), complete —
     * exactly what [[connectedComponents]] / [[incrementalComponents]] /
     * a previous call of this maintain).
@@ -1088,82 +1093,152 @@ object Dedup {
     * by poisoning them and watching the poison survive); x92 pins the
     * whole answer against the DuckDB closure over corpus∖deleted.
     *
-    * Scale: the label table and the signature relation are each
-    * scanned ONCE, streamed against broadcast batch-sized frames
-    * (tombstones → touched labels → touched members); the only
-    * shuffles — the candidate self-join and CC — run on the touched
-    * slice, so the recompute cost is ∝ touched-component rows, flat in
+    * Scale: the recompute cost is ∝ touched-component rows, flat in
     * corpus size (SCALE_r15 measures it against r14's full-corpus
-    * form). The broadcast hints are gated on MEASURED counts (the
-    * incrementalComponents 2M-row rule) so a mass takedown degrades to
-    * shuffle joins instead of a driver OOM.
+    * form); [[scopedDelete]] says how the slice is scoped on each arm.
     *
-    * @param materialize checkpoint `priorLabels` before its three
-    *   streamed scans (default); pass `false` when it is already
-    *   materialized (parquet-backed, or a fold loop's own checkpoint —
-    *   st30's shape).
+    * @param materialize checkpoint `priorLabels` before its streamed
+    *   scans (default); pass `false` when it is already materialized
+    *   (parquet-backed, or a fold loop's own checkpoint — st30's shape).
     */
   def relabelScopedFromSigs(sigs: DataFrame, tombstones: DataFrame,
                             priorLabels: DataFrame, idCol: String,
                             minEstE6: Long = 250000L,
-                            materialize: Boolean = true,
-                            broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
-    val p = scopedParts(sigs, tombstones, priorLabels, idCol, materialize,
-      broadcastMaxRows)
-    p.untouched.unionByName(scopedDeltaOf(p.slice, idCol, minEstE6))
+                            materialize: Boolean = true): DataFrame =
+    scopedDelete(sigs, tombstones, priorLabels, idCol, minEstE6, materialize).labels
+
+  /** A deletion batch after [[scopedDelete]]'s SCOPE phase — what it
+    * measured — with the RECOMPUTE phase as [[delta]].
+    *
+    * @param lab the prior labels, canonical (checkpointed when the
+    *   caller asked to materialize them)
+    * @param dead the distinct tombstoned node ids (node)
+    * @param touchedLabels the labels of the components holding a
+    *   tombstone (label): the batch's dropped labels
+    * @param touchedDocs the touched components' label rows, tombstones
+    *   included
+    * @param slice the retained members' (idCol, sig) rows: all the
+    *   recompute reads
+    * @param sliceRows the slice's row count when the scope collected it
+    *   (the driver arm); None when the slice is a distributed plan
+    */
+  private[graft] final case class ScopedDelete(lab: DataFrame, dead: Measured,
+      touchedLabels: Measured, touchedDocs: Long, slice: DataFrame,
+      sliceRows: Option[Long], idCol: String, minEstE6: Long) {
+
+    /** The recompute, run on first use: candidates + components over
+      * the slice — the touched components' retained members with their
+      * new labels (a member left alone is a singleton and absent, the
+      * CC convention). On the driver arm the slice is local rows and
+      * each query plans as one job ([[localQueries]]). The result is
+      * landed (a local relation or a materialized checkpoint), so a
+      * writer may extend the state it was read from.
+      */
+    lazy val delta: DataFrame = sliceRows match {
+      case Some(0L) =>
+        val spark = slice.sparkSession; import spark.implicits._
+        Seq.empty[(Long, Long)].toDF("node", "label")
+      case Some(_) => localQueries(slice.sparkSession)(recompute(materialize = false))
+      case None => recompute(materialize = true)
+    }
+
+    // assumeUnique: CC is multiplicity-blind (the relabel rule), so
+    // replayed sidecar rows never force the dedup exchange here either
+    private def recompute(materialize: Boolean): DataFrame =
+      connectedComponents(candidatesFromSigs(slice, idCol, minEstE6, materialize,
+        assumeUnique = true), "doc_a", "doc_b")
+
+    /** The prior labels outside the touched components, verbatim. */
+    def untouched: DataFrame =
+      lab.join(touchedLabels.side, Seq("label"), "left_anti").select("node", "label")
+
+    /** The post-deletion label table: [[untouched]] ∪ [[delta]]. */
+    def labels: DataFrame = untouched.unionByName(delta)
   }
 
-  /** The CHANGED label rows ALONE — [[relabelScopedFromSigs]]'
-    * merge-on-read form, and the shape whose MATERIALIZATION is
-    * O(touched-component rows) rather than O(corpus): the recomputed
-    * labels of the touched components' retained members. The full
-    * post-deletion table is (priorLabels ∖ touched-component rows) ∪
-    * this delta — dropped rows are the tombstones', untouched labels
-    * are invariant by the scoping theorem — so a deployment stores the
-    * delta beside the label table and folds it at compaction cadence,
-    * exactly the tombstone/merge-on-read discipline every index here
-    * uses. A takedown's WRITE cost is then ∝ what it touched; writing
-    * the stitched table per batch would re-pay the corpus however
-    * scoped the recompute was (ScaleSmoke's scopeddelete stage reports
-    * both walls).
+  /** The scoped deletion KERNEL: every deletion verb computes its labels
+    * here ([[relabelScopedFromSigs]], [[relabelScopedAutoFromSigs]],
+    * [[LabelStore.appendDelete]]). SCOPE, eagerly: tombstones → the
+    * labels of the components holding them → those components'
+    * retained members' signatures, plus the counts that took. RECOMPUTE,
+    * lazily: [[ScopedDelete.delta]] (a dispatch that picks the full
+    * relabel never pays it).
+    *
+    * Driver arm ([[arm]]): the tombstones, every label row of the
+    * touched components (ONE query) and the retained members'
+    * signatures (one more) are collected, each under its share of the
+    * broadcast budget ([[driverCeiling]]). Only components left with two
+    * or more retained members enter the slice: no candidate pair leaves
+    * a prior component (the scoping theorem), so the rest become
+    * singletons. Past any ceiling, or off the driver arm, the same
+    * frames are streamed joins against batch-sized sides broadcast
+    * under measured gates, so a mass takedown degrades to shuffle joins
+    * instead of a driver OOM. Both arms give the same touched labels
+    * and the same delta.
     */
-  def relabelScopedDelta(sigs: DataFrame, tombstones: DataFrame,
-                         priorLabels: DataFrame, idCol: String,
-                         minEstE6: Long = 250000L,
-                         materialize: Boolean = true): DataFrame =
-    scopedDeltaOf(
-      scopedDeleteParts(sigs, tombstones, priorLabels, idCol, materialize)._1,
-      idCol, minEstE6)
-
-  // assumeUnique: CC is multiplicity-blind (the relabel rule), so
-  // replayed sidecar rows never force the dedup exchange here either
-  private def scopedDeltaOf(slice: DataFrame, idCol: String,
-                            minEstE6: Long): DataFrame =
-    connectedComponents(
-      candidatesFromSigs(slice, idCol, minEstE6, assumeUnique = true),
-      "doc_a", "doc_b")
-
-  /** [[relabelScopedFromSigs]]' decomposition plus the measured
-    * quantities the COST DISPATCH reads ([[relabelScopedAutoFromSigs]],
-    * VERDICT r15 ask #4): the touched slice, the untouched labels, the
-    * (normalized, possibly-checkpointed) prior label frame, the gated
-    * tombstones (distinct long node ids), the touched-member count the
-    * broadcast gate already paid for, and the touched labels.
-    */
-  private[graft] final case class ScopedParts(
-      slice: DataFrame, untouched: DataFrame, lab: DataFrame,
-      dead: Measured, touchedDocs: Long, touchedLabels: DataFrame)
-
-  private[graft] def scopedParts(sigs: DataFrame, tombstones: DataFrame,
-                                 priorLabels: DataFrame, idCol: String,
-                                 materialize: Boolean = true,
-                                 broadcastMaxRows: Long = BroadcastMaxRows): ScopedParts = {
+  private[graft] def scopedDelete(sigs: DataFrame, tombstones: DataFrame,
+                                  priorLabels: DataFrame, idCol: String,
+                                  minEstE6: Long = 250000L,
+                                  materialize: Boolean = true): ScopedDelete = {
     val lab0 = canonicalLabels(priorLabels)
     val lab = if (materialize) lab0.localCheckpoint(true, DataSized) else lab0
+    val dead = tombstones.select(col(idCol).cast("long").as("node"))
+      .filter(col("node").isNotNull)
+    val slice = sigs.select(col(idCol), col("sig"))
+    driverScope(lab, dead, slice, idCol, minEstE6) match {
+      case Right(d) => d
+      case Left(why) =>
+        ccLog.info(s"scoped delete: distributed arm ($why)")
+        distributedScope(lab, dead, slice, idCol, minEstE6)
+    }
+  }
+
+  /** [[scopedDelete]]'s driver arm; Left(why) past a ceiling or off the arm. */
+  private def driverScope(lab: DataFrame, dead: DataFrame, sigs: DataFrame,
+                          idCol: String, minEstE6: Long): Either[String, ScopedDelete] = {
+    val labelMax = driverCeiling(2)
+    val sigMax = driverCeiling(SigRowWidth)
+    if (labelMax < 0) return Left("driver arms off")
+    val spark = lab.sparkSession
+    val d = measure(dead, labelMax, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    if (d.rows.isEmpty) return Left(s"${d.count} tombstones > $labelMax")
+    val deadIds = d.rows.get.map(_.getLong(0)).distinct.toSeq
+    val members = collectSlice(lab.join(
+        broadcast(lab.filter(inLongSet(col("node"), deadIds)).select("label")),
+      Seq("label"), "left_semi").select("node", "label"), labelMax)
+    if (members.rows.isEmpty) return Left(s"${members.count} touched label rows > $labelMax")
+    val deadSet = deadIds.toSet
+    val rows = members.rows.get.map(r => (r.getLong(0), r.getLong(1)))
+    val retained = rows.filterNot(r => deadSet(r._1)).groupBy(_._2).values
+      .map(_.map(_._1).distinct).filter(_.length > 1).flatten.toSeq
+    // no retained pair: an empty local slice, no query
+    val slice = collectSlice(if (retained.isEmpty) sigs.limit(0)
+      else sigs.filter(inLongSet(col(idCol), retained)), sigMax)
+    if (slice.rows.isEmpty) return Left(s"${slice.count} slice rows > $sigMax")
+    ccLog.info(s"scoped delete: driver arm (${deadIds.length} tombstones, " +
+      s"${rows.length} touched label rows <= $labelMax, ${slice.count} slice rows <= $sigMax)")
+    val touched = rows.collect { case (n, l) if deadSet(n) => l }.distinct.toSeq
+    Right(ScopedDelete(lab, localIds(spark, deadIds, "node"),
+      localIds(spark, touched, "label"), rows.length, slice.frame, Some(slice.count),
+      idCol, minEstE6))
+  }
+
+  /** Driver-held ids as a measured local frame of one long column. */
+  private def localIds(spark: org.apache.spark.sql.SparkSession, ids: Seq[Long],
+                       name: String): Measured = {
+    import spark.implicits._
+    Measured(ids.length, Some(ids.map(Row(_)).toArray), ids.toDF(name))
+  }
+
+  /** [[scopedDelete]]'s distributed arm: the label table and the
+    * signature relation are each scanned ONCE, streamed against gated
+    * batch-sized sides (tombstones → touched labels → touched members).
+    */
+  private def distributedScope(lab: DataFrame, dead: DataFrame, sigs: DataFrame,
+                               idCol: String, minEstE6: Long): ScopedDelete = {
     // tombstones: two consumers (label lookup + slice anti-join),
     // batch-sized
-    val dead = gate(tombstones.select(col(idCol).cast("long").as("node"))
-      .distinct(), broadcastMaxRows)
+    val d = gate(dead.distinct())
     // labels of components containing a tombstone: one streamed label
     // scan; a tombstoned doc absent from the labels was a CC singleton
     // — no pairs, nothing to recompute for it. Both touched sides are
@@ -1171,105 +1246,16 @@ object Dedup {
     // the gate a side is a checkpoint of lab's own projection, and with
     // AQE off the analyzer fails on the shared attribute ("Failure when
     // resolving conflicting references in Join").
-    val touchedLabels = gate(lab.join(dead.side, Seq("node"), "left_semi")
-      .select(col("label").as("label")).distinct(), broadcastMaxRows)
-    val untouched = lab.join(touchedLabels.side, Seq("label"), "left_anti")
+    val touchedLabels = gate(lab.join(d.side, Seq("node"), "left_semi")
+      .select(col("label").as("label")).distinct())
     // every member of a touched component, tombstoned or not — the
     // recompute must see all retained members to re-derive splits
     val touchedDocs = gate(lab.join(touchedLabels.side, Seq("label"), "left_semi")
-      .select(col("node").as("node")), broadcastMaxRows)
-    val slice = sigs.select(col(idCol), col("sig"))
+      .select(col("node").as("node")))
+    val slice = sigs
       .join(touchedDocs.side.withColumnRenamed("node", idCol), Seq(idCol), "left_semi")
-      .join(dead.side.withColumnRenamed("node", idCol), Seq(idCol), "left_anti")
-    ScopedParts(slice, untouched.select("node", "label"), lab, dead,
-      touchedDocs.count, touchedLabels.frame)
-  }
-
-  /** A scoped delete batch as driver-local relations: the recomputed
-    * touched-component rows (node, label), the touched labels (label)
-    * and the distinct tombstones (node).
-    */
-  private[graft] final case class LocalDelete(delta: DataFrame, touchedLabels: DataFrame,
-                                              dead: DataFrame)
-
-  /** The scoped delete's driver arm ([[LabelStore.appendDelete]]'s):
-    * the tombstones, every label row of the components they touch (ONE
-    * query) and those members' retained signatures (one more) are
-    * collected, each under its share of the broadcast budget
-    * ([[driverCeiling]]), and the slice's delta is computed from the
-    * local rows by the same candidates + components verbs as the
-    * distributed arm. None past any ceiling or when the driver arms are
-    * off: the caller takes the distributed [[scopedParts]]. Same rows
-    * as the distributed arm: the touched labels are the tombstones'
-    * labels, the slice is every retained member of their components.
-    */
-  private[graft] def scopedDeleteOnDriver(sigs: DataFrame, tombstones: DataFrame,
-                                          priorLabels: DataFrame, idCol: String,
-                                          minEstE6: Long,
-                                          broadcastMaxRows: Long = BroadcastMaxRows)
-      : Option[LocalDelete] = {
-    val labelMax = driverCeiling(broadcastMaxRows, 2)
-    val sigMax = driverCeiling(broadcastMaxRows, SigRowWidth)
-    def distributed(why: String): Option[LocalDelete] = {
-      ccLog.info(s"scoped delete: distributed arm ($why)"); None
-    }
-    if (labelMax < 0) return distributed("driver arms off")
-    val spark = sigs.sparkSession
-    import spark.implicits._
-    val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val lab = canonicalLabels(priorLabels)
-    val dead0 = measure(tombstones.select(col(idCol).cast("long").as("node"))
-      .filter(col("node").isNotNull), labelMax, level)
-    dead0.rows match {
-      case None => distributed(s"${dead0.count} tombstones > $labelMax")
-      case Some(d) =>
-        val dead = d.map(_.getLong(0)).distinct
-        val members = collectSlice(lab.join(
-            broadcast(lab.filter(inLongSet(col("node"), dead)).select("label")),
-          Seq("label"), "left_semi").select("node", "label"), labelMax)
-        members.rows match {
-          case None => distributed(s"${members.count} touched label rows > $labelMax")
-          case Some(ms) =>
-            val deadSet = dead.toSet
-            val rows = ms.map(r => (r.getLong(0), r.getLong(1)))
-            // no candidate pair leaves a prior component (the scoping
-            // theorem), so only components with two or more retained
-            // members can keep a pair: the rest become singletons
-            val retained = rows.filterNot(r => deadSet(r._1)).groupBy(_._2).values
-              .map(_.map(_._1).distinct).filter(_.length > 1).flatten.toSeq
-            val slice = if (retained.isEmpty) None else Some(collectSlice(
-              sigs.select(col(idCol), col("sig")).filter(inLongSet(col(idCol), retained)),
-              sigMax))
-            if (slice.exists(_.rows.isEmpty)) distributed(s"${slice.get.count} slice rows > $sigMax")
-            else {
-              ccLog.info(s"scoped delete: driver arm (${dead.length} tombstones, " +
-                s"${rows.length} touched label rows <= $labelMax, " +
-                s"${slice.fold(0L)(_.count)} slice rows <= $sigMax)")
-              val touched = rows.collect { case (n, l) if deadSet(n) => l }.distinct
-              // the slice is local rows: its candidate and components
-              // queries plan as one job each
-              val delta = slice.fold(Seq.empty[(Long, Long)].toDF("node", "label"))(sl =>
-                localQueries(spark)(materialized(connectedComponents(
-                  candidatesFromSigs(sl.frame, idCol, minEstE6, materialize = false,
-                    assumeUnique = true), "doc_a", "doc_b"))))
-              Some(LocalDelete(delta, touched.toSeq.toDF("label"), dead.toSeq.toDF("node")))
-            }
-        }
-    }
-  }
-
-  /** [[relabelScopedFromSigs]]' two halves, exposed as a seam so the
-    * spec can prove the SCOPE claim directly: returns (the retained
-    * tombstone-touched signature slice — the ONLY rows fed to the
-    * candidate + CC recompute, and the untouched prior labels — passed
-    * through verbatim, never recomputed).
-    */
-  private[graft] def scopedDeleteParts(sigs: DataFrame, tombstones: DataFrame,
-                                       priorLabels: DataFrame, idCol: String,
-                                       materialize: Boolean = true)
-      : (DataFrame, DataFrame) = {
-    val p = scopedParts(sigs, tombstones, priorLabels, idCol, materialize)
-    (p.slice, p.untouched)
+      .join(d.side.withColumnRenamed("node", idCol), Seq(idCol), "left_anti")
+    ScopedDelete(lab, d, touchedLabels, touchedDocs.count, slice, None, idCol, minEstE6)
   }
 
   /** The scoped relabel's MEASURED dispatch floor: below this many
@@ -1304,8 +1290,9 @@ object Dedup {
     * [[ScopedMinCorpusRows]] labeled rows or the takedown touched more
     * than [[ScopedMaxTouchedFraction]] of them. Both arms return the
     * same labels by the scoping theorem (DedupSpec pins the equality
-    * through this verb); the dispatch reads only counts the scoped
-    * path's broadcast gates already pay, plus one labeled-row count.
+    * through this verb); the dispatch reads the touched-row count
+    * [[scopedDelete]]'s scope measured, plus one labeled-row count, and
+    * the full arm never runs the scoped recompute.
     */
   def relabelScopedAutoFromSigs(sigs: DataFrame, tombstones: DataFrame,
                                 priorLabels: DataFrame, idCol: String,
@@ -1314,21 +1301,20 @@ object Dedup {
                                 minCorpusRows: Long = ScopedMinCorpusRows,
                                 maxTouchedFraction: Double = ScopedMaxTouchedFraction)
       : DataFrame = {
-    val p = scopedParts(sigs, tombstones, priorLabels, idCol, materialize)
-    val corpus = p.lab.count()
+    val d = scopedDelete(sigs, tombstones, priorLabels, idCol, minEstE6, materialize)
+    val corpus = d.lab.count()
     val pickFull = corpus < minCorpusRows ||
-      (corpus > 0L && p.touchedDocs.toDouble / corpus > maxTouchedFraction)
+      (corpus > 0L && d.touchedDocs.toDouble / corpus > maxTouchedFraction)
     ccLog.info(s"relabelScopedAuto: ${if (pickFull) "FULL" else "SCOPED"} arm " +
-      s"(touched ${p.touchedDocs} of $corpus labeled rows)")
+      s"(touched ${d.touchedDocs} of $corpus labeled rows)")
     if (pickFull)
       connectedComponents(
         candidatesFromSigs(
           sigs.select(col(idCol), col("sig"))
-            .join(p.dead.side.withColumnRenamed("node", idCol),
-              Seq(idCol), "left_anti"),
+            .join(d.dead.side.withColumnRenamed("node", idCol), Seq(idCol), "left_anti"),
           idCol, minEstE6, assumeUnique = true),
         "doc_a", "doc_b")
-    else p.untouched.unionByName(scopedDeltaOf(p.slice, idCol, minEstE6))
+    else d.labels
   }
 
   /** Remove tombstoned docs from an accumulating SIGNATURE-DISTINCT
@@ -1353,8 +1339,7 @@ object Dedup {
     *   rows may still be present (they are anti-joined out here).
     */
   def deleteFromIndexDistinct(index: DataFrame, retainedSigs: DataFrame,
-                              tombstones: DataFrame, idCol: String,
-                              broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
+                              tombstones: DataFrame, idCol: String): DataFrame = {
     // measured broadcast gate (the incrementalComponents 2M rule): a
     // mass takedown must degrade to shuffle joins, not driver-OOM.
     // The deduped dead frame and its gated side are built ONCE and
@@ -1363,11 +1348,11 @@ object Dedup {
     // per delete batch on the hot maintenance path).
     def distributed(why: String): DataFrame = {
       ccLog.info(s"deleteFromIndexDistinct: distributed arm ($why)")
-      val deadSide = gate(tombstones.select(col(idCol)).distinct(), broadcastMaxRows).side
+      val deadSide = gate(tombstones.select(col(idCol)).distinct()).side
       index.join(deadSide, Seq(idCol), "left_anti")
-        .unionByName(reElectRows(index, retainedSigs, deadSide, idCol, broadcastMaxRows))
+        .unionByName(reElectRows(index, retainedSigs, deadSide, idCol))
     }
-    val sigMax = driverCeiling(broadcastMaxRows, SigRowWidth)
+    val sigMax = driverCeiling(SigRowWidth)
     if (sigMax < 0) return distributed("driver arms off")
     val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val dead = measure(tombstones.select(col(idCol)).filter(col(idCol).isNotNull),
@@ -1412,8 +1397,7 @@ object Dedup {
   def reElectIndexRows(index: DataFrame, retainedSigs: DataFrame,
                        tombstones: DataFrame, idCol: String): DataFrame =
     reElectRows(index, retainedSigs,
-      gate(tombstones.select(col(idCol)).distinct(), BroadcastMaxRows).side,
-      idCol, BroadcastMaxRows)
+      gate(tombstones.select(col(idCol)).distinct()).side, idCol)
 
   /** [[reElectIndexRows]] over an already-deduped/materialized/gated
     * tombstone side — so [[deleteFromIndexDistinct]] shares one dead
@@ -1421,12 +1405,11 @@ object Dedup {
     * measuring it twice per delete batch (ADVICE r15).
     */
   private def reElectRows(index: DataFrame, retainedSigs: DataFrame,
-                          deadSide: DataFrame, idCol: String,
-                          broadcastMaxRows: Long): DataFrame = {
+                          deadSide: DataFrame, idCol: String): DataFrame = {
     val drsSide = gate(index
       .filter(col("band") === 0 && col("sig").getItem(0).isNotNull)
       .join(deadSide, Seq(idCol), "left_semi")
-      .select("sig").distinct(), broadcastMaxRows).side
+      .select("sig").distinct()).side
     bandIndexDistinctFromSigs(
       retainedSigs.select(col(idCol), col("sig"))
         .filter(col("sig").getItem(0).isNotNull)

@@ -229,10 +229,12 @@ object DedupIndex {
   /** [[relabel]] SCOPED to tombstone-touched components (VERDICT r14
     * ask #1): [[deleteAndRelabel]] recomputed CC over the whole
     * retained sidecar per deletion batch — O(corpus) for a takedown
-    * touching a handful of clusters. This reads the table's signature
-    * sidecar ONCE against broadcast tombstone-derived sets and
-    * recomputes candidates + CC over exactly the touched components'
-    * retained members; untouched labels pass through verbatim
+    * touching a handful of clusters. This scopes the batch with the
+    * scoped-delete kernel (the touched components' retained members'
+    * signatures, collected on the driver when they fit, else one
+    * sidecar scan against gated tombstone-derived sets) and recomputes
+    * candidates + CC over exactly that slice; untouched labels pass
+    * through verbatim
     * ([[Dedup.relabelScopedFromSigs]] carries the correctness
     * argument; x92 pins the answer under the same DuckDB closure
     * oracle as x89). The tombstones are applied LOGICALLY — the verb

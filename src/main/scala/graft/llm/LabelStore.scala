@@ -5,11 +5,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The label table's MERGE-ON-READ lifecycle as a library verb
-  * (VERDICT r15 ask #5): [[Dedup.relabelScopedDelta]]'s scaladoc
-  * prescribes "store the delta beside the label table and fold at
-  * compaction cadence", and round 15's ScaleSmoke interleave stage did
-  * exactly that inline — but every consumer had to re-derive the
-  * stitch discipline by hand. This object owns it, and is the only
+  * (VERDICT r15 ask #5): a deletion's recomputed rows
+  * ([[Dedup.ScopedDelete.delta]]) are stored beside the label table and
+  * folded at compaction cadence, and round 15's ScaleSmoke interleave
+  * stage did exactly that inline — but every consumer had to re-derive
+  * the stitch discipline by hand. This object owns it, and is the only
   * code that knows the layout on disk:
   *
   *  - `base` — the folded (node, label) parquet (one row per
@@ -33,7 +33,7 @@ import org.apache.spark.sql.functions._
   * invariant every writer maintains — '''a dropped label's surviving
   * rows are all present in that batch's delta''' — which holds for
   * [[appendDelete]] by the scoping theorem (the delta recomputes ALL
-  * retained members of touched components, Dedup.relabelScopedFromSigs)
+  * retained members of touched components, Dedup.scopedDelete)
   * and for [[Dedup.incrementalComponentsDelta]]'s output because
   * min-label components relabel atomically (two nodes of one label
   * always change together).
@@ -189,55 +189,29 @@ object LabelStore {
   }
 
   /** Apply a DELETION batch at O(touched) write cost: the scoped
-    * relabel's parts are computed against the store's current view,
-    * and only the delta (recomputed touched-component rows), the drop
-    * set (touched labels), and the tombstones land on disk — never the
-    * stitched table ([[Dedup.relabelScopedDelta]]'s prescription, now
-    * owned by the store).
+    * deletion kernel ([[Dedup.scopedDelete]]) runs against the store's
+    * current view, and only its delta (recomputed touched-component
+    * rows), its drop set (touched labels) and the tombstones land on
+    * disk — never the stitched table. All three are landed before the
+    * write (local relations on the driver arm, measured checkpoints
+    * past it), so the write reads no label state it extends.
     *
     * @param sigs the doc-level (idCol, sig) relation, tombstoned rows
     *   still present (they are excluded by the scoping internally).
     */
   def appendDelete(spark: SparkSession, dir: String, sigs: DataFrame,
                    tombstones: DataFrame, idCol: String,
-                   minEstE6: Long = 250000L): Unit =
-    appendDelete(spark, dir, sigs, tombstones, idCol, minEstE6,
-      read(spark, dir))
-
-  /** [[appendDelete]] against a caller-held current view — the
-    * hot-loop overload: a maintenance loop that just computed
-    * [[read]] for its own consumers passes it in instead of paying
-    * the stitch plan construction (and its listing) again per batch.
-    */
-  def appendDelete(spark: SparkSession, dir: String, sigs: DataFrame,
-                   tombstones: DataFrame, idCol: String,
-                   minEstE6: Long, current: DataFrame): Unit = {
-    // driver arm: the delta, the touched labels and the tombstones come
-    // back as local relations, so the write below scans nothing
-    Dedup.scopedDeleteOnDriver(sigs, tombstones, current, idCol, minEstE6) match {
-      case Some(l) => appendLog(spark, dir, l.delta, l.touchedLabels, l.dead)
-      case None =>
-        val parts = Dedup.scopedParts(sigs, tombstones, current, idCol,
-          materialize = false)
-        // the delta reads the label state the write extends — land it
-        // before anything else moves (the compact rule, O(touched)); a
-        // driver union-find result is landed already. The touched labels
-        // and the scoping's distinct long node ids are measured and
-        // materialized by the scoping.
-        val delta = Dedup.materialized(Dedup.connectedComponents(
-            Dedup.candidatesFromSigs(parts.slice, idCol, minEstE6,
-              assumeUnique = true), "doc_a", "doc_b"))
-        appendLog(spark, dir, delta, parts.touchedLabels, parts.dead.frame)
-    }
+                   minEstE6: Long = 250000L): Unit = {
+    val d = Dedup.scopedDelete(sigs, tombstones, read(spark, dir), idCol, minEstE6,
+      materialize = false)
+    appendLog(spark, dir, d.delta, d.touchedLabels.frame, d.dead.frame)
   }
 
   /** Append a PRECOMPUTED (delta, dropLabels) batch — the zero-diff
     * writer for producers that emit the changed rows directly
-    * ([[Dedup.incrementalComponentsDelta]] for additions;
-    * [[Dedup.relabelScopedDelta]] + its touched labels for deletions
-    * when the caller manages tombstones itself). The caller owns the
-    * drop invariant: every surviving row of a dropped label must be in
-    * `delta`.
+    * ([[Dedup.incrementalComponentsDelta]] for additions). The caller
+    * owns the drop invariant: every surviving row of a dropped label
+    * must be in `delta`.
     */
   def appendDelta(spark: SparkSession, dir: String, delta: DataFrame,
                   dropLabels: DataFrame): Unit = {

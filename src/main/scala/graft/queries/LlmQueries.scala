@@ -2292,8 +2292,9 @@ object LlmQueries {
     // of their endpoints' signatures — removal deletes edges, never
     // creates one), so DedupIndex.relabelScoped recomputes candidates
     // + CC over exactly the touched components' retained members —
-    // one streamed sidecar scan against broadcast tombstone-derived
-    // sets; untouched labels pass through VERBATIM from the persisted
+    // collected on the driver when they fit (Dedup.scopedDelete), else
+    // one streamed sidecar scan against gated tombstone-derived sets;
+    // untouched labels pass through VERBATIM from the persisted
     // prior fixpoint (DedupSpec proves the passthrough by poisoning).
     // Tombstones apply LOGICALLY (pre-compact table), so the physical
     // rewrite stays a scheduled maintenance pass and the per-takedown

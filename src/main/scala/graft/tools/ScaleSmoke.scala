@@ -229,25 +229,23 @@ object ScaleSmoke {
     val tombs = corpus.filter(col("doc_id") < stride &&
         col("doc_id") % 200 === 3)
       .select("doc_id").localCheckpoint(true)
-    val (slice, untouched) = Dedup.scopedDeleteParts(sigs, tombs, labels,
-      "doc_id", materialize = false)
-    println(s"  tombstones: ${tombs.count()}; touched-component slice: " +
-      s"${slice.count()} retained sigs (of ${sigs.count()})")
-    // the takedown VERB: the label delta alone — two streamed scans
-    // (labels for the touched lookup, sigs for the slice; no shuffle
-    // of either) + candidates/CC over the touched slice; its
+    // the takedown VERB: the scoped-delete kernel's scope (the touched
+    // lookup in the labels, the slice from the sigs; collected on the
+    // driver arm, streamed scans past it) and its recompute
+    // (candidates/CC over the touched slice); the delta's
     // materialization is O(touched), the merge-on-read write a
     // deployment stores beside the label table
-    val (delta, tDelta) = timed("  SCOPED delta (the takedown verb)") {
-      val l = Dedup.relabelScopedDelta(sigs, tombs, labels, "doc_id",
-          materialize = false)
-        .localCheckpoint(true)
-      l.count(); l
+    val (scope, tDelta) = timed("  SCOPED delta (the takedown verb)") {
+      val d = Dedup.scopedDelete(sigs, tombs, labels, "doc_id", materialize = false)
+      d.delta.count(); d
     }
+    println(s"  tombstones: ${tombs.count()}; touched-component slice: " +
+      s"${scope.sliceRows.getOrElse(scope.slice.count())} retained sigs " +
+      s"(of ${sigs.count()})")
     // the full-view stitch a compaction pass pays (O(corpus) write —
     // deferred to whatever cadence folds the deltas in)
     val (scoped, tView) = timed("  merge-on-read view stitch (compaction-cadence)") {
-      val l = untouched.unionByName(delta)
+      val l = scope.labels
         .localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
       l.count(); l
     }
@@ -314,15 +312,13 @@ object ScaleSmoke {
       ("all %3==0 (mass delete)", corpus.filter(col("doc_id") % 3 === 0)))
     cases.foreach { case (name, t0) =>
       val tombs = t0.select("doc_id").localCheckpoint(true)
-      val parts = Dedup.scopedParts(sigs, tombs, labels, "doc_id",
-        materialize = false)
-      val frac = if (labeled == 0) 0.0 else parts.touchedDocs.toDouble / labeled
-      val (scoped, tScoped) = timed(f"  scoped [$name]") {
-        val l = Dedup.relabelScopedFromSigs(sigs, tombs, labels, "doc_id",
-            materialize = false)
+      val ((scope, scoped), tScoped) = timed(f"  scoped [$name]") {
+        val d = Dedup.scopedDelete(sigs, tombs, labels, "doc_id", materialize = false)
+        val l = d.labels
           .localCheckpoint(true, org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        l.count(); l
+        l.count(); (d, l)
       }
+      val frac = if (labeled == 0) 0.0 else scope.touchedDocs.toDouble / labeled
       val (full, tFull) = timed(f"  full   [$name]") {
         val l = Dedup.connectedComponents(
             Dedup.candidatesFromSigs(
@@ -335,7 +331,7 @@ object ScaleSmoke {
       require(cs == cf, s"dispatchsweep[$name]: scoped != full: $cs vs $cf")
       val pick = if (labeled < Dedup.ScopedMinCorpusRows ||
           frac > Dedup.ScopedMaxTouchedFraction) "FULL" else "SCOPED"
-      println(f"  [$name] touched ${parts.touchedDocs}%d / $labeled%d " +
+      println(f"  [$name] touched ${scope.touchedDocs}%d / $labeled%d " +
         f"(${frac * 100}%.2f%%): scoped $tScoped%.2f s vs full $tFull%.2f s " +
         f"(${tFull / tScoped}%.2fx); dispatch picks $pick " +
         f"(labels checksum-identical)")
@@ -448,8 +444,7 @@ object ScaleSmoke {
         // re-election would see nothing to re-elect
         Dedup.reElectIndexRows(indexView, preSigs, tombs, "doc_id")
           .write.mode("append").parquet(idxDir)
-        LabelStore.appendDelete(spark, store, preSigs, tombs, "doc_id",
-          250000L, LabelStore.read(spark, store).localCheckpoint(true))
+        LabelStore.appendDelete(spark, store, preSigs, tombs, "doc_id")
       }
       delWalls += tDel
     }

@@ -343,37 +343,44 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
       Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
         10L -> 10L, 11L -> 10L))
 
-    // the seam: deleting bridge 3 feeds CC exactly the touched
-    // component's RETAINED members — the untouched pair {10,11} (and
-    // singleton 20) never enter the recompute
+    // the kernel's scope: deleting bridge 3 feeds CC exactly the
+    // touched component's RETAINED members — the untouched pair {10,11}
+    // (and singleton 20) never enter the recompute. Its outputs are
+    // checked on every arm: the driver arm collects the scope, the
+    // others build it by gated joins.
     val tomb = Seq(3L).toDF("doc_id")
-    val (slice, untouched) =
-      Dedup.scopedDeleteParts(sigs, tomb, prior, "doc_id")
-    assert(slice.select("doc_id").collect().map(_.getLong(0)).toSet ===
-      Set(1L, 2L, 4L, 5L),
-      "the CC recompute must see exactly the touched component's retained members")
-    assert(untouched.collect().map(r => (r.getLong(0), r.getLong(1))).toMap ===
-      Map(10L -> 10L, 11L -> 10L))
-
     // poison-proof: rewrite the untouched component's labels to a
     // value NO recompute would produce (a recompute restores the
     // component minimum 10); the scoped path must carry the poison
     // through — direct evidence untouched labels are never re-derived
     val poisoned = prior.select(col("node"),
       when(col("label") === 10L, lit(9910L)).otherwise(col("label")).as("label"))
-    val got = Dedup.relabelScopedFromSigs(sigs, tomb, poisoned, "doc_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(got === Map(1L -> 1L, 2L -> 1L, 4L -> 4L, 5L -> 4L,
-      10L -> 9910L, 11L -> 9910L),
-      "split re-derived for the touched component; poison preserved for the untouched one")
-
-    // the DELTA form — the changed rows alone (what a takedown
-    // materializes; O(touched), the merge-on-read write): exactly the
-    // touched component's recomputed labels, nothing else
-    val delta = Dedup.relabelScopedDelta(sigs, tomb, prior, "doc_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(delta === Map(1L -> 1L, 2L -> 1L, 4L -> 4L, 5L -> 4L),
-      "the delta must carry exactly the recomputed touched rows")
+    def labelsOf(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    for (arm <- Seq(Dedup.Arm.Driver, Dedup.Arm.Broadcast, Dedup.Arm.Shuffle))
+      Dedup.arm.withValue(arm) {
+        val d = Dedup.scopedDelete(sigs, tomb, poisoned, "doc_id")
+        assert(d.slice.select("doc_id").collect().map(_.getLong(0)).toSet ===
+          Set(1L, 2L, 4L, 5L),
+          s"$arm: the CC recompute must see exactly the touched component's retained members")
+        assert(d.sliceRows.isDefined === (arm == Dedup.Arm.Driver), s"$arm: the scope's arm")
+        assert(labelsOf(d.untouched) === Map(10L -> 9910L, 11L -> 9910L),
+          s"$arm: untouched rows pass through verbatim, poison included")
+        // the DELTA — the changed rows alone (what a takedown
+        // materializes; O(touched), the merge-on-read write): exactly
+        // the touched component's recomputed labels, nothing else
+        assert(labelsOf(d.delta) === Map(1L -> 1L, 2L -> 1L, 4L -> 4L, 5L -> 4L),
+          s"$arm: the delta must carry exactly the recomputed touched rows")
+        assert(labelsOf(Dedup.relabelScopedFromSigs(sigs, tomb, poisoned, "doc_id")) ===
+          Map(1L -> 1L, 2L -> 1L, 4L -> 4L, 5L -> 4L, 10L -> 9910L, 11L -> 9910L),
+          s"$arm: split re-derived for the touched component; poison preserved " +
+            "for the untouched one")
+        // deleting the bridge and both C docs leaves the component
+        // exactly two retained members, {1,2}: they keep their pair
+        assert(labelsOf(Dedup.relabelScopedFromSigs(sigs, Seq(3L, 4L, 5L).toDF("doc_id"),
+            prior, "doc_id")) === Map(1L -> 1L, 2L -> 1L, 10L -> 10L, 11L -> 10L),
+          s"$arm: a component left with two retained members keeps its pair")
+      }
 
     // deleting a CC singleton (doc 20 — in the sigs, never in a pair)
     // touches no component: labels unchanged
@@ -679,8 +686,8 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
-  test("past the broadcast gates (broadcastMaxRows = -1) every gated verb " +
-    "returns what its broadcast branch returns") {
+  test("on every arm (driver, broadcast, shuffle) every gated verb " +
+    "returns the same rows") {
     val s = spark; import s.implicits._
     def rowsOf(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -696,40 +703,33 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     val tomb = Seq(2L, 5L, 11L).toDF("doc_id")
     // additions: a bridge between old components, a new pair, a repeat
     val edges = Seq((30L, 1L), (30L, 7L), (40L, 41L), (2L, 3L)).toDF("a", "b")
-    val autoKey = "spark.sql.autoBroadcastJoinThreshold"
-    val autoPrev = s.conf.get(autoKey)
-    def both[T](f: Long => T): (T, T) = {
-      // the broadcast branch of the distributed arms: the driver arms
-      // (MaintenanceArmsSpec) would take these batches
-      val wide = Dedup.driverArms.withValue(false)(f(Dedup.BroadcastMaxRows))
-      // and no size-based broadcast either: the shuffle joins run
-      s.conf.set(autoKey, "-1")
-      try (wide, f(-1L)) finally s.conf.set(autoKey, autoPrev)
+    // f's rows on each arm; the shuffle arm also runs with no size-based
+    // broadcast, so its joins are shuffle joins
+    def arms[T](f: => T): Seq[T] = Seq(
+      Dedup.arm.withValue(Dedup.Arm.Driver)(f),
+      Dedup.arm.withValue(Dedup.Arm.Broadcast)(f),
+      Dedup.arm.withValue(Dedup.Arm.Shuffle)(graft.core.GraftSession.withConf(s,
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")(f)))
+    def same[T](got: Seq[T]): T = {
+      assert(got.distinct.size === 1, s"the arms differ: $got"); got.head
     }
     // ends, remap (incrementalComponents, incrementalComponentsDelta)
     // and changed (incrementalComponentsDelta)
-    val (incB, incS) = both(m => rowsOf(
-      Dedup.incrementalComponents(prior, edges, "a", "b", broadcastMaxRows = m)))
-    assert(incS === incB)
-    val (dltB, dltS) = both { m =>
-      val (chg, dropped) = Dedup.incrementalComponentsDelta(prior, edges, "a", "b",
-        broadcastMaxRows = m)
+    same(arms(rowsOf(Dedup.incrementalComponents(prior, edges, "a", "b"))))
+    val dlt = same(arms {
+      val (chg, dropped) = Dedup.incrementalComponentsDelta(prior, edges, "a", "b")
       (rowsOf(chg), dropped.collect().map(_.getLong(0)).toSet)
-    }
-    assert(dltB._1.nonEmpty && dltS === dltB)
+    })
+    assert(dlt._1.nonEmpty)
     // dead, touched labels, touched docs (the scoped delete relabel)
-    val (relB, relS) = both(m => rowsOf(Dedup.relabelScopedFromSigs(sigs, tomb,
-      prior, "doc_id", broadcastMaxRows = m)))
-    assert(relS === relB)
-    assert(relB === rowsOf(Dedup.connectedComponents(
+    val rel = same(arms(rowsOf(Dedup.relabelScopedFromSigs(sigs, tomb, prior, "doc_id"))))
+    assert(rel === rowsOf(Dedup.connectedComponents(
       Dedup.candidatesFromSigs(sigs.join(tomb, Seq("doc_id"), "left_anti"),
         "doc_id", assumeUnique = true), "doc_a", "doc_b")))
     // dead and dead-rep signatures (the index delete)
-    val (idxB, idxS) = both(m => Dedup.deleteFromIndexDistinct(index, sigs, tomb,
-        "doc_id", broadcastMaxRows = m)
+    same(arms(Dedup.deleteFromIndexDistinct(index, sigs, tomb, "doc_id")
       .select(col("doc_id"), col("band").cast("long")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet)
-    assert(idxS === idxB)
+      .map(r => (r.getLong(0), r.getLong(1))).toSet))
   }
 
   test("winnowing theorem: a shared >=k+w-1 substring yields a shared fingerprint") {

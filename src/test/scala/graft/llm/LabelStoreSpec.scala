@@ -5,9 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 
 /** The label table's merge-on-read lifecycle (VERDICT r15 ask #5):
-  * read-equals-stitch — the store's folded view must equal the scoped
-  * relabel's full output whatever the batch stacking — and
-  * compact-equals-read. Includes the case a NODE-level stitch cannot
+  * read-equals-recompute — the store's folded view must equal the
+  * from-scratch clustering of the live docs whatever the batch
+  * stacking — and compact-equals-read. Includes the case a NODE-level stitch cannot
   * express: a touched member that splits into a singleton must vanish
   * from the label table (the drop set is label-based for exactly this).
   */
@@ -36,6 +36,14 @@ class LabelStoreSpec extends AnyFunSuite with SparkTestSession {
   private def labelsOf(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
 
+  /** The from-scratch clustering of `sigs` ∖ `dead`: what a store must
+    * read after those deletes, computed without the scoped kernel.
+    */
+  private def scratch(sigs: org.apache.spark.sql.DataFrame, dead: Long*) =
+    labelsOf(Dedup.connectedComponents(Dedup.candidatesFromSigs(
+      sigs.filter(!col("doc_id").isin(dead: _*)), "doc_id", assumeUnique = true),
+      "doc_a", "doc_b"))
+
   /** Batch `seq`'s rows of one kind in the store's log, as (node, label). */
   private def logRows(dir: String, seq: Int, kind: String) =
     spark.read.parquet(s"$dir/delta")
@@ -44,8 +52,8 @@ class LabelStoreSpec extends AnyFunSuite with SparkTestSession {
       .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]),
         Option(r.get(1)).map(_.asInstanceOf[Long]))).toSet
 
-  test("appendDelete: read equals the scoped relabel's stitched output, " +
-    "batches stack in sequence, compact preserves the answer") {
+  test("appendDelete: read equals the from-scratch clustering of the live " +
+    "docs, batches stack in sequence, compact preserves the answer") {
     val s = spark; import s.implicits._
     val dir = graft.core.Scratch.dir("labelstore")
     val sigs = fixture
@@ -57,10 +65,9 @@ class LabelStoreSpec extends AnyFunSuite with SparkTestSession {
     assert(labelsOf(LabelStore.read(s, dir)) === labelsOf(prior))
 
     // batch 1: delete bridge 3 — O(touched) writes, stitched read
-    // equals the full scoped verb's output on the same inputs
+    // equals the from-scratch clustering of the retained docs
     LabelStore.appendDelete(s, dir, sigs, Seq(3L).toDF("doc_id"), "doc_id")
-    val want1 = labelsOf(Dedup.relabelScopedFromSigs(
-      sigs, Seq(3L).toDF("doc_id"), prior, "doc_id"))
+    val want1 = scratch(sigs, 3L)
     assert(labelsOf(LabelStore.read(s, dir)) === want1)
     assert(want1(4L) === 4L, "fixture: the bridge split must have happened")
 
@@ -70,11 +77,7 @@ class LabelStoreSpec extends AnyFunSuite with SparkTestSession {
     // becomes a singleton and LEAVES the table)
     LabelStore.appendDelete(s, dir, sigs, Seq(6L).toDF("doc_id"), "doc_id")
     val afterTwo = labelsOf(LabelStore.read(s, dir))
-    val want2 = labelsOf(Dedup.relabelScopedFromSigs(
-      sigs.filter(col("doc_id") =!= 3L), Seq(6L).toDF("doc_id"),
-      Dedup.relabelScopedFromSigs(sigs, Seq(3L).toDF("doc_id"), prior,
-        "doc_id"), "doc_id"))
-    assert(afterTwo === want2)
+    assert(afterTwo === scratch(sigs, 3L, 6L))
     assert(!afterTwo.contains(6L) && !afterTwo.contains(7L),
       "the exact pair must be gone: 6 tombstoned, 7 a singleton now")
     assert(afterTwo.contains(10L) && afterTwo.contains(11L))
@@ -165,23 +168,26 @@ class LabelStoreSpec extends AnyFunSuite with SparkTestSession {
     val prev = s.conf.get(key)
     s.conf.set(key, "false")
     try {
-      val dir = graft.core.Scratch.dir("labelstore-noaqe")
       val sigs = fixture
       val prior = Dedup.connectedComponents(
         Dedup.candidatesFromSigs(sigs, "doc_id", assumeUnique = true),
         "doc_a", "doc_b").localCheckpoint(true)
-      LabelStore.create(s, dir, prior)
       val tomb = Seq(3L).toDF("doc_id")
-      // the distributed arm's gates, then the driver arm's queries
-      Dedup.driverArms.withValue(false)(LabelStore.appendDelete(s, dir, sigs, tomb, "doc_id"))
-      val want = labelsOf(Dedup.relabelScopedFromSigs(sigs, tomb, prior, "doc_id"))
-      assert(labelsOf(LabelStore.read(s, dir)) === want)
-      val local = graft.core.Scratch.dir("labelstore-noaqe-driver")
-      LabelStore.create(s, local, prior)
-      LabelStore.appendDelete(s, local, sigs, tomb, "doc_id")
-      assert(labelsOf(LabelStore.read(s, local)) === want)
-      assert(labelsOf(Dedup.relabelScopedFromSigs(sigs, tomb, prior, "doc_id",
-        broadcastMaxRows = -1L)) === want)
+      // the store and the stitched relabel on every arm: the driver
+      // arm's queries, the distributed arm's broadcast gates and its
+      // shuffle joins (where the untouched rows' anti join reads a
+      // checkpoint of the label table's own projection)
+      val want = scratch(sigs, 3L)
+      for (arm <- Seq(Dedup.Arm.Driver, Dedup.Arm.Broadcast, Dedup.Arm.Shuffle)) {
+        val dir = graft.core.Scratch.dir(s"labelstore-noaqe-$arm")
+        LabelStore.create(s, dir, prior)
+        Dedup.arm.withValue(arm) {
+          LabelStore.appendDelete(s, dir, sigs, tomb, "doc_id")
+          assert(labelsOf(LabelStore.read(s, dir)) === want, s"$arm: store")
+          assert(labelsOf(Dedup.relabelScopedFromSigs(sigs, tomb, prior, "doc_id")) === want,
+            s"$arm: relabelScopedFromSigs")
+        }
+      }
     } finally s.conf.set(key, prev)
   }
 

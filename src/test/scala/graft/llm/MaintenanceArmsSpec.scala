@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 
 /** The maintenance verbs' two arms agree: the same batches run through
-  * [[MaintenancePipeline]] with the driver arms on (small batches take
-  * them) and off ([[Dedup.driverArms]]) must leave the same store log,
-  * the same `LabelStore.read` and the same band index after every
+  * [[MaintenancePipeline]] on the driver arms (small batches take them)
+  * and on the distributed ones (the `Broadcast` [[Dedup.arm]]) must
+  * leave the same store log, the same `LabelStore.read` and the same
+  * band index after every
   * batch, and both must equal the from-scratch clustering of the live
   * docs. Signatures are built from 12-long halves, so two docs sharing
   * a half share 6 bands and estimate jaccard 0.5: the edges are chosen
@@ -50,13 +51,13 @@ class MaintenanceArmsSpec extends AnyFunSuite with SparkTestSession {
     val driver = new MaintenancePipeline(spark, graft.core.Scratch.dir(s"$name-driver"))
     val dist = new MaintenancePipeline(spark, graft.core.Scratch.dir(s"$name-dist"))
     driver.build(sigsOf(base))
-    Dedup.driverArms.withValue(false)(dist.build(sigsOf(base)))
+    Dedup.arm.withValue(Dedup.Arm.Broadcast)(dist.build(sigsOf(base)))
     var live = base.toMap
     val all = (base ++ batches.flatMap(_.adds)).toMap
     batches.zipWithIndex.foreach { case (b, i) =>
       val add = if (b.adds.isEmpty) None else Some(sigsOf(b.adds).localCheckpoint(true))
       driver(add, b.dels, b.compact)
-      Dedup.driverArms.withValue(false)(dist(add, b.dels, b.compact))
+      Dedup.arm.withValue(Dedup.Arm.Broadcast)(dist(add, b.dels, b.compact))
       live = live ++ b.adds -- b.dels
       val (d, s) = (state(driver), state(dist))
       d.keys.foreach(k => assert(d(k) === s(k), s"$name batch $i: $k differs between the arms"))
