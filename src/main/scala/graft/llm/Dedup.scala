@@ -852,18 +852,21 @@ object Dedup {
     * (x88 pins exactly that equality under the DuckDB full-closure
     * oracle; DedupSpec asserts it on randomized edge splits).
     *
+    * The fold IS [[incrementalComponentsDelta]]'s stitch — the prior
+    * rows of labels the batch did not drop, plus its changed rows —
+    * as [[relabelScopedFromSigs]] is [[scopedDelete]]'s: one kernel,
+    * whose arms and ceilings decide how the batch is folded.
+    *
     * Scale: the label table is corpus-sized but is never shuffled —
-    * both passes stream it against BROADCAST batch-sized frames (the
-    * touched-endpoint lookup, then the old_label→new_label remap),
-    * and the label-level CC runs on a graph whose size is bounded by
-    * the batch's edges, taking [[connectedComponents]]' measured-count
-    * driver path at typical batch sizes. Per-batch cost is therefore
-    * two linear label-table scans + O(batch), independent of the
-    * corpus' EDGE count — the same delta economics the candidate side
-    * already had. Every stage degrades for a MEGA-batch: the broadcast
-    * hints are gated on measured counts (past ~2M rows the endpoint /
-    * remap joins fall back to shuffle joins — ADVICE r13), and the
-    * label-level CC past 1M pairs takes the distributed rounds.
+    * the kernel reads it against batch-sized sides (one collect of the
+    * touched components' rows on the driver arm; broadcast endpoint
+    * and changed-label sets on the distributed arm), and the stitch
+    * streams it once more against the broadcast dropped labels.
+    * Per-batch cost is therefore linear label-table scans + O(batch),
+    * independent of the corpus' EDGE count. Every stage degrades for a
+    * MEGA-batch: the broadcast hints are gated on measured counts (past
+    * ~2M rows the joins fall back to shuffle joins — ADVICE r13), and
+    * the label-level CC past 1M pairs takes the distributed rounds.
     *
     * ADDITIONS ONLY, by design: a deletion can SPLIT a component, and
     * min-label state retains no edges to re-derive the split — the
@@ -874,113 +877,47 @@ object Dedup {
     * would silently leave the dead node's bridges intact.
     *
     * @param materialize checkpoint the canonicalized label table
-    *   before its two streamed scans (default). Pass `false` when the
+    *   before its streamed scans (default). Pass `false` when the
     *   caller's `labels` is ALREADY materialized — a parquet-backed
-    *   table or a frame the fold loop checkpoints itself (st29's
-    *   shape) — so a per-batch fold doesn't pay a redundant
-    *   corpus-sized write; with an unmaterialized lineage the two
-    *   scans would re-run the whole producing pipeline twice, hence
-    *   the default.
+    *   table or a frame the fold loop checkpoints itself — so a
+    *   per-batch fold doesn't pay a redundant corpus-sized write; with
+    *   an unmaterialized lineage each scan would re-run the whole
+    *   producing pipeline, hence the default.
     */
   def incrementalComponents(labels: DataFrame, newEdges: DataFrame,
                             aCol: String, bCol: String,
                             materialize: Boolean = true): DataFrame = {
-    val p = incCcParts(labels, newEdges, aCol, bCol, materialize)
-    // second streamed scan: relabel ONLY rows whose label is remapped
-    // (broadcast hash join, no exchange of the label table); rows of
-    // untouched components coalesce through unchanged
-    val updatedOld = p.lab
-      .join(p.remap.side, col("label") === col("old_label"), "left")
-      .select(col("node"),
-        coalesce(col("new_label"), col("label")).as("label"))
-    updatedOld.unionByName(p.newNodes)
+    val lab = canonicalPrior(labels, materialize)
+    val (changed, dropped) = componentsDelta(lab, canonicalEdges(newEdges, aCol, bCol))
+    lab.join(gate(dropped).side, Seq("label"), "left_anti").select("node", "label")
+      .unionByName(changed)
   }
 
-  /** [[incrementalComponents]]' shared prelude: canonicalized inputs,
-    * the touched-endpoint slice, and the label-level CC remap — built
-    * once, consumed by both the full-table form and the merge-on-read
-    * [[incrementalComponentsDelta]] form.
+  /** `labels` canonical ([[canonicalLabels]]), checkpointed once when
+    * the caller asks: the prior label table every maintenance verb
+    * scans more than once.
     */
-  private final case class IncCcParts(lab: DataFrame, remap: Measured,
-                                      newNodes: DataFrame)
-
-  private def incCcParts(labels: DataFrame, newEdges: DataFrame,
-                         aCol: String, bCol: String,
-                         materialize: Boolean): IncCcParts = {
-    // canonicalize both inputs once (the long cast + null drop rule
-    // connectedComponents documents); labels feed two streamed scans,
-    // edges feed the resolve join + the new-node set — data-sized
-    // frames checkpoint DISK_ONLY, batch-sized edges keep the default
-    val lab0 = canonicalLabels(labels)
-    val lab = if (materialize) lab0.localCheckpoint(true, DataSized) else lab0
-    // lazy: the ends gate below materializes e's cache on the way —
-    // one pass over the candidate producer instead of two
-    val e = canonicalEdges(newEdges, aCol, bCol).localCheckpoint(false)
-    // the touched endpoints' current labels: ONE streamed scan of the
-    // label table against the broadcast endpoint set — the batch-sized
-    // output is all later stages ever see of the corpus.
-    // The broadcast hints are gated on MEASURED counts (the
-    // connectedComponents nNodes pattern, ADVICE r13): a mega-batch's
-    // endpoint or remap set past ~64 MB of long pairs must degrade to
-    // a graceful shuffle join, not force-broadcast into a driver OOM —
-    // the same 2M-row gate the CC label table uses.
-    val ends = gate(e.select(col("a").as("node"))
-      .union(e.select(col("b").as("node"))).distinct())
-    val touched = lab.join(ends.side, Seq("node"), "left_semi")
-      .localCheckpoint(true)
-    // endpoints resolve to their current label; an unlabeled endpoint
-    // (new node, or an old singleton CC never listed) stands for itself
-    val ta = touched.select(col("node").as("a"), col("label").as("la"))
-    val tb = touched.select(col("node").as("b"), col("label").as("lb"))
-    // distinct AFTER resolution: a batch of exact copies emits one
-    // member-level edge per (new doc, old copy), but they all resolve
-    // to the same (label, label) pair — the dedup costs one shuffle of
-    // a batch-sized frame and shrinks the CC input from member-level
-    // to component-level multiplicity (CC is multiplicity-blind, so
-    // semantics are untouched)
-    val labelEdges = e
-      .join(ta, Seq("a"), "left").join(tb, Seq("b"), "left")
-      .select(coalesce(col("la"), col("a")).as("la"),
-        coalesce(col("lb"), col("b")).as("lb"))
-      .distinct()
-    // label-level CC: nodes = touched labels + new ids — batch-sized,
-    // so this takes the driver union-find path at typical batches and
-    // degrades to the distributed rounds for a mega-batch
-    val merged = connectedComponents(labelEdges, "la", "lb")
-    // same measured gate as ends: remap is label-graph-sized (bounded
-    // by the batch's touched labels + new ids), so the broadcast is the
-    // common case and the shuffle the mega-batch one. On the driver
-    // union-find path it is a local relation already: no job.
-    val remap = gate(merged.select(col("node").as("old_label"),
-      col("label").as("new_label")))
-    // endpoints not in the label table enter the output with their
-    // merged label (they were their own label-graph nodes, so remap
-    // always covers them). The anti-join runs against `touched` —
-    // batch-sized, already in hand — NOT the corpus label table: ends
-    // ∩ lab ≡ ends ∩ touched by touched's construction, and an
-    // anti-join with a corpus-sized right side would have to shuffle
-    // or broadcast the corpus.
-    val newNodes = ends.frame.join(touched.select("node"), Seq("node"), "left_anti")
-      .join(remap.side, col("node") === col("old_label"), "left")
-      .select(col("node"), coalesce(col("new_label"), col("node")).as("label"))
-    IncCcParts(lab, remap, newNodes)
+  private def canonicalPrior(labels: DataFrame, materialize: Boolean): DataFrame = {
+    val lab = canonicalLabels(labels)
+    if (materialize) lab.localCheckpoint(true, DataSized) else lab
   }
 
-  /** [[incrementalComponents]]' MERGE-ON-READ form (the additions-side
-    * twin of [[ScopedDelete.delta]]): returns (the CHANGED label rows
-    * alone — existing rows whose component was remapped, relabeled,
-    * plus the batch's new nodes — and the DROPPED pre-batch labels of
-    * those changed rows). The full post-fold table is
-    * (prior ∖ rows of dropped labels) ∪ delta — exactly
-    * [[graft.llm.LabelStore]]'s stitch — and the drop invariant holds
-    * because min-label components relabel ATOMICALLY: every row of a
-    * dropped old label is remapped, hence in the delta.
+  /** [[incrementalComponents]]' MERGE-ON-READ form and its kernel (the
+    * additions-side twin of [[ScopedDelete.delta]]): returns (the
+    * CHANGED label rows alone — existing rows whose component was
+    * remapped, relabeled, plus the batch's new nodes — and the DROPPED
+    * pre-batch labels of those changed rows). The full post-fold table
+    * is (prior ∖ rows of dropped labels) ∪ delta — exactly
+    * [[graft.llm.LabelStore]]'s stitch and [[incrementalComponents]]'
+    * — and the drop invariant holds because min-label components
+    * relabel ATOMICALLY: every row of a dropped old label is remapped,
+    * hence in the delta.
     *
     * Scale: the corpus-sized relabel scan (and its full-table
-    * materialization) disappears — the one streamed label scan here
-    * feeds the batch-sized changed-rows join, so a maintenance loop's
-    * per-batch WRITE and COMPUTE are both O(touched components), with
-    * the full table reconstructed lazily at read time.
+    * materialization) disappears — the label scans here feed the
+    * batch-sized changed-rows join, so a maintenance loop's per-batch
+    * WRITE and COMPUTE are both O(touched components), with the full
+    * table reconstructed lazily at read time.
     *
     * Driver arm: a batch of at most [[DriverCcMaxPairs]] edges whose
     * touched components hold at most [[BroadcastMaxRows]] label rows
@@ -989,22 +926,25 @@ object Dedup {
     * endpoints' components — merged at label level by driver
     * union-find, and returned as two local relations, so the writer's
     * one job reads no label table. Past either ceiling the distributed
-    * form below runs, reading the collected edges' checkpoint.
+    * arm runs, reading the collected edges' checkpoint.
     */
   def incrementalComponentsDelta(labels: DataFrame, newEdges: DataFrame,
                                  aCol: String, bCol: String,
                                  materialize: Boolean = true)
-      : (DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame) =
+    componentsDelta(canonicalPrior(labels, materialize), canonicalEdges(newEdges, aCol, bCol))
+
+  /** [[incrementalComponentsDelta]] over canonical labels and edges (a, b). */
+  private def componentsDelta(lab: DataFrame, e: DataFrame): (DataFrame, DataFrame) = {
     val labelMax = driverCeiling(2)
     val edgeMax = math.min(DriverCcMaxPairs, labelMax)
     if (edgeMax < 0) {
       ccLog.info("incrementalComponentsDelta: distributed arm (driver arms off)")
-      return distributedDelta(incCcParts(labels, newEdges, aCol, bCol, materialize))
+      // lazy: the ends gate materializes it — one pass over the
+      // candidate producer instead of two
+      return distributedDelta(lab, e.localCheckpoint(false))
     }
-    val lab0 = canonicalLabels(labels)
-    val lab = if (materialize) lab0.localCheckpoint(true, DataSized) else lab0
-    val edges = measure(canonicalEdges(newEdges, aCol, bCol), edgeMax,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val edges = measure(e, edgeMax, org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val local = edges.rows.map(driverDelta(lab, _, labelMax))
     local.flatMap(_._2) match {
       case Some(out) =>
@@ -1015,7 +955,7 @@ object Dedup {
         ccLog.info("incrementalComponentsDelta: distributed arm (" + local.fold(
           s"${edges.count} edges > $edgeMax")(l =>
           s"${l._1} touched label rows > $labelMax") + ")")
-        distributedDelta(incCcParts(lab, edges.frame, "a", "b", materialize = false))
+        distributedDelta(lab, edges.frame)
     }
   }
 
@@ -1024,7 +964,7 @@ object Dedup {
     * dropped labels) relations when those rows fit `maxRows`). Every
     * label row of a touched endpoint's component is collected in ONE
     * query; the label-level graph, its union-find and the remap run
-    * here, with the distributed form's outputs row for row: the changed
+    * here, with the distributed arm's outputs row for row: the changed
     * rows are the rows of remapped labels, the new nodes are the
     * endpoints with no label row, and the drops are every remapped
     * label-graph node.
@@ -1052,14 +992,60 @@ object Dedup {
     }
   }
 
-  /** [[incrementalComponentsDelta]]'s distributed form over [[incCcParts]]. */
-  private def distributedDelta(p: IncCcParts): (DataFrame, DataFrame) = {
-    val changed = gate(p.remap.frame.filter(col("old_label") =!= col("new_label")))
-    val changedRows = p.lab
+  /** [[incrementalComponentsDelta]]'s distributed arm over canonical
+    * labels and materialized edges (a, b): the touched endpoints'
+    * labels, the label-level CC and the changed rows, each a streamed
+    * scan of the label table against a batch-sized side broadcast
+    * under a measured gate.
+    */
+  private def distributedDelta(lab: DataFrame, e: DataFrame): (DataFrame, DataFrame) = {
+    // the touched endpoints' current labels: ONE streamed scan of the
+    // label table against the broadcast endpoint set — the batch-sized
+    // output is all later stages ever see of the corpus.
+    // The broadcast hints are gated on MEASURED counts (the
+    // connectedComponents nNodes pattern, ADVICE r13): a mega-batch's
+    // endpoint or changed-label set past ~64 MB of long pairs must
+    // degrade to a graceful shuffle join, not force-broadcast into a
+    // driver OOM — the same 2M-row gate the CC label table uses.
+    val ends = gate(e.select(col("a").as("node"))
+      .union(e.select(col("b").as("node"))).distinct())
+    val touched = lab.join(ends.side, Seq("node"), "left_semi")
+      .localCheckpoint(true)
+    // endpoints resolve to their current label; an unlabeled endpoint
+    // (new node, or an old singleton CC never listed) stands for itself
+    val ta = touched.select(col("node").as("a"), col("label").as("la"))
+    val tb = touched.select(col("node").as("b"), col("label").as("lb"))
+    // distinct AFTER resolution: a batch of exact copies emits one
+    // member-level edge per (new doc, old copy), but they all resolve
+    // to the same (label, label) pair — the dedup costs one shuffle of
+    // a batch-sized frame and shrinks the CC input from member-level
+    // to component-level multiplicity (CC is multiplicity-blind, so
+    // semantics are untouched)
+    val labelEdges = e
+      .join(ta, Seq("a"), "left").join(tb, Seq("b"), "left")
+      .select(coalesce(col("la"), col("a")).as("la"),
+        coalesce(col("lb"), col("b")).as("lb"))
+      .distinct()
+    // label-level CC: nodes = touched labels + new ids — batch-sized,
+    // so this takes the driver union-find path at typical batches and
+    // degrades to the distributed rounds for a mega-batch. Only the
+    // labels that move are kept: label-graph-sized, so the broadcast is
+    // the common case (a local relation on the union-find path: no job)
+    val changed = gate(connectedComponents(labelEdges, "la", "lb")
+      .select(col("node").as("old_label"), col("label").as("new_label"))
+      .filter(col("old_label") =!= col("new_label")))
+    val changedRows = lab
       .join(changed.side, col("label") === col("old_label"))
       .select(col("node"), col("new_label").as("label"))
-    (changedRows.unionByName(p.newNodes),
-      changed.frame.select(col("old_label").as("label")))
+    // endpoints not in the label table enter with their merged label
+    // (a label-graph node that did not move keeps its own id). The
+    // anti-join runs against `touched` — batch-sized, already in hand —
+    // NOT the corpus label table: ends ∩ lab ≡ ends ∩ touched by
+    // touched's construction
+    val newNodes = ends.frame.join(touched.select("node"), Seq("node"), "left_anti")
+      .join(changed.side, col("node") === col("old_label"), "left")
+      .select(col("node"), coalesce(col("new_label"), col("node")).as("label"))
+    (changedRows.unionByName(newNodes), changed.frame.select(col("old_label").as("label")))
   }
 
   /** The DELETION-side complement of [[incrementalComponents]], SCOPED
@@ -1180,8 +1166,7 @@ object Dedup {
                                   priorLabels: DataFrame, idCol: String,
                                   minEstE6: Long = 250000L,
                                   materialize: Boolean = true): ScopedDelete = {
-    val lab0 = canonicalLabels(priorLabels)
-    val lab = if (materialize) lab0.localCheckpoint(true, DataSized) else lab0
+    val lab = canonicalPrior(priorLabels, materialize)
     val dead = tombstones.select(col(idCol).cast("long").as("node"))
       .filter(col("node").isNotNull)
     val slice = sigs.select(col(idCol), col("sig"))

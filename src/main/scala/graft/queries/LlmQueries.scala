@@ -2138,10 +2138,10 @@ object LlmQueries {
     // its delta edges (new-vs-old via incrementalCandidates against
     // the old band index + new-vs-new via minhashCandidates on the
     // batch alone), and incrementalComponents folds them in by
-    // relabeling ONLY touched components — two streamed label-table
-    // scans against broadcast batch-sized frames, label-level CC on a
-    // batch-sized graph, the corpus' own edges never recomputed. The
-    // oracle is the FULL-corpus transitive closure (x20's lab CTE):
+    // relabeling ONLY touched components — label-level CC on a
+    // batch-sized graph (on the driver for a batch this size), the
+    // untouched labels streamed through, the corpus' own edges never
+    // recomputed. The oracle is the FULL-corpus transitive closure (x20's lab CTE):
     // the hash match IS the proof that batch-incremental maintenance
     // equals recomputing clusters from scratch over the union corpus.
     "x88_incremental_clusters" -> ((s, d) => {

@@ -140,6 +140,32 @@ object StreamingQueries {
     }
   }
 
+  /** st29's and st30's batch verb over the old corpus' (doc_id % 10
+    * != 0) dedup state — labels, doc-level sigs and the
+    * signature-distinct index — built once per JVM (the q69–q74
+    * cachedDir discipline): a deployment reads that state from its
+    * tables, and the timed entry is the batch loop it names. The store
+    * is fresh per call (the stream mutates it; the cached fixture
+    * stays read-only).
+    */
+  private def dedupMaintenance(s: SparkSession, d: String,
+                               name: String): graft.llm.DedupMaintenance = {
+    import graft.llm.Dedup
+    val root = graft.core.Scratch.cachedDir(s"st29_st30_state_$d") { r =>
+      val old = Tables.splitForCpu(s, Tables.documents(s, d), "doc_id")
+        .filter(col("doc_id") % 10 =!= 0)
+      val sigs = Dedup.docSigs(old, "text", "doc_id").localCheckpoint(true)
+      sigs.write.parquet(s"$r/sigs")
+      Dedup.connectedComponents(Dedup.candidatesFromSigs(sigs, "doc_id",
+        assumeUnique = true), "doc_a", "doc_b").write.parquet(s"$r/labels")
+      Dedup.bandIndexDistinctFromSigs(sigs, "doc_id").write.parquet(s"$r/index")
+    }
+    val store = graft.core.Scratch.dir(name)
+    graft.llm.LabelStore.create(s, store, s.read.parquet(s"$root/labels"))
+    new graft.llm.DedupMaintenance(s, store, s.read.parquet(s"$root/sigs"),
+      s.read.parquet(s"$root/index"))
+  }
+
   /** st04/st12/st29: the new documents (doc_id % 10 = 0). */
   private def newDocsFixture(s: SparkSession, d: String): Seq[(Long, String)] = {
     import s.implicits._
@@ -1351,38 +1377,22 @@ object StreamingQueries {
     // of st04: st04 stops at per-batch new-vs-CORPUS pairs (batch
     // boundaries provably can't interact there), while real cluster
     // state must also see new-vs-EARLIER-BATCH duplicates. Each
-    // micro-batch here is (1) probed against the ACCUMULATING
-    // signature-distinct fingerprint index — corpus ∪ all prior
-    // batches — plus its own internal candidates, (2) folded into the
-    // label state with incrementalComponents (two streamed label-table
-    // scans + batch-sized label-level CC; the corpus' own edges are
-    // never recomputed), and (3) folds its fingerprints into the index
-    // (the DedupIndex.append posture, probe-then-fold). Batch
-    // boundaries cannot change the fixpoint: every fold's output IS
-    // full CC of the union edge set, so the label-minimum invariant
-    // holds inductively, and the final labels are checked against the
-    // FULL-corpus transitive closure — x88's oracle verbatim.
+    // micro-batch here is one add-only DedupMaintenance batch: (1)
+    // probed against the ACCUMULATING signature-distinct fingerprint
+    // index — corpus ∪ all prior batches — plus its own internal
+    // candidates, (2) folded into the LabelStore's labels with
+    // incrementalComponentsDelta (the touched components only; the
+    // corpus' own edges are never recomputed), and (3) its signatures
+    // folded into the index (the DedupIndex.append posture,
+    // probe-then-fold). Batch boundaries cannot change the fixpoint:
+    // every fold's output IS full CC of the union edge set, so the
+    // label-minimum invariant holds inductively, and the final labels
+    // are checked against the FULL-corpus transitive closure — x88's
+    // oracle verbatim.
     "st29_streaming_clusters" -> ((s, d) => {
       import s.implicits._
       implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import graft.llm.Dedup
-
-      // the old-corpus cluster state (labels + the signature-distinct
-      // fingerprint index) is the PERSISTED ARTIFACT this entry folds
-      // into — a deployment reads it from its table, so the fixture
-      // builds once per JVM (the q69–q74 cachedDir discipline) and
-      // the timed entry is the probe-and-fold loop it names
-      val root = graft.core.Scratch.cachedDir(s"st29_state_$d") { r =>
-        val old = Tables.splitForCpu(s, Tables.documents(s, d), "doc_id")
-          .filter(col("doc_id") % 10 =!= 0)
-        Dedup.connectedComponents(
-            Dedup.minhashCandidates(old, "text", "doc_id"), "doc_a", "doc_b")
-          .write.parquet(s"$r/labels")
-        Dedup.bandIndexDistinct(old, "text", "doc_id")
-          .write.parquet(s"$r/index")
-      }
-      var labels = s.read.parquet(s"$root/labels")
-      var index = s.read.parquet(s"$root/index")
+      val maint = dedupMaintenance(s, d, "st29_store")
       // the split puts same-signature duplicates in DIFFERENT
       // batches, so the accumulating index is load-bearing
       val (a, b) = newDocsFixture(s, d).partition(_._1 % 20 == 0)
@@ -1392,52 +1402,31 @@ object StreamingQueries {
           .writeStream
           .foreachBatch { (batch0: org.apache.spark.sql.DataFrame, _: Long) =>
             // ONE text→signature pass per batch: the probe, the
-            // internal candidates, and the distinct-index fold all
-            // consume the same checkpointed (doc_id, sig) frame via
-            // the FromSigs verbs — the round-16 sig-reuse rule; the
-            // old shape re-ran the minhash kernel (split+shingle+md5
-            // ×24) three times per batch, and at real batch sizes the
-            // kernel IS the batch's compute. Values are unchanged
-            // (bandIndex ≡ bandIndexFromSigs∘docSigs by definition).
-            val batchSigs = Dedup.docSigs(batch0, "text", "doc_id")
-              .localCheckpoint(true)
-            val delta = Dedup.incrementalCandidatesFromSigs(batchSigs,
-                index, "doc_id")
-              .select(col("new_id").as("doc_a"), col("old_id").as("doc_b"))
-              .unionByName(Dedup.candidatesFromSigs(batchSigs, "doc_id",
-                  materialize = false, assumeUnique = true)
-                .select("doc_a", "doc_b"))
-            // materialize = false: `labels` is the parquet fixture on
-            // the first batch and this loop's own checkpoint after —
-            // the fold must not re-write the label table a second time
-            labels = Dedup.incrementalComponents(labels, delta,
-              "doc_a", "doc_b", materialize = false).localCheckpoint(true)
-            // foldIndexDistinct, not a plain union (ADVICE r13): a
-            // recurring signature must not gain one rep row per batch
-            // over the stream's life — the fold keeps the existing
-            // representative (connectivity identical; the probe above
-            // already edge-connected this batch's copy to it)
-            index = Dedup.foldIndexDistinct(index,
-                Dedup.bandIndexDistinctFromSigs(batchSigs, "doc_id"), "doc_id")
-              .localCheckpoint(true)
-            ()
+            // internal candidates and both folds read the same
+            // checkpointed (doc_id, sig) frame (the round-16 sig-reuse
+            // rule: at real batch sizes the minhash kernel IS the
+            // batch's compute)
+            maint(Some(graft.llm.Dedup.docSigs(batch0, "text", "doc_id")
+              .localCheckpoint(true)), None)
           })(addEach(in, Seq(a, b)): _*)
 
-      labels.select(col("node").as("doc_id"), col("label").as("cluster_rep"))
+      graft.llm.LabelStore.read(s, maint.dir)
+        .select(col("node").as("doc_id"), col("label").as("cluster_rep"))
         .orderBy("doc_id")
     }),
 
     // Streaming ADD + DELETE cluster maintenance — st29 plus the
-    // deletion verb in its streaming posture: additions fold
-    // incrementally (incrementalComponents — O(batch), the corpus'
-    // edges never recomputed), while a DELETION batch triggers the
-    // SCOPED recompute (VERDICT r14 ask #1; incrementalComponents is
+    // deletion verb in its streaming posture, both arms of one
+    // DedupMaintenance batch: additions fold incrementally
+    // (incrementalComponentsDelta — O(batch), the corpus' edges never
+    // recomputed), while a DELETION batch triggers the SCOPED
+    // recompute (VERDICT r14 ask #1; the additions fold is
     // additions-only BY DESIGN: a deletion can split a component and
     // min-label state retains no edges): only components CONTAINING a
     // tombstone are re-derived from the retained signature state
-    // (Dedup.relabelScopedFromSigs — untouched labels pass through
-    // verbatim), and the signature-distinct index re-elects reps only
-    // in sig groups whose kept representative died
+    // (LabelStore.appendDelete over Dedup.scopedDelete — untouched
+    // labels pass through verbatim), and the signature-distinct index
+    // re-elects reps only in sig groups whose kept representative died
     // (Dedup.deleteFromIndexDistinct) — the round-14 form recomputed
     // BOTH over the full corpus per delete batch. The schedule
     // interleaves the verbs and includes DELETE-THEN-ADD ids (ADVICE
@@ -1451,30 +1440,11 @@ object StreamingQueries {
     "st30_streaming_add_delete" -> ((s, d) => {
       import s.implicits._
       implicit val ctx: org.apache.spark.sql.SQLContext = s.sqlContext
-      import graft.llm.Dedup
-
-      val root = graft.core.Scratch.cachedDir(s"st30_state_$d") { r =>
-        val old = Tables.splitForCpu(s, Tables.documents(s, d), "doc_id")
-          .filter(col("doc_id") % 10 =!= 0)
-        Dedup.connectedComponents(
-            Dedup.minhashCandidates(old, "text", "doc_id"), "doc_a", "doc_b")
-          .write.parquet(s"$r/labels")
-        val sigs = Dedup.docSigs(old, "text", "doc_id")
-          .localCheckpoint(true)
-        sigs.write.parquet(s"$r/sigs")
-        Dedup.bandIndexDistinctFromSigs(sigs, "doc_id")
-          .write.parquet(s"$r/index")
-      }
       // the label table lives in a LabelStore (VERDICT r15 ask #5):
-      // prior labels are its merge-on-read view, adds append only the
-      // changed rows, deletes append only the delta + drop set —
-      // O(changed)/O(touched) writes, the persisted-deployment
-      // posture. Fresh dir per invocation: the stream MUTATES the
-      // store on disk (the cached fixture stays read-only).
-      val store = graft.core.Scratch.dir("st30_store")
-      graft.llm.LabelStore.create(s, store, s.read.parquet(s"$root/labels"))
-      var sigs = s.read.parquet(s"$root/sigs")
-      var index = s.read.parquet(s"$root/index")
+      // adds append only the changed rows, deletes append only the
+      // delta + drop set — O(changed)/O(touched) writes, the
+      // persisted-deployment posture
+      val maint = dedupMaintenance(s, d, "st30_store")
       // three batches: add %20==0, delete %30==0, add %20==10 — op
       // rides the rows so the stream is ONE source, the CDC shape.
       // The delete batch includes %60==30 ids not yet added (the
@@ -1496,62 +1466,21 @@ object StreamingQueries {
           .writeStream
           .foreachBatch { (batch0: org.apache.spark.sql.DataFrame, _: Long) =>
             val batch = batch0.localCheckpoint(true)
-            val adds = batch.filter(col("op") === "add").select("doc_id", "text")
-            val dels = batch.filter(col("op") === "del").select("doc_id")
             // one aggregation decides both arms (the two isEmpty probes
             // were two jobs per batch on the hot maintenance path)
             val ops = batch.groupBy("op").count().collect()
               .map(r => r.getString(0)).toSet
-            if (ops("add")) {
-              // ONE text→signature pass per add batch (the st29
-              // sig-reuse rule): probe, internal candidates, the sigs
-              // sidecar fold and the distinct-index fold all read the
-              // same checkpointed (doc_id, sig) frame — the old shape
-              // ran the minhash kernel four times per batch
-              val addSigs = Dedup.docSigs(adds, "text", "doc_id")
-                .localCheckpoint(true)
-              val delta = Dedup.incrementalCandidatesFromSigs(addSigs,
-                  index, "doc_id")
-                .select(col("new_id").as("doc_a"), col("old_id").as("doc_b"))
-                .unionByName(Dedup.candidatesFromSigs(addSigs, "doc_id",
-                    materialize = false, assumeUnique = true)
-                  .select("doc_a", "doc_b"))
-              // fold against the store's view and write back ONLY the
-              // changed rows + dropped labels — the delta producer
-              // (incrementalComponentsDelta) emits them directly from
-              // its own remap, so the full post-fold table is never
-              // materialized or diffed; read() reconstructs it lazily
-              val (chg, dropped) = Dedup.incrementalComponentsDelta(
-                graft.llm.LabelStore.read(s, store), delta,
-                "doc_a", "doc_b", materialize = false)
-              graft.llm.LabelStore.appendDelta(s, store, chg, dropped)
-              sigs = sigs.unionByName(addSigs)
-                .localCheckpoint(true)
-              index = Dedup.foldIndexDistinct(index,
-                  Dedup.bandIndexDistinctFromSigs(addSigs, "doc_id"), "doc_id")
-                .localCheckpoint(true)
-            }
-            if (ops("del")) {
-              // the SCOPED deletion verb (VERDICT r14 ask #1), owned
-              // by the store since round 16: appendDelete recomputes
-              // only components containing a tombstone from the
-              // retained sigs (splits handled by construction; no
-              // text re-shingled) and appends the delta + drop set —
-              // O(touched) writes; untouched labels pass through at
-              // read time. The distinct index still re-elects reps
-              // only in sig groups whose kept representative died.
-              graft.llm.LabelStore.appendDelete(s, store, sigs, dels,
-                "doc_id")
-              index = Dedup.deleteFromIndexDistinct(index, sigs, dels,
-                  "doc_id")
-                .localCheckpoint(true)
-              sigs = sigs.join(dels, Seq("doc_id"), "left_anti")
-                .localCheckpoint(true)
-            }
-            ()
+            // ONE text→signature pass per add batch (the st29
+            // sig-reuse rule)
+            val adds = if (!ops("add")) None else Some(graft.llm.Dedup.docSigs(
+              batch.filter(col("op") === "add").select("doc_id", "text"),
+              "text", "doc_id").localCheckpoint(true))
+            val dels = if (!ops("del")) None
+              else Some(batch.filter(col("op") === "del").select("doc_id"))
+            maint(adds, dels)
           })(addEach(in, batches): _*)
 
-      graft.llm.LabelStore.read(s, store)
+      graft.llm.LabelStore.read(s, maint.dir)
         .select(col("node").as("doc_id"), col("label").as("cluster_rep"))
         .orderBy("doc_id")
     }),

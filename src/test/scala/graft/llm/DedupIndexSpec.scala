@@ -18,6 +18,11 @@ import graft.SparkTestSession
   */
 class DedupIndexSpec extends AnyFunSuite with SparkTestSession {
 
+  /** Jobs x92's scoped relabel may run on the driver arm: it runs 9, and
+    * 18 on the distributed scope.
+    */
+  private val X92DriverMaxJobs = 10
+
   // near-dup families: x and x+100 share all but one token
   private def mkDocs(ids: Seq[Long]): DataFrame = {
     val s = spark; import s.implicits._
@@ -139,5 +144,37 @@ class DedupIndexSpec extends AnyFunSuite with SparkTestSession {
       spark.sql("DROP TABLE IF EXISTS dedup_del_t")
       spark.sql("DROP TABLE IF EXISTS dedup_del_t_g1")
     }
+  }
+
+  test("relabelScoped in x92's shape: the driver arm answers in " +
+    s"at most $X92DriverMaxJobs jobs, the distributed scope in more") {
+    val s = spark
+    val dir = Files.createTempDirectory("dedup_idx_x92")
+    try {
+      // x92's shape: a bucketed index with its sigs sidecar, the persisted
+      // pre-deletion fixpoint on Parquet, every doc_id % 10 == 3 tombstoned
+      val docs = batchA.unionByName(batchB)
+      DedupIndex.create(docs, "text", "doc_id", "dedup_x92", s"$dir/fp", buckets = 8)
+      DedupIndex.relabel(s, "dedup_x92").write.parquet(s"$dir/labels")
+      val tombs = docs.filter(col("doc_id") % 10 === 3).select("doc_id")
+      def run(arm: Dedup.Arm): (Int, Map[Long, Long]) = {
+        var got = Map.empty[Long, Long]
+        val jobs = MaintenanceFixture.jobsOf(s)(Dedup.arm.withValue(arm) {
+          got = DedupIndex.relabelScoped(s, "dedup_x92", tombs,
+            s.read.parquet(s"$dir/labels"), materialize = false)
+            .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        })
+        (jobs, got)
+      }
+      val (driverJobs, driver) = run(Dedup.Arm.Driver)
+      val (distJobs, dist) = run(Dedup.Arm.Broadcast)
+      val want = Dedup.connectedComponents(Dedup.minhashCandidates(
+        docs.filter(col("doc_id") % 10 =!= 3), "text", "doc_id"), "doc_a", "doc_b")
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(want.nonEmpty)
+      assert(driver === want && dist === want)
+      assert(driverJobs <= X92DriverMaxJobs, s"the driver arm ran $driverJobs jobs")
+      assert(distJobs > X92DriverMaxJobs, s"the distributed scope ran $distJobs jobs")
+    } finally spark.sql("DROP TABLE IF EXISTS dedup_x92")
   }
 }

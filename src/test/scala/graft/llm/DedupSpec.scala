@@ -713,9 +713,12 @@ class DedupSpec extends AnyFunSuite with SparkTestSession {
     def same[T](got: Seq[T]): T = {
       assert(got.distinct.size === 1, s"the arms differ: $got"); got.head
     }
-    // ends, remap (incrementalComponents, incrementalComponentsDelta)
-    // and changed (incrementalComponentsDelta)
-    same(arms(rowsOf(Dedup.incrementalComponents(prior, edges, "a", "b"))))
+    // ends and changed (incrementalComponentsDelta, and
+    // incrementalComponents, its stitch): full CC over the union edge set
+    val inc = same(arms(rowsOf(Dedup.incrementalComponents(prior, edges, "a", "b"))))
+    assert(inc === rowsOf(Dedup.connectedComponents(
+      Dedup.candidatesFromSigs(sigs, "doc_id", assumeUnique = true).select("doc_a", "doc_b")
+        .unionByName(edges.toDF("doc_a", "doc_b")), "doc_a", "doc_b")))
     val dlt = same(arms {
       val (chg, dropped) = Dedup.incrementalComponentsDelta(prior, edges, "a", "b")
       (rowsOf(chg), dropped.collect().map(_.getLong(0)).toSet)

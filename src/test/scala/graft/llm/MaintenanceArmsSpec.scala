@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 
 /** The maintenance verbs' two arms agree: the same batches run through
-  * [[MaintenancePipeline]] on the driver arms (small batches take them)
+  * [[DedupMaintenance]] on the driver arms (small batches take them)
   * and on the distributed ones (the `Broadcast` [[Dedup.arm]]) must
   * leave the same store log, the same `LabelStore.read` and the same
   * band index after every
@@ -27,6 +27,11 @@ class MaintenanceArmsSpec extends AnyFunSuite with SparkTestSession {
     rows.toDF("doc_id", "sig")
   }
 
+  private def idsOf(ids: Seq[Long]): DataFrame = {
+    val s = spark; import s.implicits._
+    ids.toDF("doc_id")
+  }
+
   /** A batch: signatures to add, ids to tombstone, compact afterwards. */
   private case class Batch(adds: Seq[(Long, Seq[Option[Long]])], dels: Seq[Long],
                            compact: Boolean = false)
@@ -38,26 +43,28 @@ class MaintenanceArmsSpec extends AnyFunSuite with SparkTestSession {
     }.mkString(",")).toSeq.sorted
 
   /** The store's log and base rows, the read view and the index. */
-  private def state(p: MaintenancePipeline): Map[String, Seq[String]] = Map(
-    "base" -> rowsOf(spark.read.parquet(s"${p.store}/base")),
-    "log" -> (if (LabelStore.seqs(spark, p.store).isEmpty) Nil
-              else rowsOf(spark.read.parquet(s"${p.store}/delta"))),
-    "read" -> rowsOf(LabelStore.read(spark, p.store)),
+  private def state(p: DedupMaintenance): Map[String, Seq[String]] = Map(
+    "base" -> rowsOf(spark.read.parquet(s"${p.dir}/base")),
+    "log" -> (if (LabelStore.seqs(spark, p.dir).isEmpty) Nil
+              else rowsOf(spark.read.parquet(s"${p.dir}/delta"))),
+    "read" -> rowsOf(LabelStore.read(spark, p.dir)),
     "index" -> rowsOf(p.index.select("doc_id", "band", "bkey")),
     "sigs" -> rowsOf(p.sigs.select("doc_id")))
 
   private def run(name: String, base: Seq[(Long, Seq[Option[Long]])],
                   batches: Seq[Batch]): Unit = {
-    val driver = new MaintenancePipeline(spark, graft.core.Scratch.dir(s"$name-driver"))
-    val dist = new MaintenancePipeline(spark, graft.core.Scratch.dir(s"$name-dist"))
-    driver.build(sigsOf(base))
-    Dedup.arm.withValue(Dedup.Arm.Broadcast)(dist.build(sigsOf(base)))
+    val driver = MaintenanceFixture.build(spark,
+      graft.core.Scratch.dir(s"$name-driver"), sigsOf(base))
+    val dist = Dedup.arm.withValue(Dedup.Arm.Broadcast)(MaintenanceFixture.build(spark,
+      graft.core.Scratch.dir(s"$name-dist"), sigsOf(base)))
     var live = base.toMap
     val all = (base ++ batches.flatMap(_.adds)).toMap
     batches.zipWithIndex.foreach { case (b, i) =>
       val add = if (b.adds.isEmpty) None else Some(sigsOf(b.adds).localCheckpoint(true))
-      driver(add, b.dels, b.compact)
-      Dedup.arm.withValue(Dedup.Arm.Broadcast)(dist(add, b.dels, b.compact))
+      val dels = if (b.dels.isEmpty) None else Some(idsOf(b.dels))
+      def batch(m: DedupMaintenance): Unit = { m(add, dels); if (b.compact) m.compact() }
+      batch(driver)
+      Dedup.arm.withValue(Dedup.Arm.Broadcast)(batch(dist))
       live = live ++ b.adds -- b.dels
       val (d, s) = (state(driver), state(dist))
       d.keys.foreach(k => assert(d(k) === s(k), s"$name batch $i: $k differs between the arms"))

@@ -4,8 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.SparkTestSession
 
-/** The per-batch job count of incremental dedup maintenance in
-  * perfbench's `dedup_maintain` shape: a corpus with exact and near
+/** The per-batch job count of incremental dedup maintenance — the
+  * production [[DedupMaintenance]] verb — in perfbench's
+  * `dedup_maintain` shape: a corpus with exact and near
   * duplicates on Parquet, batches that add docs read from it by id,
   * delete live ids and ids a later batch adds, and compact the store.
   * A steady batch is small, so the maintenance verbs take their driver
@@ -34,15 +35,16 @@ class MaintenanceJobsSpec extends AnyFunSuite with SparkTestSession {
     texts.toSeq.zipWithIndex.map { case (t, i) => (i + 1L, t) }.toDF("doc_id", "text")
       .write.parquet(s"$root/corpus")
     val corpus = s.read.parquet(s"$root/corpus")
-    val p = new MaintenancePipeline(s, root)
-    p.build(Dedup.docSigs(corpus.filter(col("doc_id") <= 200L), "text", "doc_id"))
+    val m = MaintenanceFixture.build(s, root,
+      Dedup.docSigs(corpus.filter(col("doc_id") <= 200L), "text", "doc_id"))
     def batch(adds: Range, dels: Seq[Long]): Unit = {
       val add = Dedup.docSigs(corpus.filter(col("doc_id").isin(adds.map(_.toLong): _*)),
         "text", "doc_id").localCheckpoint(true)
-      p.apply(Some(add), dels, compact = true)
+      m(Some(add), Some(dels.toDF("doc_id")))
+      m.compact()
     }
     batch(201 to 240, Seq(3L, 17L, 40L, 41L, 99L, 250L, 260L))
-    val jobs = MaintenancePipeline.jobsOf(s)(
+    val jobs = MaintenanceFixture.jobsOf(s)(
       batch(241 to 280, Seq(5L, 18L, 120L, 203L, 210L, 290L, 295L)))
     // and the batches maintained the clustering a from-scratch run gives
     // 250 and 260 were tombstoned before the second batch added them
@@ -52,7 +54,7 @@ class MaintenanceJobsSpec extends AnyFunSuite with SparkTestSession {
       corpus.join(live, Seq("doc_id")), "text", "doc_id"), "doc_a", "doc_b")
     def labels(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(labels(LabelStore.read(s, p.store)) === labels(want))
+    assert(labels(LabelStore.read(s, m.dir)) === labels(want))
     assert(jobs <= SteadyBatchMaxJobs, s"the steady batch ran $jobs jobs")
   }
 }

@@ -112,6 +112,28 @@ class SpikeDetectorSpec extends AnyFunSuite with SparkTestSession {
     assert(intended === Set((65, 257L), (66, 999L)))
   }
 
+  private def fused(p: SpikeParams, rows: (Long, Long, Int, Long, Int, Long)*) =
+    SpikeDetector.detectFused(histDf(rows: _*), cur, prev, p)
+      .collect().map(r => (r.getInt(0), r.getInt(2), r.getLong(3))).toSet
+
+  test("detectFused: a new key's baseline is the limit, so it alerts only " +
+    "past Q·limit and carries the limit") {
+    // 7400 ≤ 3·2500 → silent; 7600 > 7500 → ip alert with baseline 2500
+    assert(fused(P, (1000L, 1L, 68, 7400L, 11, 174327454L)).isEmpty)
+    assert(fused(P, (1000L, 1L, 68, 7600L, 11, 174327454L)) ===
+      Set((68, 2500, 174327454L)))
+  }
+
+  test("detectFused: the per-IP clamp needs prev > limit, the per-net " +
+    "clamp the ratio alone") {
+    // Q = 0.5: prev 2000 / cur 1200 > Q, so both branches' ratio clamps
+    // hold; per IP prev ≤ 2500 keeps the baseline 2000 (1200/2000 > Q
+    // alerts), per net the baseline clamps to 3500 (1200/3500 < Q)
+    val q = P.copy(quotientAmplification = 0.5)
+    assert(fused(q, (1000L, 1L, 65, 1200L, 11, 42L), (100L, 1L, 65, 2000L, 11, 42L)) ===
+      Set((65, 2000, 42L)))
+  }
+
   test("materialize=true (cache path) returns identical rows") {
     val rows = Seq(
       (1000L, 1L, 65, 961L, 11, 174327451L),

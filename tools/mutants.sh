@@ -31,9 +31,19 @@ MUTANTS=(
   "src/main/scala/graft/llm/Dedup.scala|.map(_.map(_._1).distinct).filter(_.length > 1).flatten.toSeq|.map(_.map(_._1).distinct).filter(_.length > 2).flatten.toSeq|graft.llm.MaintenanceArmsSpec graft.llm.DedupSpec"
   # incrementalComponentsDelta's driver arm gives a new node its own id
   # instead of its merged component's
-  "src/main/scala/graft/llm/Dedup.scala|val newNodes = ends.filterNot(labelOf.contains).map(n => (n, root(n)))|val newNodes = ends.filterNot(labelOf.contains).map(n => (n, n))|graft.llm.MaintenanceArmsSpec"
+  "src/main/scala/graft/llm/Dedup.scala|val newNodes = ends.filterNot(labelOf.contains).map(n => (n, root(n)))|val newNodes = ends.filterNot(labelOf.contains).map(n => (n, n))|graft.llm.MaintenanceArmsSpec graft.llm.DedupSpec"
+  # relabelScopedFromSigs (x92's DedupIndex.relabelScoped) scopes on the
+  # distributed arm: same labels, more jobs
+  "src/main/scala/graft/llm/Dedup.scala|    scopedDelete(sigs, tombstones, priorLabels, idCol, minEstE6, materialize).labels|    arm.withValue(Arm.Broadcast)(scopedDelete(sigs, tombstones, priorLabels, idCol, minEstE6, materialize)).labels|graft.llm.DedupIndexSpec"
   # LabelStore.read lets a batch's drops remove its own delta rows
   "src/main/scala/graft/llm/LabelStore.scala|.join(drops, col(\"label\") === col(\"d_label\") && col(\"d_seq\") > col(\"seq\"),|.join(drops, col(\"label\") === col(\"d_label\") && col(\"d_seq\") >= col(\"seq\"),|graft.llm.LabelStoreSpec graft.llm.MaintenanceArmsSpec"
+  # detectFused's per-IP clamp ignores the limit (clamps on the ratio
+  # alone, as the per-net clamp does)
+  "src/main/scala/graft/reference/SpikeDetector.scala|        if (requirePrevAboveLimit) ratioClamp && col(\"prev_sum_val\") > limit|        if (requirePrevAboveLimit) ratioClamp|graft.reference.SpikeDetectorSpec"
+  # detectFused fills a new key's baseline with 0 instead of the limit
+  "src/main/scala/graft/reference/SpikeDetector.scala|        .na.fill(limit, Seq(\"prev_sum_val2\"))|        .na.fill(0, Seq(\"prev_sum_val2\"))|graft.reference.SpikeDetectorSpec"
+  # AlertDedup keeps a key tracked at exactly the TTL
+  "src/main/scala/graft/reference/AlertDedup.scala|    seen.filterInPlace { case (_, stamp) => now - stamp < ttlSec }|    seen.filterInPlace { case (_, stamp) => now - stamp <= ttlSec }|graft.app.AlertLayerSpec graft.reference.AlertDedupProperties"
   # GraftSession.withConf never restores a key
   "src/main/scala/graft/core/GraftSession.scala|} finally prev.reverse.foreach {|} finally prev.take(0).foreach {|graft.core.GraftSessionSpec graft.operators.RuntimeFilterSpec"
 )
