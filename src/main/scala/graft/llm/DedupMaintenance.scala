@@ -56,3 +56,28 @@ final class DedupMaintenance(spark: SparkSession, val dir: String,
   /** Fold the store's log into its base ([[LabelStore.compact]]). */
   def compact(): Unit = LabelStore.compact(spark, dir)
 }
+
+object DedupMaintenance {
+
+  /** Write the base state of a corpus' (doc_id, sig) `sigs` under
+    * `root`: the sigs, their signature-distinct index and their
+    * from-scratch clustering, each on Parquet.
+    */
+  def writeState(root: String, sigs: DataFrame): Unit = {
+    val s = sigs.localCheckpoint(true)
+    s.write.parquet(s"$root/sigs")
+    Dedup.connectedComponents(Dedup.candidatesFromSigs(s, "doc_id",
+      assumeUnique = true), "doc_a", "doc_b").write.parquet(s"$root/labels")
+    Dedup.bandIndexDistinctFromSigs(s, "doc_id").write.parquet(s"$root/index")
+  }
+
+  /** A maintenance over the state [[writeState]] wrote at `root`, with
+    * its store created at `storeDir` from the state's labels. The
+    * batches mutate the store only: the state stays read-only.
+    */
+  def create(spark: SparkSession, root: String, storeDir: String): DedupMaintenance = {
+    LabelStore.create(spark, storeDir, spark.read.parquet(s"$root/labels"))
+    new DedupMaintenance(spark, storeDir, spark.read.parquet(s"$root/sigs"),
+      spark.read.parquet(s"$root/index"))
+  }
+}

@@ -150,20 +150,12 @@ object StreamingQueries {
     */
   private def dedupMaintenance(s: SparkSession, d: String,
                                name: String): graft.llm.DedupMaintenance = {
-    import graft.llm.Dedup
     val root = graft.core.Scratch.cachedDir(s"st29_st30_state_$d") { r =>
-      val old = Tables.splitForCpu(s, Tables.documents(s, d), "doc_id")
-        .filter(col("doc_id") % 10 =!= 0)
-      val sigs = Dedup.docSigs(old, "text", "doc_id").localCheckpoint(true)
-      sigs.write.parquet(s"$r/sigs")
-      Dedup.connectedComponents(Dedup.candidatesFromSigs(sigs, "doc_id",
-        assumeUnique = true), "doc_a", "doc_b").write.parquet(s"$r/labels")
-      Dedup.bandIndexDistinctFromSigs(sigs, "doc_id").write.parquet(s"$r/index")
+      graft.llm.DedupMaintenance.writeState(r, graft.llm.Dedup.docSigs(
+        Tables.splitForCpu(s, Tables.documents(s, d), "doc_id")
+          .filter(col("doc_id") % 10 =!= 0), "text", "doc_id"))
     }
-    val store = graft.core.Scratch.dir(name)
-    graft.llm.LabelStore.create(s, store, s.read.parquet(s"$root/labels"))
-    new graft.llm.DedupMaintenance(s, store, s.read.parquet(s"$root/sigs"),
-      s.read.parquet(s"$root/index"))
+    graft.llm.DedupMaintenance.create(s, root, graft.core.Scratch.dir(name))
   }
 
   /** st04/st12/st29: the new documents (doc_id % 10 = 0). */

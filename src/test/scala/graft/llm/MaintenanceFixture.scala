@@ -7,17 +7,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object MaintenanceFixture {
 
-  /** The base build under `root`: signatures and their index on
-    * Parquet, the store created from their from-scratch clustering.
+  /** The base build under `root`: the state of `baseSigs`
+    * ([[DedupMaintenance.writeState]]) and a maintenance over it.
     */
   def build(spark: SparkSession, root: String, baseSigs: DataFrame): DedupMaintenance = {
-    val s = baseSigs.localCheckpoint(true)
-    s.write.parquet(s"$root/sigs")
-    Dedup.bandIndexDistinctFromSigs(s, "doc_id").write.parquet(s"$root/index")
-    LabelStore.create(spark, s"$root/store", Dedup.connectedComponents(
-      Dedup.candidatesFromSigs(s, "doc_id", assumeUnique = true), "doc_a", "doc_b"))
-    new DedupMaintenance(spark, s"$root/store", spark.read.parquet(s"$root/sigs"),
-      spark.read.parquet(s"$root/index"))
+    DedupMaintenance.writeState(s"$root/state", baseSigs)
+    DedupMaintenance.create(spark, s"$root/state", s"$root/store")
   }
 
   /** Jobs `body` runs, counted by job group. Listener delivery is

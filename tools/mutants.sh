@@ -12,7 +12,7 @@
 #             or /tmp/graft-mutants); it is emptied first and must lie
 #             outside the repository
 # sbt runs with the caller's environment (SBT_OPTS, COURSIER_MODE, ...).
-# Runtime: one test run per mutant plus the baseline, ~11 min on 4
+# Runtime: one test run per mutant plus the baseline, ~20 min on 4
 # cores. Not part of tools/gate.sh.
 set -uo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
